@@ -57,27 +57,17 @@ def _persons(spark, sf_dir):
 
 
 def _candidates(spark, sf_dir):
-    from snorkel_spark.operators.candidates import extract_candidates
+    from snorkel_spark.plans.pipeline import build_candidates
 
-    def build():
-        sents = _sentences(spark, sf_dir)
-        p = _persons(spark, sf_dir)
-        return extract_candidates(p, p, sentences=sents)
-
-    return _memo(spark, sf_dir, "candidates", build)
+    return _memo(spark, sf_dir, "candidates",
+                 lambda: build_candidates(spark, _sentences(spark, sf_dir)))
 
 
 def _fixture_lfs(spark):
     from snorkel_spark.functions.labeling import make_fixture_lfs
     from snorkel_spark.sources import fixtures as FX
 
-    ks = FX.known_spouses(spark).collect()
-    pairs = {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}")
-        for r in ks
-    }
-    return make_fixture_lfs(pairs)
+    return make_fixture_lfs(FX.known_spouse_names(spark))
 
 
 def _label_matrix(spark, sf_dir):
@@ -89,32 +79,11 @@ def _label_matrix(spark, sf_dir):
 
 def _mv_triples(spark, sf_dir):
     from snorkel_spark.labelmodel.model import majority_vote
-    from snorkel_spark.operators.canonicalize import canonical_triples
-    from snorkel_spark.operators.linker import link_text_map
-    from snorkel_spark.sources import fixtures as FX
+    from snorkel_spark.plans.pipeline import build_triples
 
-    cands = _candidates(spark, sf_dir).cache()
-    L = _label_matrix_from(spark, cands)
-    mv = majority_vote(L)
-    # link by distinct text (scores are text-pure) → broadcast map, no
-    # shuffle of the candidate table
-    tmap = link_text_map(cands.selectExpr("subj_text as text")
-                         .unionByName(cands.selectExpr("obj_text as text")),
-                         FX.alias_dict(spark))
-    subj_links = cands.join(
-        F.broadcast(tmap.withColumnRenamed("text", "subj_text")), "subj_text"
-    ).select("candidate_id", "entity_id")
-    obj_links = cands.join(
-        F.broadcast(tmap.withColumnRenamed("text", "obj_text")), "obj_text"
-    ).select("candidate_id", "entity_id")
-    t = canonical_triples(cands, mv, subj_links, obj_links, threshold=0.5)
+    mv = majority_vote(_label_matrix(spark, sf_dir))
+    t = build_triples(spark, _candidates(spark, sf_dir), mv, threshold=0.5)
     return t.select("subj", "pred", "obj", "n_evidence", F.round("prob", 4).alias("prob"))
-
-
-def _label_matrix_from(spark, cands):
-    from snorkel_spark.functions.labeling import apply_lfs
-
-    return apply_lfs(cands, _fixture_lfs(spark))
 
 
 # ---------------------------------------------------------------- contract
@@ -414,7 +383,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         cands = _candidates(spark, sf).cache()
         n = cands.count()
-        s = lf_stats(_label_matrix_from(spark, cands), n)
+        s = lf_stats(_label_matrix(spark, sf), n)
         return s.select(
             "lf_id", "n_labeled",
             F.round("coverage", 6).alias("coverage"),
@@ -427,7 +396,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         cands = _candidates(spark, sf).cache()
         n = cands.count()
-        c = candidate_coverage(_label_matrix_from(spark, cands), n)
+        c = candidate_coverage(_label_matrix(spark, sf), n)
         return c.select(
             "n_labeled", F.round("frac_labeled", 6).alias("frac_labeled"),
             "n_overlapped", "n_conflicted",
@@ -437,7 +406,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from snorkel_spark.functions.analytics import filter_unlabeled
 
         cands = _candidates(spark, sf).cache()
-        return filter_unlabeled(cands, _label_matrix_from(spark, cands)).select("candidate_id")
+        return filter_unlabeled(cands, _label_matrix(spark, sf)).select("candidate_id")
 
     def g5_majority_vote(spark, sf):
         from snorkel_spark.labelmodel.model import majority_vote
@@ -594,25 +563,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def g1_triples_labelmodel(spark, sf):
         from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import LabelModel
-        from snorkel_spark.operators.canonicalize import canonical_triples
-        from snorkel_spark.operators.linker import link_text_map
-        from snorkel_spark.sources import fixtures as FX
+        from snorkel_spark.plans.pipeline import build_triples
 
-        cands = _candidates(spark, sf).cache()
-        L = _label_matrix_from(spark, cands).cache()
+        L = _label_matrix(spark, sf)
         C, n = compute_O_selfjoin(L, m=7)
         lm = LabelModel(m=7).fit(C, n)
-        marg = lm.marginals(spark, L)
-        tmap = link_text_map(cands.selectExpr("subj_text as text")
-                             .unionByName(cands.selectExpr("obj_text as text")),
-                             FX.alias_dict(spark))
-        subj = cands.join(
-            F.broadcast(tmap.withColumnRenamed("text", "subj_text")), "subj_text"
-        ).select("candidate_id", "entity_id")
-        obj = cands.join(
-            F.broadcast(tmap.withColumnRenamed("text", "obj_text")), "obj_text"
-        ).select("candidate_id", "entity_id")
-        t = canonical_triples(cands, marg, subj, obj, threshold=0.5, n_salts=8)
+        t = build_triples(spark, _candidates(spark, sf), lm.marginals(spark, L),
+                          threshold=0.5, n_salts=8)
         return t.select("subj", "pred", "obj", "n_evidence")
 
     # ---- training-data-pipeline operators --------------------------

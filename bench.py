@@ -6,20 +6,8 @@ Prints ONE JSON line:
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local cores (default 32)
-  SPARK_GRAFT_REPLICATE  input replication factor (default 1) — the
-      scaling harness (tools/bench_scaling.py) raises this so the
-      N-vs-4N comparison measures compute, not fixed session overhead.
-  SPARK_GRAFT_SNAPSHOT  'parquet' (default: every stage snapshotted to
-      tmpfs parquet — the pipeline's real catalog shape) or 'none'
-      (stages materialize via cached in-memory columnar batches).
-      Measured single-box fact behind 'none': the compute chain scales
-      2→8 cores at ~0.96 marginal efficiency while the parquet write
-      scales at ~0.53 — a single shared DRAM bus + one JVM's allocation
-      pressure serialize the encode, whereas a real cluster writes
-      snapshots to distributed storage whose bandwidth grows with
-      nodes.  The scaling harness uses 'none' for the N→4N pair and
-      publishes parquet-mode walls alongside.
+  SPARK_GRAFT_CPUS     local cores (default: the cores this process may
+      run on)
   SPARK_GRAFT_PARSER  'whitespace' or 'full' — selects the parse path
       (split-on-space vs real sentence splitting + punctuation
       tokenization), mirroring run_kg_pipeline's knob.  UNSET (the
@@ -53,111 +41,59 @@ def _snap_root() -> str:
     return tempfile.gettempdir()
 
 
-def replicated_documents(spark, sf_dir: str, factor: int):
-    """Deterministically replicate the corpus: replica r of doc d gets
-    doc_id d + r·1e6 (keeps every synthesis modulus property, spreads
-    entity ids so no artificial skew)."""
-    from pyspark.sql import functions as F
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # the raw parquet is one tiny file → 1 input partition; spread the
-    # rows BEFORE the explode so synthesis/parse parallelize (on a real
-    # corpus the file count provides this for free)
-    docs = docs.repartition(cpus * 4)
-    if factor <= 1:
-        return docs
-    return (
-        docs.withColumn("_r", F.explode(F.expr(f"sequence(0, {factor - 1})")))
-        .withColumn("doc_id", F.col("doc_id") + F.col("_r") * 1_000_000)
-        .drop("_r")
-    )
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
-def run_pipeline(
-    spark,
-    sf_dir: str,
-    repl: int,
-    snapshot_mode: str = "parquet",
-    parser: str = "whitespace",
-) -> tuple[float, dict]:
+def run_pipeline(spark, sf_dir: str, parser: str = "whitespace") -> tuple[float, dict]:
     """One timed end-to-end pipeline pass on an EXISTING session.
-    Returns (total_sec, per-stage dict).  Callable repeatedly in one
-    JVM (the scaling harness does: many interleaved-size replicates
-    per session, so the ~20 s session startup never lands in a wall);
-    snapshot-free runs unpersist their caches before returning so
-    replicates stay independent."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    Returns (total_sec, per-stage dict).  Every stage is snapshotted to
+    parquet (the pipeline's real catalog shape), so each timed stage
+    reads a materialized input, not the raw expression tree."""
+    import shutil
 
     from pyspark.sql import functions as F
 
     from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
     from snorkel_spark.labelmodel.encoding import compute_O_arrow, compute_O_selfjoin
     from snorkel_spark.labelmodel.model import LabelModel
-    from snorkel_spark.operators.candidates import extract_candidates
-    from snorkel_spark.operators.canonicalize import canonical_triples
-    from snorkel_spark.operators.linker import link_text_map
-    from snorkel_spark.operators.matchers import person_matcher
-    from snorkel_spark.operators.ngrams import ngram_mentions
     from snorkel_spark.operators.parser import parse_sentences, parse_sentences_full
-
+    from snorkel_spark.plans.pipeline import build_candidates, build_triples
     from snorkel_spark.sources import fixtures as FX
+    from snorkel_spark.sources.interleaved import synthesize_from_docs
 
+    cpus = _cpus()
     q: dict[str, float] = {}
+    _tmp_dirs: list[str] = []
+
+    def materialize(df, prefix: str):
+        d = tempfile.mkdtemp(prefix=prefix, dir=_snap_root())
+        _tmp_dirs.append(d)
+        df.write.mode("overwrite").parquet(d)
+        return spark.read.parquet(d)
+
     t_all0 = time.time()
 
     # ---- synthesize + parse ----------------------------------------
     t0 = time.time()
-    import shutil
-    import tempfile
-
-    from snorkel_spark.sources.interleaved import synthesize_from_docs
-
-    _tmp_dirs: list[str] = []
-    _persisted: list = []
-
-    def materialize(df, prefix: str):
-        """Stage boundary: parquet snapshot (catalog shape) or cached
-        in-memory columnar (snapshot-free scaling mode) — either way
-        downstream plans consume a materialized input, not the raw
-        expression tree."""
-        if snapshot_mode == "parquet":
-            d = tempfile.mkdtemp(prefix=prefix, dir=_snap_root())
-            _tmp_dirs.append(d)
-            df.write.mode("overwrite").parquet(d)
-            return spark.read.parquet(d)
-        df = df.persist()
-        _persisted.append(df)
-        return df
-
     parse_fn = parse_sentences if parser == "whitespace" else parse_sentences_full
-    raw = synthesize_from_docs(replicated_documents(spark, sf_dir, repl))
-    sents = materialize(parse_fn(raw), "bench_sents_")
+    # the raw parquet is one tiny file → 1 input partition; spread the
+    # rows BEFORE the explode so synthesis/parse parallelize (on a real
+    # corpus the file count provides this for free)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus * 4)
+    sents = materialize(parse_fn(synthesize_from_docs(docs)), "bench_sents_")
     n_sentences = sents.count()
     q["sentences_sec"] = round(time.time() - t0, 3)
 
     # ---- candidates --------------------------------------------------
     t0 = time.time()
-    pm = person_matcher(FX.person_full_names(spark))
-    # dictionary-length pruning: the matcher is the mentions' only
-    # consumer here, so skip generating window sizes it provably rejects
-    n_vals = [n for n in pm.mention_lengths() if 1 <= n <= 2] or None
-    mentions = ngram_mentions(sents, n_max=2, n_values=n_vals)
-    persons = pm.apply(mentions)
-    cands = materialize(
-        extract_candidates(persons, persons, sentences=sents), "bench_cands_"
-    )
+    cands = materialize(build_candidates(spark, sents, n_max=2), "bench_cands_")
     n_cands = cands.count()
     q["candidates_sec"] = round(time.time() - t0, 3)
 
     # ---- label matrix -------------------------------------------------
     t0 = time.time()
-    ks = FX.known_spouses(spark).collect()
-    pairs = {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}") for r in ks
-    }
-    lfs = make_fixture_lfs(pairs)
+    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
     L = materialize(apply_lfs(cands, lfs), "bench_L_")
     n_labels = L.count()
     q["label_matrix_sec"] = round(time.time() - t0, 3)
@@ -167,7 +103,7 @@ def run_pipeline(
     C, n = compute_O_selfjoin(L, m=len(lfs))
     q["O_selfjoin_sec"] = round(time.time() - t0, 3)
     t0 = time.time()
-    C2, n2 = compute_O_arrow(L, m=len(lfs))
+    compute_O_arrow(L, m=len(lfs))
     q["O_treeagg_sec"] = round(time.time() - t0, 3)
     t0 = time.time()
     lm = LabelModel(m=len(lfs)).fit(C, n)
@@ -176,15 +112,7 @@ def run_pipeline(
     # ---- marginals + link + triples -------------------------------------
     t0 = time.time()
     marg = lm.marginals(spark, L)
-    tmap = link_text_map(cands.selectExpr("subj_text as text")
-                         .unionByName(cands.selectExpr("obj_text as text")),
-                         FX.alias_dict(spark))
-    subj = cands.join(F.broadcast(tmap.withColumnRenamed("text", "subj_text")),
-                      "subj_text").select("candidate_id", "entity_id")
-    obj = cands.join(F.broadcast(tmap.withColumnRenamed("text", "obj_text")),
-                     "obj_text").select("candidate_id", "entity_id")
-    triples = canonical_triples(cands, marg, subj, obj, threshold=0.5, n_salts=16).persist()
-    _persisted.append(triples)
+    triples = build_triples(spark, cands, marg, threshold=0.5, n_salts=16).persist()
     n_triples = triples.count()
     n_evidence = triples.agg(F.sum("n_evidence")).collect()[0][0] or 0
     q["triples_sec"] = round(time.time() - t0, 3)
@@ -200,11 +128,8 @@ def run_pipeline(
     q["candidates_per_sec"] = round(n_cands / total, 2)
     q["sentences_per_sec"] = round(n_sentences / total, 2)
     q["cpus"] = cpus
-    q["replicate"] = repl
-    q["snapshot_mode"] = snapshot_mode
     q["parser"] = parser
-    for df in _persisted:
-        df.unpersist()
+    triples.unpersist()
     for d in _tmp_dirs:
         shutil.rmtree(d, ignore_errors=True)
     return total, q
@@ -212,9 +137,7 @@ def run_pipeline(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    repl = int(os.environ.get("SPARK_GRAFT_REPLICATE", "1"))
-    snapshot_mode = os.environ.get("SPARK_GRAFT_SNAPSHOT", "parquet")
+    cpus = _cpus()
     parser_env = os.environ.get("SPARK_GRAFT_PARSER")  # unset → both
     parser = parser_env or "whitespace"
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -228,7 +151,7 @@ def main() -> None:
     # warmup (JVM + Arrow init)
     spark.range(1000).select(F.sum("id")).collect()
 
-    total, q = run_pipeline(spark, sf_dir, repl, snapshot_mode, parser)
+    total, q = run_pipeline(spark, sf_dir, parser)
 
     if parser_env is None:
         # second variant: the full splitter/tokenizer chain in its OWN

@@ -101,6 +101,58 @@ class PipelineContext:
         return out, snap, False
 
 
+# Stage builders: each link of the chain, composed once.  Every caller
+# materializes the result its own way (run_stage, a parquet snapshot, a
+# cache).  Operators are imported in the function body, so they are
+# looked up on their modules at call time and a patched attribute is
+# picked up.
+def build_candidates(spark: SparkSession, sentences: DataFrame, n_max: int = 2) -> DataFrame:
+    """sentences → n-gram mentions → person matcher → spouse candidates."""
+    from ..operators.candidates import extract_candidates
+    from ..operators.matchers import person_matcher
+    from ..operators.ngrams import ngram_mentions
+    from ..sources import fixtures as FX
+
+    pm = person_matcher(FX.person_full_names(spark))
+    # dictionary-length pruning: the matcher is the only consumer of
+    # the mention space, so skip generating window lengths it provably
+    # rejects (results identical, explode halved)
+    n_vals = [n for n in pm.mention_lengths() if 1 <= n <= n_max] or None
+    mentions = ngram_mentions(sentences, n_max=n_max, n_values=n_vals)
+    persons = pm.apply(mentions)
+    # the same object on both sides takes the self-pairing fast path
+    return extract_candidates(persons, persons, sentences=sentences)
+
+
+def build_triples(
+    spark: SparkSession,
+    cands: DataFrame,
+    marg: DataFrame,
+    threshold: float = 0.5,
+    n_salts: int = 0,
+) -> DataFrame:
+    """candidates + marginals → entity link → canonical triples."""
+    from ..operators.canonicalize import canonical_triples
+    from ..operators.linker import link_text_map
+    from ..sources import fixtures as FX
+
+    # link by distinct text (scores are text-pure) → broadcast map, no
+    # shuffle of the candidate table
+    tmap = link_text_map(
+        cands.selectExpr("subj_text as text").unionByName(
+            cands.selectExpr("obj_text as text")),
+        FX.alias_dict(spark))
+    subj_links = cands.join(
+        F.broadcast(tmap.withColumnRenamed("text", "subj_text")), "subj_text"
+    ).select("candidate_id", "entity_id")
+    obj_links = cands.join(
+        F.broadcast(tmap.withColumnRenamed("text", "obj_text")), "obj_text"
+    ).select("candidate_id", "entity_id")
+    return canonical_triples(
+        cands, marg, subj_links, obj_links, threshold=threshold, n_salts=n_salts
+    )
+
+
 def run_kg_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -128,11 +180,6 @@ def run_kg_pipeline(
     from ..functions.labeling import apply_lfs, make_fixture_lfs
     from ..labelmodel.encoding import compute_O_arrow, compute_O_selfjoin
     from ..labelmodel.model import LabelModel, majority_vote
-    from ..operators.candidates import extract_candidates
-    from ..operators.canonicalize import canonical_triples
-    from ..operators.linker import link_text_map
-    from ..operators.matchers import person_matcher
-    from ..operators.ngrams import ngram_mentions
     from ..operators.parser import parse_sentences, parse_sentences_full
     from ..sources import fixtures as FX
     from ..sources.interleaved import synthesize_raw_documents
@@ -144,47 +191,34 @@ def run_kg_pipeline(
     ctx = PipelineContext(spark, catalog, config={
         "sentences": {"sf_dir": sf_dir, "parser": parser},
         "candidates": {"n_max": n_max},
-        "label_matrix": {"lfs": "fixture_v1"},
         "marginals": {"use_label_model": use_label_model, "o_path": o_path},
         "triples": {"threshold": threshold, "n_salts": n_salts},
     })
     info: dict = {"skipped": []}
 
+    def stage(name, inputs, build, **kw):
+        df, snap, skipped = ctx.run_stage(name, inputs, build, **kw)
+        if skipped:
+            info["skipped"].append(name)
+        return df, snap
+
     raw = synthesize_raw_documents(spark, sf_dir)
-    sents, s1, sk = ctx.run_stage("sentences", {}, lambda: parse_fn(raw))
-    if sk:
-        info["skipped"].append("sentences")
+    sents, s1 = stage("sentences", {}, lambda: parse_fn(raw))
     if stop_after == "sentences":
         return info
 
-    def build_cands():
-        pm = person_matcher(FX.person_full_names(spark))
-        # dictionary-length pruning: the matcher is the only consumer of
-        # the mention space in this pipeline, so skip generating window
-        # lengths it provably rejects (results identical, explode halved)
-        n_vals = [n for n in pm.mention_lengths() if 1 <= n <= n_max] or None
-        mentions = ngram_mentions(sents, n_max=n_max, n_values=n_vals)
-        persons = pm.apply(mentions)
-        return extract_candidates(persons, persons, sentences=sents)
-
-    cands, s2, sk = ctx.run_stage("candidates", {"sentences": s1}, build_cands)
-    if sk:
-        info["skipped"].append("candidates")
+    cands, s2 = stage("candidates", {"sentences": s1},
+                      lambda: build_candidates(spark, sents, n_max=n_max))
     if stop_after == "candidates":
         return info
 
-    ks = FX.known_spouses(spark).collect()
-    ks_pairs = {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}")
-        for r in ks
+    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
+    # keyed on the LFs actually applied, so a changed LF set never
+    # resumes from a label matrix an older set produced
+    ctx.config["label_matrix"] = {
+        "lfs": [(lf.lf_id, lf.name, lf.sql, str(lf.expr)) for lf in lfs]
     }
-    lfs = make_fixture_lfs(ks_pairs)
-    L, s3, sk = ctx.run_stage(
-        "label_matrix", {"candidates": s2}, lambda: apply_lfs(cands, lfs)
-    )
-    if sk:
-        info["skipped"].append("label_matrix")
+    L, s3 = stage("label_matrix", {"candidates": s2}, lambda: apply_lfs(cands, lfs))
     if stop_after == "label_matrix":
         return info
 
@@ -197,30 +231,14 @@ def run_kg_pipeline(
         info["learned_lf_stats"] = lm.learned_lf_stats()
         return lm.marginals(spark, L)
 
-    marg, s4, sk = ctx.run_stage("marginals", {"label_matrix": s3}, build_marginals)
-    if sk:
-        info["skipped"].append("marginals")
+    marg, s4 = stage("marginals", {"label_matrix": s3}, build_marginals)
 
-    def build_triples():
-        tmap = link_text_map(
-            cands.selectExpr("subj_text as text").unionByName(
-                cands.selectExpr("obj_text as text")),
-            FX.alias_dict(spark))
-        subj_links = cands.join(
-            F.broadcast(tmap.withColumnRenamed("text", "subj_text")), "subj_text"
-        ).select("candidate_id", "entity_id")
-        obj_links = cands.join(
-            F.broadcast(tmap.withColumnRenamed("text", "obj_text")), "obj_text"
-        ).select("candidate_id", "entity_id")
-        return canonical_triples(
-            cands, marg, subj_links, obj_links, threshold=threshold, n_salts=n_salts
-        ).withColumn("snapshot_id", F.lit(-1))
-
-    triples, s5, sk = ctx.run_stage(
-        "triples", {"marginals": s4, "candidates": s2}, build_triples, partition_by=["pred"]
+    triples, s5 = stage(
+        "triples", {"marginals": s4, "candidates": s2},
+        lambda: build_triples(spark, cands, marg, threshold=threshold, n_salts=n_salts)
+        .withColumn("snapshot_id", F.lit(-1)),
+        partition_by=["pred"],
     )
-    if sk:
-        info["skipped"].append("triples")
     info.update(
         {"sentences": s1, "candidates": s2, "label_matrix": s3, "marginals": s4, "triples": s5,
          "triples_df": triples}

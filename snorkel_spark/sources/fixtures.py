@@ -73,6 +73,16 @@ def known_spouses(spark: SparkSession) -> DataFrame:
     )
 
 
+def known_spouse_names(spark: SparkSession) -> set[tuple[str, str]]:
+    """``known_spouses`` as (subj, obj) full-name mention pairs — the
+    distant-supervision set ``make_fixture_lfs`` takes."""
+    return {
+        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
+         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}")
+        for r in known_spouses(spark).collect()
+    }
+
+
 def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (

@@ -51,10 +51,10 @@ def persons(spark, mentions):
 
 
 @pytest.fixture(scope="session")
-def candidates(spark, persons, sentences):
-    from snorkel_spark.operators.candidates import extract_candidates
+def candidates(spark, sentences):
+    from snorkel_spark.plans.pipeline import build_candidates
 
-    return extract_candidates(persons, persons, sentences=sentences).cache()
+    return build_candidates(spark, sentences).cache()
 
 
 @pytest.fixture(scope="session")
@@ -62,13 +62,7 @@ def fixture_lfs(spark):
     from snorkel_spark.functions.labeling import make_fixture_lfs
     from snorkel_spark.sources import fixtures as FX
 
-    ks = FX.known_spouses(spark).collect()
-    pairs = {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}")
-        for r in ks
-    }
-    return make_fixture_lfs(pairs)
+    return make_fixture_lfs(FX.known_spouse_names(spark))
 
 
 @pytest.fixture(scope="session")

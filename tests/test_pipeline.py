@@ -105,3 +105,33 @@ def test_pipeline_full_parser_variant(spark, tmp_path_factory):
     # ... while rerunning parser='full' resumes it
     info3 = run_kg_pipeline(spark, SF, cat, parser="full")
     assert "sentences" in info3["skipped"]
+
+
+def test_changed_lf_set_reruns_label_matrix(spark, tmp_path_factory, monkeypatch):
+    """The label_matrix resume key covers the LFs actually applied: after
+    the LF set changes, resuming on the same catalog recomputes the
+    label matrix instead of reusing the old set's snapshot."""
+    from snorkel_spark.functions import labeling
+
+    cat = Catalog(str(tmp_path_factory.mktemp("warehouse_lfs")))
+    run_kg_pipeline(spark, SF, cat, stop_after="label_matrix")
+    fixture_lfs = labeling.make_fixture_lfs
+    monkeypatch.setattr(
+        labeling, "make_fixture_lfs",
+        lambda pairs: [lf for lf in fixture_lfs(pairs) if lf.name != "lf_noise"])
+    info = run_kg_pipeline(spark, SF, cat, stop_after="label_matrix")
+    assert set(info["skipped"]) == {"sentences", "candidates"}
+
+
+def test_bench_and_contract_agree_with_pipeline(spark, pipeline_run):
+    """bench.run_pipeline and the contract's flagship query compose the
+    same chain as run_kg_pipeline: equal row counts at every stage."""
+    import __spark_entry__
+    import bench
+
+    cat, info = pipeline_run
+    _, q = bench.run_pipeline(spark, SF)
+    for key, stage in (("n_sentences", "sentences"), ("n_candidates", "candidates"),
+                       ("n_label_rows", "label_matrix"), ("n_triples", "triples")):
+        assert q[key] == cat.read(spark, stage, info[stage]).count(), key
+    assert __spark_entry__.entry(spark).count() == 134

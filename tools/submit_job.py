@@ -2,7 +2,7 @@
 prints a row count.  Exercises the --py-files deployment path:
 
     python tools/make_pyfiles_zip.py
-    spark-submit --master local[8] --py-files snorkel_spark.zip tools/submit_job.py
+    spark-submit --master local[4] --py-files snorkel_spark.zip tools/submit_job.py
 """
 
 from __future__ import annotations
@@ -22,25 +22,16 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from snorkel_spark.labelmodel.model import majority_vote
     from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
-    from snorkel_spark.operators.candidates import extract_candidates
-    from snorkel_spark.operators.matchers import person_matcher
-    from snorkel_spark.operators.ngrams import ngram_mentions
+    from snorkel_spark.labelmodel.model import majority_vote
     from snorkel_spark.operators.parser import parse_sentences
+    from snorkel_spark.plans.pipeline import build_candidates
     from snorkel_spark.sources import fixtures as FX
     from snorkel_spark.sources.interleaved import synthesize_raw_documents
 
     sents = parse_sentences(synthesize_raw_documents(spark, sf_dir))
-    mentions = ngram_mentions(sents, n_max=2)
-    persons = person_matcher(FX.person_full_names(spark)).apply(mentions)
-    cands = extract_candidates(persons, persons, sentences=sents)
-    ks = FX.known_spouses(spark).collect()
-    pairs = {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}") for r in ks
-    }
-    L = apply_lfs(cands, make_fixture_lfs(pairs))
+    cands = build_candidates(spark, sents)
+    L = apply_lfs(cands, make_fixture_lfs(FX.known_spouse_names(spark)))
     mv = majority_vote(L)
     print(json.dumps({"ok": True, "n_scored": mv.count()}))
     spark.stop()
