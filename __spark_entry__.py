@@ -77,6 +77,15 @@ def _label_matrix(spark, sf_dir):
                  lambda: apply_lfs(_candidates(spark, sf_dir), _fixture_lfs(spark)))
 
 
+def _label_counts(spark, sf_dir):
+    """The label model's O statistic as (count matrix C, n) over the
+    memoized label matrix, computed once per session."""
+    from snorkel_spark.labelmodel.encoding import compute_O_arrow
+
+    return _memo(spark, sf_dir, "label_counts",
+                 lambda: compute_O_arrow(_label_matrix(spark, sf_dir), m=7), cache=False)
+
+
 def _mv_triples(spark, sf_dir):
     from snorkel_spark.labelmodel.model import majority_vote
     from snorkel_spark.plans.pipeline import build_triples
@@ -454,11 +463,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return partial.groupBy("entity_id").agg(F.sum("c").alias("n_mentions"))
 
     def g4_dependencies(spark, sf):
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import select_dependencies
 
-        L = _label_matrix(spark, sf)
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         deps = sorted(select_dependencies(C, n, m=7, threshold=0.05))
         return spark.createDataFrame(
             [(int(a), int(b)) for a, b in deps] or [(None, None)], "lf_a int, lf_b int"
@@ -496,11 +503,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # learned per-LF coverage/accuracy from the DISTRIBUTED O path;
         # the oracle fits the same model from DuckDB's label matrix —
         # a true cross-engine check of the sufficient-statistics path
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import LabelModel
 
-        L = _label_matrix(spark, sf)
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         lm = LabelModel(m=7).fit(C, n)
         return spark.createDataFrame(
             [
@@ -514,11 +519,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # G4 v2: conditional-independence screen (matrix-completion
         # residual) — detects correlation GIVEN Y, unlike g4's marginal
         # screen which also fires on merely-Y-correlated pairs
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import select_dependencies_conditional
 
-        L = _label_matrix(spark, sf)
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         deps, _dev = select_dependencies_conditional(C, n, m=7, threshold=0.05)
         return spark.createDataFrame(
             [(int(a), int(b)) for a, b in sorted(deps)] or [(None, None)],
@@ -526,11 +529,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).filter("lf_a is not null")
 
     def g1_label_model_marginals(spark, sf):
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import LabelModel
 
         L = _label_matrix(spark, sf).cache()
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         lm = LabelModel(m=7).fit(C, n)
         return lm.marginals(spark, L).select(
             "candidate_id", F.round("prob_true", 6).alias("prob_true")
@@ -542,7 +544,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # are MASKED into the matrix-completion fit (their O blocks no
         # longer constrain μ̂), then marginals score distributedly.  The
         # oracle replays the identical chain on DuckDB-computed inputs.
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import LabelModel
         from snorkel_spark.labelmodel.structure import (
             select_dependencies_pseudolikelihood,
@@ -554,19 +555,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         deps, _W = select_dependencies_pseudolikelihood(
             L, m=7, n_total=n_total, threshold=0.05
         )
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         lm = LabelModel(m=7, deps=deps).fit(C, n)
         return lm.marginals(spark, L).select(
             "candidate_id", F.round("prob_true", 6).alias("prob_true")
         )
 
     def g1_triples_labelmodel(spark, sf):
-        from snorkel_spark.labelmodel.encoding import compute_O_selfjoin
         from snorkel_spark.labelmodel.model import LabelModel
         from snorkel_spark.plans.pipeline import build_triples
 
         L = _label_matrix(spark, sf)
-        C, n = compute_O_selfjoin(L, m=7)
+        C, n = _label_counts(spark, sf)
         lm = LabelModel(m=7).fit(C, n)
         t = build_triples(spark, _candidates(spark, sf), lm.marginals(spark, L),
                           threshold=0.5, n_salts=8)

@@ -55,7 +55,7 @@ def run_pipeline(spark, sf_dir: str, parser: str = "whitespace") -> tuple[float,
     from pyspark.sql import functions as F
 
     from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
-    from snorkel_spark.labelmodel.encoding import compute_O_arrow, compute_O_selfjoin
+    from snorkel_spark.labelmodel.encoding import compute_O_arrow
     from snorkel_spark.labelmodel.model import LabelModel
     from snorkel_spark.operators.parser import parse_sentences, parse_sentences_full
     from snorkel_spark.plans.pipeline import build_candidates, build_triples
@@ -98,12 +98,9 @@ def run_pipeline(spark, sf_dir: str, parser: str = "whitespace") -> tuple[float,
     n_labels = L.count()
     q["label_matrix_sec"] = round(time.time() - t0, 3)
 
-    # ---- O + fit (both O paths, timed separately) ----------------------
+    # ---- O + fit -------------------------------------------------------
     t0 = time.time()
-    C, n = compute_O_selfjoin(L, m=len(lfs))
-    q["O_selfjoin_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    compute_O_arrow(L, m=len(lfs))
+    C, n = compute_O_arrow(L, m=len(lfs))
     q["O_treeagg_sec"] = round(time.time() - t0, 3)
     t0 = time.time()
     lm = LabelModel(m=len(lfs)).fit(C, n)

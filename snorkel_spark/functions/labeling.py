@@ -239,7 +239,9 @@ def make_fixture_lfs(known_spouse_pairs: set[tuple[str, str]]) -> list[LF]:
         rgx = "(?:^| )(?:" + "|".join(map(re.escape, words)) + ")(?: |$)"
         return F.coalesce(F.col("text_between").rlike(rgx), F.lit(False))
 
-    did = F.col("doc_id").cast("bigint")
+    # try_cast: a non-numeric doc_id abstains, as in the pandas twin's
+    # fault-tolerant path, instead of failing the job under ANSI casts
+    did = F.col("doc_id").try_cast("bigint")
     expr_married = F.when(_btw_rgx(["married"]), 1).otherwise(0)
     expr_wife = F.when(_btw_rgx(["wife"]), 1).otherwise(0)
     expr_family = F.when(_btw_rgx(FAMILY_WORDS), -1).otherwise(0)
@@ -264,5 +266,5 @@ def make_fixture_lfs(known_spouse_pairs: set[tuple[str, str]]) -> list[LF]:
         LF(5, "lf_spouse_word_between", lf_spouse_word, expr=expr_spouse,
            sql=f"CASE WHEN len(list_intersect(tokens_between, [{spo}])) > 0 THEN 1 ELSE 0 END"),
         LF(6, "lf_noise", lf_noise, expr=expr_noise,
-           sql="CASE WHEN CAST(doc_id AS BIGINT) % 7 = 0 THEN 1 WHEN CAST(doc_id AS BIGINT) % 7 = 1 THEN -1 ELSE 0 END"),
+           sql="CASE WHEN TRY_CAST(doc_id AS BIGINT) % 7 = 0 THEN 1 WHEN TRY_CAST(doc_id AS BIGINT) % 7 = 1 THEN -1 ELSE 0 END"),
     ]

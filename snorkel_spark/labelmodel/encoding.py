@@ -2,21 +2,19 @@
 
 The distributed piece of label-model training is the second-moment
 matrix ``O = E[ψ ψᵀ]`` where ψ is the {0,1} one-hot expansion of the
-label vector over (lf, class) pairs — dimension d = m·k (tiny).  Two
-implementations, benchmarked against each other (SURVEY.md §4.2 item 3):
+label vector over (lf, class) pairs — dimension d = m·k (tiny).
 
-- ``compute_O_selfjoin`` — pure DataFrame: self-join the long-form
-  matrix on candidate_id and count per ((lf₁,c₁),(lf₂,c₂)) cell.  All
-  Tungsten; one shuffle of L on candidate_id; output is d² rows.
-- ``compute_O_arrow`` — the treeAggregate-of-partials shape north_star
-  names: collect each candidate's votes (groupBy + collect_list), then
-  an Arrow-batched pass accumulates per-partition partial outer-product
-  sums in NumPy and emits them as (i, j, partial_count) rows; a final
-  tiny hash aggregation sums partials.  Partial + final = two-phase
-  aggregation; the driver only ever sees d² floats.
+- ``compute_O_arrow`` — the distributed path, the treeAggregate-of-
+  partials shape north_star names: collect each candidate's votes
+  (groupBy + collect_list), then an Arrow-batched pass accumulates
+  per-partition partial outer-product sums in NumPy and emits them as
+  (i, j, partial_count) rows; a final tiny hash aggregation sums
+  partials.  Partial + final = two-phase aggregation; only d² integers
+  are collected.
+- ``compute_O_local`` — the NumPy oracle over a dense L.
 
 Both return the *count* matrix C (O = C / n) so equality checks between
-paths are exact integer comparisons.
+them are exact integer comparisons.
 
 Label index convention: binary labels {−1,+1} → class index {0,1} via
 ``c = (label+1)/2``; categorical {1..k} → ``c = label−1``.
@@ -47,32 +45,6 @@ def psi_index(L: DataFrame, cardinality: int = 2) -> DataFrame:
         "candidate_id",
         F.expr(f"lf_id * {k} + {class_index_expr('label', k)}").cast("int").alias("a"),
     )
-
-
-def compute_O_selfjoin(L: DataFrame, m: int, cardinality: int = 2) -> tuple[np.ndarray, int]:
-    """C[a,b] = #candidates voting coordinate a and coordinate b."""
-    d = m * cardinality
-    psi = psi_index(L, cardinality)
-    right = psi.select(F.col("candidate_id").alias("cid2"), F.col("a").alias("b"))
-    pair_cells = (
-        psi.join(right, on=[psi["candidate_id"] == right["cid2"]])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("cnt"))
-    )
-    # n rides the same action as a sentinel (−1,−1) row instead of a
-    # separate distinct().count() job (guide §1.2)
-    n_cell = psi.agg(F.count_distinct("candidate_id").alias("cnt")).select(
-        F.lit(-1).alias("a"), F.lit(-1).alias("b"), "cnt"
-    )
-    cells = pair_cells.unionByName(n_cell).collect()
-    C = np.zeros((d, d), dtype=np.int64)
-    n = 0
-    for r in cells:
-        if r["a"] < 0:
-            n = int(r["cnt"])
-        else:
-            C[r["a"], r["b"]] = r["cnt"]
-    return C, n
 
 
 def compute_O_arrow(L: DataFrame, m: int, cardinality: int = 2) -> tuple[np.ndarray, int]:

@@ -65,7 +65,7 @@ class LabelModel:
         Exact additive projection (closed form for a single linear
         constraint per row), then box clip.  Leave OFF (default) when
         O's denominator counts only LABELED candidates (the long-form
-        ``compute_O_selfjoin`` path): conditioning on 'some LF fired'
+        ``compute_O_arrow`` path): conditioning on 'some LF fired'
         is a collider that shifts the observed vote rates, and pinning
         μ to them then biases the accuracies the slack would absorb.
         """
@@ -135,20 +135,6 @@ class LabelModel:
         return out
 
     # ---- G2: marginals ------------------------------------------------
-    def factor_table(self, spark: SparkSession) -> DataFrame:
-        """(lf_id, label, c, log_mu) as a DataFrame — an inspection /
-        export view of the learned factors.  NOT on the scoring path
-        since r06: ``marginals`` inlines these values as a literal map
-        (no Python-RDD scan, no broadcast)."""
-        k = self.cardinality
-        rows = []
-        for j in range(self.m):
-            for cp in range(k):
-                label = (-1 if cp == 0 else 1) if k == 2 else cp + 1
-                for c in range(k):
-                    rows.append((j, label, c, float(np.log(max(self.mu[j * k + cp, c], EPS)))))
-        return spark.createDataFrame(rows, "lf_id int, label int, c int, log_mu double")
-
     def marginals(self, spark: SparkSession, L: DataFrame) -> DataFrame:
         """P(Y=c | Λ) per candidate — literal factor-map lookup + ONE
         hash agg + row-local softmax; zero Python, one shuffle on

@@ -9,17 +9,8 @@ document (the synthesizer emits one sentence per text chunk), and
 tokenization is whitespace splitting — exactly what the corpus'
 word-salad text calls for, and fully expressible with JVM built-ins.
 
-Two row-identical implementations are provided (see
-``parse_sentences`` for the dispatch):
-
-- ``parse_sentences_arrow`` — Arrow-batched ``mapInPandas``; the
-  DEFAULT since r06 (compiled C string ops beat the interpreted
-  higher-order-function closures ~2.7× cold — guide §4.2).
-- ``parse_sentences_expr`` — pure built-in expressions (split/
-  transform/filter), zero Python; use where Python workers are
-  unavailable (``parse_sentences(raw, impl='expr')``).
-
-Both emit the canonical schema:
+``parse_sentences`` is a pure built-in-expression plan (split/filter/
+transform) with no Python stage; it emits the canonical schema:
     doc_id string, sentence_id string, position int, text string,
     n_tokens int, tokens array<string>, lemmas array<string>
 
@@ -30,10 +21,6 @@ removes the widest column from every shuffle at scale.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,32 +49,16 @@ SENTENCE_SCHEMA = StructType(
 _LEMMA_EXPR = "transform(tokens, lt -> if(length(lt) > 3 and endswith(lt, 's'), substring(lt, 1, length(lt) - 1), lower(lt)))"
 
 
-def parse_sentences(raw: DataFrame, impl: str = "arrow") -> DataFrame:
+def parse_sentences(raw: DataFrame) -> DataFrame:
     """raw_documents → sentences.
 
     Tokenization is whitespace splitting with empty-token filtering —
     runs of spaces/tabs never produce '' tokens (on a clean
     single-spaced corpus this is byte-identical to split-on-space).
-    For multi-sentence, punctuated text use ``parse_sentences_full``.
-
-    Two row-identical implementations (equality-tested):
-    ``impl='arrow'`` (default) batches the exploded spans through
-    ``parse_sentences_arrow`` — guide §4.2: per-token work (split +
-    lemma) runs as compiled C string ops on whole Arrow batches, which
-    measured 2.7× faster cold and 1.3× warm than the interpreted
-    higher-order-function expressions (Spark does not codegen lambda
-    bodies, so the `transform` closures evaluate per element).
-    ``impl='expr'`` keeps the pure-JVM expression plan
-    (``parse_sentences_expr``) — zero Python processes, the right
-    choice where Python workers are unavailable.
+    Java's ``\\s`` is the ASCII whitespace class, so U+00A0 stays
+    inside a token.  For multi-sentence, punctuated text use
+    ``parse_sentences_full``.
     """
-    if impl == "arrow":
-        return parse_sentences_arrow(raw)
-    return parse_sentences_expr(raw)
-
-
-def parse_sentences_expr(raw: DataFrame) -> DataFrame:
-    """The pure built-in-expression P1 plan (no Python anywhere)."""
     return (
         raw.select("doc_id", F.explode("spans").alias("span"))
         .filter("span.kind = 'text' and span.text != ''")
@@ -152,82 +123,6 @@ def parse_sentences_full(raw: DataFrame) -> DataFrame:
         )
         .select("doc_id", "sentence_id", "position", "text", "n_tokens", "tokens", "lemmas")
     )
-
-
-def parse_sentences_arrow(raw: DataFrame) -> DataFrame:
-    """Same result via an Arrow-batched ``mapInPandas`` (vectorized pandas).
-
-    Mirrors the reference's parse stage execution shape
-    (⚠ snorkel/udf.py::UDFRunner.apply — worker processes pulling doc
-    batches); in Spark the batch loop IS the executor task.
-
-    Tokenization is BYTE-IDENTICAL to ``parse_sentences_expr``:
-    split on ``\\s+`` compiled with ``re.ASCII`` (Java's ``\\s`` is the
-    ASCII class unless UNICODE_CHARACTER_CLASS is set — Python's
-    default would additionally split on U+00A0 etc.), empty tokens
-    dropped, lemma rule ``w[:-1] if len>3 and endswith('s') else
-    w.lower()`` exactly as the SQL transform.
-    """
-    exploded = raw.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.offset").alias("offset"),
-    )
-    # Right-size the Python tasks (guide §2.2 "fewer, larger map
-    # tasks"): a tiny corpus spread over cores×4 partitions pays ~128
-    # worker round-trips for sub-MB batches — measured 1.4 s/stage of
-    # pure overhead at sf0.1.  Coalesce DOWN (never up) to
-    # ~1 MB-of-estimated-input per task with a floor of
-    # defaultParallelism/8 tasks; large inputs keep their native width
-    # because the computed width exceeds it (coalesce is then a no-op).
-    # The estimate is Catalyst's sizeInBytes (compressed-size-derived,
-    # so the real per-task text is ~10–30× larger — still far below
-    # batch-memory limits).
-    try:
-        import math
-
-        est = int(exploded._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        floor = max(2, exploded.sparkSession.sparkContext.defaultParallelism // 8)
-        width = max(floor, math.ceil(est / (1 << 20)))
-        if width < exploded.rdd.getNumPartitions():
-            exploded = exploded.coalesce(width)
-    except Exception:
-        pass  # estimation is best-effort; native width is always valid
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re
-
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in batches:
-            # notna mirrors the expr path: "span.text != ''" drops NULL
-            # rows in SQL; a pandas object-comparison would pass them
-            # and crash the split
-            t = pdf[(pdf["kind"] == "text") & pdf["text"].notna() & (pdf["text"] != "")]
-            if len(t) == 0:
-                continue
-            toks = [
-                [w for w in ws.split(s) if w] for s in t["text"].tolist()
-            ]
-            lemmas = [
-                [w[:-1] if len(w) > 3 and w.endswith("s") else w.lower() for w in ts]
-                for ts in toks
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": t["doc_id"],
-                    "sentence_id": t["doc_id"] + ":" + t["offset"].astype(str),
-                    "position": t["offset"].astype("int32"),
-                    "text": t["text"],
-                    "n_tokens": pd.Series(
-                        [len(ts) for ts in toks], index=t.index, dtype="int32"
-                    ),
-                    "tokens": pd.Series(toks, index=t.index),
-                    "lemmas": pd.Series(lemmas, index=t.index),
-                }
-            )
-
-    return exploded.mapInPandas(parse, SENTENCE_SCHEMA)
 
 
 # ---------------------------------------------------------------------

@@ -160,8 +160,6 @@ def run_kg_pipeline(
     n_max: int = 2,
     threshold: float = 0.5,
     n_salts: int = 0,
-    use_label_model: bool = True,
-    o_path: str = "arrow",
     stop_after: str | None = None,
     parser: str = "whitespace",
 ) -> dict:
@@ -178,8 +176,8 @@ def run_kg_pipeline(
     config hash, so snapshots from the two parsers never alias.
     """
     from ..functions.labeling import apply_lfs, make_fixture_lfs
-    from ..labelmodel.encoding import compute_O_arrow, compute_O_selfjoin
-    from ..labelmodel.model import LabelModel, majority_vote
+    from ..labelmodel.encoding import compute_O_arrow
+    from ..labelmodel.model import LabelModel
     from ..operators.parser import parse_sentences, parse_sentences_full
     from ..sources import fixtures as FX
     from ..sources.interleaved import synthesize_raw_documents
@@ -191,7 +189,6 @@ def run_kg_pipeline(
     ctx = PipelineContext(spark, catalog, config={
         "sentences": {"sf_dir": sf_dir, "parser": parser},
         "candidates": {"n_max": n_max},
-        "marginals": {"use_label_model": use_label_model, "o_path": o_path},
         "triples": {"threshold": threshold, "n_salts": n_salts},
     })
     info: dict = {"skipped": []}
@@ -223,10 +220,7 @@ def run_kg_pipeline(
         return info
 
     def build_marginals():
-        if not use_label_model:
-            return majority_vote(L)
-        compute = compute_O_selfjoin if o_path == "selfjoin" else compute_O_arrow
-        C, n = compute(L, m=len(lfs))
+        C, n = compute_O_arrow(L, m=len(lfs))
         lm = LabelModel(m=len(lfs)).fit(C, n)
         info["learned_lf_stats"] = lm.learned_lf_stats()
         return lm.marginals(spark, L)

@@ -109,3 +109,19 @@ def test_expr_fast_path_equals_pandas_path(spark, candidates, fixture_lfs):
     assert "MapInPandas" not in tplan and "ArrowEvalPython" not in tplan
     assert fast.exceptAll(slow).count() == 0
     assert slow.exceptAll(fast).count() == 0
+
+
+def test_expr_noise_lf_abstains_on_non_numeric_doc_id(spark, fixture_lfs):
+    """A non-numeric doc_id makes the noise LF abstain on the fast path,
+    as the fault-tolerant pandas path does, instead of failing the whole
+    job on an ANSI cast; the row's other LFs still vote."""
+    import dataclasses
+
+    rows = spark.createDataFrame(
+        [("c1", "doc-x", "anna lee", "bob kim", "married")],
+        "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
+    )
+    pandas_lfs = [dataclasses.replace(lf, expr=None) for lf in fixture_lfs]
+    fast = {tuple(r) for r in apply_lfs(rows, fixture_lfs).collect()}
+    slow = {tuple(r) for r in apply_lfs(rows, pandas_lfs).collect()}
+    assert fast == slow == {("c1", 0, 1), ("c1", 5, 1)}

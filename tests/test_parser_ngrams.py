@@ -8,15 +8,28 @@ def test_sentence_ids_unique(sentences):
     assert sentences.select("sentence_id").distinct().count() == n
 
 
-def test_arrow_parser_equals_builtin(spark, raw, sentences):
-    from snorkel_spark.operators.parser import parse_sentences_arrow
+def test_parse_sentences_equals_oracle(raw):
+    """parse_sentences equals the DuckDB SENTENCES CTE row for row, and
+    its executed plan runs no Python."""
+    import duckdb
 
-    a = parse_sentences_arrow(raw).select(
-        "doc_id", "sentence_id", "position", "text", "n_tokens"
-    )
-    b = sentences.select("doc_id", "sentence_id", "position", "text", "n_tokens")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    from snorkel_spark.oracle import PREFIX_SENTENCES
+    from snorkel_spark.operators.parser import parse_sentences
+    from tests.conftest import SF
+
+    cols = ["doc_id", "sentence_id", "position", "text", "n_tokens"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    want = con.execute(
+        PREFIX_SENTENCES
+        + f" SELECT {', '.join(cols)}, array_to_string(tokens, '|') FROM sentences"
+    ).fetchall()
+    con.close()
+    df = parse_sentences(raw)
+    got = [tuple(r) for r in df.select(*cols, F.array_join("tokens", "|")).collect()]
+    assert len(got) > 0
+    assert sorted(got) == sorted(want)
+    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_ngram_count_formula(sentences, mentions):
@@ -193,9 +206,9 @@ def test_dictionary_length_pruning_identical_matches(spark, sentences, persons):
 
 
 def test_parse_sentences_null_text_span_dropped(spark):
-    """Both parse implementations drop NULL-text spans (the SQL filter
-    semantics) instead of crashing on them."""
-    from snorkel_spark.operators.parser import parse_sentences_arrow, parse_sentences_expr
+    """The parse drops NULL-text spans (the SQL filter semantics)
+    instead of crashing on them."""
+    from snorkel_spark.operators.parser import parse_sentences
 
     raw = spark.createDataFrame(
         [("d1", [
@@ -204,6 +217,5 @@ def test_parse_sentences_null_text_span_dropped(spark):
         ])],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    for fn in (parse_sentences_arrow, parse_sentences_expr):
-        rows = fn(raw).collect()
-        assert len(rows) == 1 and rows[0]["tokens"] == ["a", "b"], fn.__name__
+    rows = parse_sentences(raw).collect()
+    assert len(rows) == 1 and rows[0]["tokens"] == ["a", "b"]

@@ -37,7 +37,7 @@ def main():
     import __spark_entry__ as E
     from snorkel_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",

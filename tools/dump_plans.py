@@ -16,21 +16,16 @@ SF = "/root/testdata/sf0.001"
 
 NOTES = {
     "sentences": (
-        "Synthesis and span explode are built-in expressions over the "
-        "parquet scan; tokenization runs as ONE Arrow-batched mapInPandas "
-        "(r06: compiled C string ops beat the interpreted transform "
-        "closures 2.7x cold — guide \u00a74.2; parse_sentences_expr keeps "
-        "the pure-JVM plan for Python-less deployments).  No shuffle."
-    ),
-    "person_mentions": (
-        "The gazetteer dictionary match is a **BroadcastHashJoin LeftSemi** "
-        "(BuildRight = the broadcast dict) — the mention stream is never "
-        "shuffled; the (L·n_max) ngram blowup is pruned in the same stage "
-        "it is generated."
+        "Synthesis, span explode and whitespace tokenization are built-in "
+        "expressions over the parquet scan (split/filter/transform) — no "
+        "Python node, no shuffle."
     ),
     "candidates": (
-        "Sentence-local self-pairing (r06): mentions group once per "
-        "sentence and ordered pairs explode bucket-locally, so the "
+        "build_candidates: the gazetteer dictionary match is a "
+        "**BroadcastHashJoin LeftSemi** (BuildRight = the broadcast dict), "
+        "so the length-pruned ngram stream is filtered in the stage that "
+        "generates it.  Sentence-local self-pairing (r06): mentions group "
+        "once per sentence and ordered pairs explode bucket-locally, so the "
         "ngram+matcher subtree is evaluated ONCE (a self-join evaluated it "
         "on both sides) with ONE shuffle; global dedup is a pure "
         "grouping-key **HashAggregate** (distinct on all columns) and the "
@@ -42,11 +37,6 @@ NOTES = {
         "LFs without an expr fall back to the Arrow-batched mapInPandas "
         "applier over an explicitly narrowed projection."
     ),
-    "O_cells": (
-        "Sufficient statistics: self-join on candidate_id + count per "
-        "coordinate pair → **partial+final hash aggregation** (two-phase); "
-        "output is (m·k)² rows, so the driver collect is O(1) in corpus."
-    ),
     "marginals": (
         "Scoring (r06): the m\u00b7k\u00b2 factor table is inlined as a literal "
         "map<int,array<double>> probed per label row — no Python-RDD scan, "
@@ -54,7 +44,8 @@ NOTES = {
         "pivot, leaving exactly ONE exchange (candidate_id).  Zero Python."
     ),
     "triples_salted": (
-        "Salted two-phase aggregation: partial agg on (subj,pred,obj,salt) "
+        "build_triples: the entity link is a distinct-text map joined to "
+        "the candidates twice by broadcast.  Salted two-phase aggregation: partial agg on (subj,pred,obj,salt) "
         "then final on (subj,pred,obj) — the explicit skew treatment for "
         "hot entities (AQE only fixes skewed *joins*)."
     ),
@@ -252,13 +243,10 @@ def main():
     from pyspark.sql import functions as F
 
     from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
-    from snorkel_spark.labelmodel.encoding import psi_index
+    from snorkel_spark.labelmodel.encoding import compute_O_arrow
     from snorkel_spark.labelmodel.model import LabelModel
-    from snorkel_spark.operators.candidates import extract_candidates
-    from snorkel_spark.operators.canonicalize import canonical_triples
-    from snorkel_spark.operators.matchers import person_matcher
-    from snorkel_spark.operators.ngrams import ngram_mentions
     from snorkel_spark.operators.parser import parse_sentences
+    from snorkel_spark.plans.pipeline import build_candidates, build_triples
     from snorkel_spark.session import get_spark
     from snorkel_spark.sources import fixtures as FX
     from snorkel_spark.sources.interleaved import synthesize_raw_documents
@@ -267,25 +255,12 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     sents = parse_sentences(synthesize_raw_documents(spark, SF))
-    mentions = ngram_mentions(sents, n_max=2)
-    persons = person_matcher(FX.person_full_names(spark)).apply(mentions)
-    cands = extract_candidates(persons, persons, sentences=sents)
-    lfs = make_fixture_lfs(set())
+    cands = build_candidates(spark, sents)
+    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
     L = apply_lfs(cands, lfs)
-    cells = (
-        psi_index(L).alias("a")
-        .join(psi_index(L).selectExpr("candidate_id as cid2", "a as b"),
-              F.expr("candidate_id = cid2"))
-        .groupBy("a", "b").count()
-    )
-    import numpy as np
-
-    lm = LabelModel(m=7)
-    lm.mu = np.full((14, 2), 0.4)
-    lm.class_balance = np.array([0.5, 0.5])
+    lm = LabelModel(m=len(lfs)).fit(*compute_O_arrow(L, m=len(lfs)))
     marg = lm.marginals(spark, L)
-    links = cands.select("candidate_id", F.lit("E0").alias("entity_id"))
-    trip = canonical_triples(cands, marg, links, links, n_salts=16)
+    trip = build_triples(spark, cands, marg, n_salts=16)
 
     from snorkel_spark.operators.dedup import ngram_jaccard_pairs
     from snorkel_spark.operators.parser import with_ner_tags_join
@@ -351,10 +326,8 @@ def main():
 
     plans = {
         "sentences": sents,
-        "person_mentions": persons,
         "candidates": cands,
         "label_matrix": L,
-        "O_cells": cells,
         "marginals": marg,
         "triples_salted": trip,
         "ngram_jaccard": ngram_jaccard_pairs(docs),
