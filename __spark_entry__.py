@@ -1119,178 +1119,150 @@ def _g1_oracle_entries() -> dict[str, str]:
 
     if not os.path.exists(f"{_ORACLE_SF}/documents.parquet"):
         return {}
-    try:
-        import duckdb
-        import numpy as np
+    import duckdb
+    import numpy as np
 
-        from snorkel_spark.labelmodel.encoding import compute_O_local
-        from snorkel_spark.labelmodel.model import EPS, LabelModel
-        from snorkel_spark.oracle import PREFIX_LABELS
+    from snorkel_spark.labelmodel.encoding import compute_O_local
+    from snorkel_spark.labelmodel.model import EPS, LabelModel
+    from snorkel_spark.oracle import PREFIX_LABELS
 
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{_ORACLE_SF}/documents.parquet')"
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{_ORACLE_SF}/documents.parquet')"
+    )
+    L = con.execute(
+        PREFIX_LABELS + " SELECT candidate_id, lf_id, label FROM label_matrix"
+    ).df()
+    # full candidate count for the g4c/g1c abstain mass (mirrors
+    # the Spark queries' _candidates(...).count())
+    n_cand = con.execute(
+        PREFIX_LABELS + " SELECT COUNT(*) FROM candidates"
+    ).fetchone()[0]
+    con.close()
+    m = 7
+    ids = sorted(L["candidate_id"].unique())
+    idx = {c: i for i, c in enumerate(ids)}
+    dense = np.zeros((len(ids), m), dtype=np.int64)
+    for cid, lf, lab in zip(L["candidate_id"], L["lf_id"], L["label"]):
+        dense[idx[cid], int(lf)] = int(lab)
+    C, n = compute_O_local(dense)
+    lm = LabelModel(m=m).fit(C, n)
+    # g4b: per-pair leave-one-block-out expected cells (the screen
+    # refits with each candidate block masked — mirror those fits)
+    ho_rows = []
+    for j1 in range(m):
+        for j2 in range(j1 + 1, m):
+            lo = LabelModel(m=m, deps={(j1, j2)}).fit(C, n)
+            exp_mat = lo.mu @ np.diag(lo.class_balance) @ lo.mu.T
+            for ai in range(2):
+                for bi in range(2):
+                    a, b = j1 * 2 + ai, j2 * 2 + bi
+                    ho_rows.append(
+                        f"({j1}, {j2}, {a}, {b}, {float(exp_mat[a, b])!r})"
+                    )
+    ho_values = ", ".join(ho_rows)
+    # g4c: the ICML'17 pseudolikelihood learner on DuckDB-computed
+    # pattern counts — same fit code, ordering pinned by the same
+    # lexsort the Spark path uses, so floats match bit-for-bit
+    from snorkel_spark.labelmodel.structure import (
+        add_abstain_mass,
+        fit_pseudolikelihood,
+    )
+
+    pats, cnts = np.unique(dense, axis=0, return_counts=True)
+    # same abstain-mass fold + lexsort the Spark path applies
+    pats, cnts = add_abstain_mass(pats.astype(np.int8), cnts, m, int(n_cand))
+    theta = fit_pseudolikelihood(pats, cnts, m)
+    Wm = np.maximum(np.abs(theta["corr"]), np.abs(theta["corr"].T))
+    dep_rows = [
+        f"({j}, {k}, {round(float(Wm[j, k]), 4)!r})"
+        for j in range(m)
+        for k in range(j + 1, m)
+        if Wm[j, k] > 0.05
+    ]
+    g4c_sql = (
+        "SELECT CAST(lf_a AS INT) AS lf_a, CAST(lf_b AS INT) AS lf_b, weight"
+        f" FROM (VALUES {', '.join(dep_rows)}) t(lf_a, lf_b, weight)"
+        if dep_rows
+        else "SELECT CAST(NULL AS INT) AS lf_a, CAST(NULL AS INT) AS lf_b,"
+        " CAST(NULL AS DOUBLE) AS weight WHERE FALSE"
+    )
+    # g1c: deps from the pseudolikelihood learner masked into the
+    # fit — the structure-aware μ̂ as its own VALUES table
+    deps = {
+        (j, k)
+        for j in range(m)
+        for k in range(j + 1, m)
+        if Wm[j, k] > 0.05
+    }
+    lm_deps = LabelModel(m=m, deps=deps).fit(C, n)
+    logp = [float(np.log(max(b, EPS))) for b in lm.class_balance]
+
+    def _marginal_cte(model: LabelModel) -> str:
+        # μ̂ as a VALUES table: one (lf_id, label, class, log μ) row per cell
+        factor_values = ", ".join(
+            f"({j}, {2 * cp - 1}, {c}, {float(np.log(max(model.mu[j * 2 + cp, c], EPS)))!r})"
+            for j in range(m) for cp in range(2) for c in range(2)
         )
-        L = con.execute(
-            PREFIX_LABELS + " SELECT candidate_id, lf_id, label FROM label_matrix"
-        ).df()
-        # full candidate count for the g4c/g1c abstain mass (mirrors
-        # the Spark queries' _candidates(...).count())
-        n_cand = con.execute(
-            PREFIX_LABELS + " SELECT COUNT(*) FROM candidates"
-        ).fetchone()[0]
-        con.close()
-        m = 7
-        ids = sorted(L["candidate_id"].unique())
-        idx = {c: i for i, c in enumerate(ids)}
-        dense = np.zeros((len(ids), m), dtype=np.int64)
-        for cid, lf, lab in zip(L["candidate_id"], L["lf_id"], L["label"]):
-            dense[idx[cid], int(lf)] = int(lab)
-        C, n = compute_O_local(dense)
-        lm = LabelModel(m=m).fit(C, n)
-        rows = []
-        for j in range(m):
-            for cp in range(2):
-                label = -1 if cp == 0 else 1
-                for c in range(2):
-                    lmu = float(np.log(max(lm.mu[j * 2 + cp, c], EPS)))
-                    rows.append(f"({j}, {label}, {c}, {lmu!r})")
-        values = ", ".join(rows)
-        # g4b: per-pair leave-one-block-out expected cells (the screen
-        # refits with each candidate block masked — mirror those fits)
-        ho_rows = []
-        for j1 in range(m):
-            for j2 in range(j1 + 1, m):
-                lo = LabelModel(m=m, deps={(j1, j2)}).fit(C, n)
-                exp_mat = lo.mu @ np.diag(lo.class_balance) @ lo.mu.T
-                for ai in range(2):
-                    for bi in range(2):
-                        a, b = j1 * 2 + ai, j2 * 2 + bi
-                        ho_rows.append(
-                            f"({j1}, {j2}, {a}, {b}, {float(exp_mat[a, b])!r})"
-                        )
-        ho_values = ", ".join(ho_rows)
-        # g4c: the ICML'17 pseudolikelihood learner on DuckDB-computed
-        # pattern counts — same fit code, ordering pinned by the same
-        # lexsort the Spark path uses, so floats match bit-for-bit
-        from snorkel_spark.labelmodel.structure import (
-            add_abstain_mass,
-            fit_pseudolikelihood,
-        )
+        return f"""
+      factors(lf_id, label, c, log_mu) AS (VALUES {factor_values}),
+      scores AS (
+        SELECT l.candidate_id,
+               COALESCE(SUM(CASE WHEN f.c = 0 THEN f.log_mu END), 0) + ({logp[0]!r}) AS s0,
+               COALESCE(SUM(CASE WHEN f.c = 1 THEN f.log_mu END), 0) + ({logp[1]!r}) AS s1
+        FROM label_matrix l JOIN factors f ON f.lf_id = l.lf_id AND f.label = l.label
+        GROUP BY l.candidate_id),
+      lm_marg AS (
+        SELECT candidate_id,
+               exp(s1 - greatest(s0, s1))
+                 / (exp(s0 - greatest(s0, s1)) + exp(s1 - greatest(s0, s1))) AS pt
+        FROM scores)
+    """
 
-        pats, cnts = np.unique(dense, axis=0, return_counts=True)
-        # same abstain-mass fold + lexsort the Spark path applies
-        pats, cnts = add_abstain_mass(pats.astype(np.int8), cnts, m, int(n_cand))
-        theta = fit_pseudolikelihood(pats, cnts, m)
-        Wm = np.maximum(np.abs(theta["corr"]), np.abs(theta["corr"].T))
-        dep_rows = [
-            f"({j}, {k}, {round(float(Wm[j, k]), 4)!r})"
-            for j in range(m)
-            for k in range(j + 1, m)
-            if Wm[j, k] > 0.05
-        ]
-        g4c_sql = (
-            "SELECT CAST(lf_a AS INT) AS lf_a, CAST(lf_b AS INT) AS lf_b, weight"
-            f" FROM (VALUES {', '.join(dep_rows)}) t(lf_a, lf_b, weight)"
-            if dep_rows
-            else "SELECT CAST(NULL AS INT) AS lf_a, CAST(NULL AS INT) AS lf_b,"
-            " CAST(NULL AS DOUBLE) AS weight WHERE FALSE"
-        )
-        # g1c: deps from the pseudolikelihood learner masked into the
-        # fit — the structure-aware μ̂ as its own VALUES table
-        deps = {
-            (j, k)
-            for j in range(m)
-            for k in range(j + 1, m)
-            if Wm[j, k] > 0.05
-        }
-        lm_deps = LabelModel(m=m, deps=deps).fit(C, n)
-        dep_factor_rows = []
-        for j in range(m):
-            for cp in range(2):
-                label = -1 if cp == 0 else 1
-                for c in range(2):
-                    lmu = float(np.log(max(lm_deps.mu[j * 2 + cp, c], EPS)))
-                    dep_factor_rows.append(f"({j}, {label}, {c}, {lmu!r})")
-        dep_values = ", ".join(dep_factor_rows)
-        logp = [float(np.log(max(b, EPS))) for b in lm.class_balance]
-
-        def _marginal_cte(factor_values: str) -> str:
-            return f"""
-          factors(lf_id, label, c, log_mu) AS (VALUES {factor_values}),
-          scores AS (
-            SELECT l.candidate_id,
-                   COALESCE(SUM(CASE WHEN f.c = 0 THEN f.log_mu END), 0) + ({logp[0]!r}) AS s0,
-                   COALESCE(SUM(CASE WHEN f.c = 1 THEN f.log_mu END), 0) + ({logp[1]!r}) AS s1
-            FROM label_matrix l JOIN factors f ON f.lf_id = l.lf_id AND f.label = l.label
-            GROUP BY l.candidate_id),
-          lm_marg AS (
-            SELECT candidate_id,
-                   exp(s1 - greatest(s0, s1))
-                     / (exp(s0 - greatest(s0, s1)) + exp(s1 - greatest(s0, s1))) AS pt
-            FROM scores)
-        """
-
-        scores_cte = f"""
-          factors(lf_id, label, c, log_mu) AS (VALUES {values}),
-          scores AS (
-            SELECT l.candidate_id,
-                   COALESCE(SUM(CASE WHEN f.c = 0 THEN f.log_mu END), 0) + ({logp[0]!r}) AS s0,
-                   COALESCE(SUM(CASE WHEN f.c = 1 THEN f.log_mu END), 0) + ({logp[1]!r}) AS s1
-            FROM label_matrix l JOIN factors f ON f.lf_id = l.lf_id AND f.label = l.label
-            GROUP BY l.candidate_id),
-          lm_marg AS (
-            SELECT candidate_id,
-                   exp(s1 - greatest(s0, s1))
-                     / (exp(s0 - greatest(s0, s1)) + exp(s1 - greatest(s0, s1))) AS pt
-            FROM scores)
-        """
-        stats_values = ", ".join(
-            f"({s['lf_id']}, {round(s['learned_coverage'], 6)!r},"
-            f" {round(s['learned_accuracy'], 6)!r})"
-            for s in lm.learned_lf_stats()
-        )
-        return {
-            "g3_learned_lf_stats": f"""
-              SELECT CAST(lf_id AS INT) AS lf_id,
-                     learned_coverage, learned_accuracy
-              FROM (VALUES {stats_values}) t(lf_id, learned_coverage, learned_accuracy)""",
-            "g1_label_model_marginals": PREFIX_LABELS
-            + ", "
-            + scores_cte
-            + " SELECT candidate_id, ROUND(pt, 6) AS prob_true FROM lm_marg",
-            "g1c_marginals_with_deps": PREFIX_LABELS
-            + ", "
-            + _marginal_cte(dep_values)
-            + " SELECT candidate_id, ROUND(pt, 6) AS prob_true FROM lm_marg",
-            "g1_triples_labelmodel": PREFIX_LABELS
-            + ", "
-            + scores_cte
-            + """,
-              linked AS (
-                SELECT c.candidate_id, sa.entity_id AS subj, ob.entity_id AS obj
-                FROM candidates c
-                JOIN alias_names sa ON c.subj_text = sa.alias
-                JOIN alias_names ob ON c.obj_text = ob.alias)
-              SELECT subj, 'spouse_of' AS pred, obj, COUNT(*) AS n_evidence
-              FROM linked JOIN lm_marg USING (candidate_id)
-              WHERE lm_marg.pt > 0.5
-              GROUP BY subj, obj""",
-            "g4b_conditional_dependencies": PREFIX_LABELS
-            + f""" , psi AS (SELECT candidate_id, lf_id * 2 + (label + 1) // 2 AS a FROM label_matrix),
-              nn AS (SELECT COUNT(DISTINCT candidate_id)::DOUBLE AS n FROM psi),
-              cells AS (SELECT p1.a AS a, p2.a AS b, COUNT(*)::DOUBLE AS cnt
-                        FROM psi p1 JOIN psi p2 USING (candidate_id) GROUP BY 1, 2),
-              heldout(j1, j2, a, b, e) AS (VALUES {ho_values})
-              SELECT CAST(h.j1 AS INT) AS lf_a, CAST(h.j2 AS INT) AS lf_b
-              FROM heldout h
-              LEFT JOIN cells c ON c.a = h.a AND c.b = h.b
-              GROUP BY 1, 2
-              HAVING MAX(ABS(COALESCE(c.cnt, 0) / (SELECT n FROM nn) - h.e)) > 0.05""",
-            "g4c_pseudolikelihood_deps": g4c_sql,
-        }
-    except Exception:
-        return {}
+    stats_values = ", ".join(
+        f"({s['lf_id']}, {round(s['learned_coverage'], 6)!r},"
+        f" {round(s['learned_accuracy'], 6)!r})"
+        for s in lm.learned_lf_stats()
+    )
+    return {
+        "g3_learned_lf_stats": f"""
+          SELECT CAST(lf_id AS INT) AS lf_id,
+                 learned_coverage, learned_accuracy
+          FROM (VALUES {stats_values}) t(lf_id, learned_coverage, learned_accuracy)""",
+        "g1_label_model_marginals": PREFIX_LABELS
+        + ", "
+        + _marginal_cte(lm)
+        + " SELECT candidate_id, ROUND(pt, 6) AS prob_true FROM lm_marg",
+        "g1c_marginals_with_deps": PREFIX_LABELS
+        + ", "
+        + _marginal_cte(lm_deps)
+        + " SELECT candidate_id, ROUND(pt, 6) AS prob_true FROM lm_marg",
+        "g1_triples_labelmodel": PREFIX_LABELS
+        + ", "
+        + _marginal_cte(lm)
+        + """,
+          linked AS (
+            SELECT c.candidate_id, sa.entity_id AS subj, ob.entity_id AS obj
+            FROM candidates c
+            JOIN alias_names sa ON c.subj_text = sa.alias
+            JOIN alias_names ob ON c.obj_text = ob.alias)
+          SELECT subj, 'spouse_of' AS pred, obj, COUNT(*) AS n_evidence
+          FROM linked JOIN lm_marg USING (candidate_id)
+          WHERE lm_marg.pt > 0.5
+          GROUP BY subj, obj""",
+        "g4b_conditional_dependencies": PREFIX_LABELS
+        + f""" , psi AS (SELECT candidate_id, lf_id * 2 + (label + 1) // 2 AS a FROM label_matrix),
+          nn AS (SELECT COUNT(DISTINCT candidate_id)::DOUBLE AS n FROM psi),
+          cells AS (SELECT p1.a AS a, p2.a AS b, COUNT(*)::DOUBLE AS cnt
+                    FROM psi p1 JOIN psi p2 USING (candidate_id) GROUP BY 1, 2),
+          heldout(j1, j2, a, b, e) AS (VALUES {ho_values})
+          SELECT CAST(h.j1 AS INT) AS lf_a, CAST(h.j2 AS INT) AS lf_b
+          FROM heldout h
+          LEFT JOIN cells c ON c.a = h.a AND c.b = h.b
+          GROUP BY 1, 2
+          HAVING MAX(ABS(COALESCE(c.cnt, 0) / (SELECT n FROM nn) - h.e)) > 0.05""",
+        "g4c_pseudolikelihood_deps": g4c_sql,
+    }
 
 
 # PII patterns (character classes only — Java regex and RE2 agree);

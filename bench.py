@@ -1,8 +1,14 @@
-"""Benchmark: end-to-end KG pipeline + component stages.
+"""Benchmark: end-to-end KG pipeline + its stage walls.
 
-Prints ONE JSON line:
+Runs ``run_kg_pipeline`` once into a fresh catalog and prints ONE JSON
+line:
   {"metric": "kg_pipeline_e2e", "value": <sec>, "unit": "sec",
    "queries": {...per-stage sec + throughput facts...}, "sf": <sf>}
+
+Each ``<stage>_sec`` is that stage's lineage wall (``wall_ms`` of its
+``_lineage.jsonl`` row) and each row count is the summed footer
+``output_rows`` of its ``_metrics.jsonl`` rows: the numbers an operator
+reads to debug a slow run are the numbers this benchmark reports.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir   (default /root/testdata/sf0.1)
@@ -10,7 +16,7 @@ Env knobs:
       run on)
   SPARK_GRAFT_PARSER  'whitespace' or 'full' — selects the parse path
       (split-on-space vs real sentence splitting + punctuation
-      tokenization), mirroring run_kg_pipeline's knob.  UNSET (the
+      tokenization), run_kg_pipeline's ``parser``.  UNSET (the
       driver's per-round run): BOTH variants run — the whitespace
       chain stays the headline (comparable across rounds) and the full
       chain's walls are published as full_parser_* keys, so the number
@@ -26,6 +32,9 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+ROW_KEYS = {"sentences": "n_sentences", "candidates": "n_candidates",
+            "label_matrix": "n_label_rows", "triples": "n_triples"}
 
 
 def _snap_root() -> str:
@@ -46,107 +55,52 @@ def _cpus() -> int:
 
 
 def run_pipeline(spark, sf_dir: str, parser: str = "whitespace") -> tuple[float, dict]:
-    """One timed end-to-end pipeline pass on an EXISTING session.
-    Returns (total_sec, per-stage dict).  Every stage is snapshotted to
-    parquet (the pipeline's real catalog shape), so each timed stage
-    reads a materialized input, not the raw expression tree."""
+    """One timed ``run_kg_pipeline`` pass into a fresh catalog on an
+    EXISTING session.  Returns (total_sec, per-stage dict)."""
     import shutil
+    from collections import Counter
 
     from pyspark.sql import functions as F
 
-    from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
-    from snorkel_spark.labelmodel.encoding import compute_O_arrow
-    from snorkel_spark.labelmodel.model import LabelModel
-    from snorkel_spark.operators.parser import parse_sentences, parse_sentences_full
-    from snorkel_spark.plans.pipeline import build_candidates, build_triples
-    from snorkel_spark.sources import fixtures as FX
-    from snorkel_spark.sources.interleaved import synthesize_from_docs
+    from snorkel_spark.plans.pipeline import run_kg_pipeline
+    from snorkel_spark.storage import Catalog
 
-    cpus = _cpus()
-    q: dict[str, float] = {}
-    _tmp_dirs: list[str] = []
+    root = tempfile.mkdtemp(prefix="bench_catalog_", dir=_snap_root())
+    try:
+        cat = Catalog(root)
+        t0 = time.time()
+        info = run_kg_pipeline(spark, sf_dir, cat, n_salts=16, parser=parser)
+        total = round(time.time() - t0, 3)
+        n_evidence = int(info["triples_df"].agg(F.sum("n_evidence")).collect()[0][0] or 0)
+        q: dict = {f"{r['stage']}_sec": r["wall_ms"] / 1000 for r in cat.lineage()}
+        rows: Counter = Counter()
+        for m in cat.metrics():
+            rows[m["stage"]] += m["output_rows"]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
-    def materialize(df, prefix: str):
-        d = tempfile.mkdtemp(prefix=prefix, dir=_snap_root())
-        _tmp_dirs.append(d)
-        df.write.mode("overwrite").parquet(d)
-        return spark.read.parquet(d)
-
-    t_all0 = time.time()
-
-    # ---- synthesize + parse ----------------------------------------
-    t0 = time.time()
-    parse_fn = parse_sentences if parser == "whitespace" else parse_sentences_full
-    # the raw parquet is one tiny file → 1 input partition; spread the
-    # rows BEFORE the explode so synthesis/parse parallelize (on a real
-    # corpus the file count provides this for free)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus * 4)
-    sents = materialize(parse_fn(synthesize_from_docs(docs)), "bench_sents_")
-    n_sentences = sents.count()
-    q["sentences_sec"] = round(time.time() - t0, 3)
-
-    # ---- candidates --------------------------------------------------
-    t0 = time.time()
-    cands = materialize(build_candidates(spark, sents, n_max=2), "bench_cands_")
-    n_cands = cands.count()
-    q["candidates_sec"] = round(time.time() - t0, 3)
-
-    # ---- label matrix -------------------------------------------------
-    t0 = time.time()
-    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
-    L = materialize(apply_lfs(cands, lfs), "bench_L_")
-    n_labels = L.count()
-    q["label_matrix_sec"] = round(time.time() - t0, 3)
-
-    # ---- O + fit -------------------------------------------------------
-    t0 = time.time()
-    C, n = compute_O_arrow(L, m=len(lfs))
-    q["O_treeagg_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    lm = LabelModel(m=len(lfs)).fit(C, n)
-    q["fit_sec"] = round(time.time() - t0, 3)
-
-    # ---- marginals + link + triples -------------------------------------
-    t0 = time.time()
-    marg = lm.marginals(spark, L)
-    triples = build_triples(spark, cands, marg, threshold=0.5, n_salts=16).persist()
-    n_triples = triples.count()
-    n_evidence = triples.agg(F.sum("n_evidence")).collect()[0][0] or 0
-    q["triples_sec"] = round(time.time() - t0, 3)
-
-    total = round(time.time() - t_all0, 3)
-    q["n_sentences"] = n_sentences
-    q["n_candidates"] = n_cands
-    q["n_label_rows"] = n_labels
-    q["n_triples"] = n_triples
-    q["n_evidence"] = int(n_evidence)
-    q["triples_per_sec"] = round(n_triples / total, 2)
+    for stage, key in ROW_KEYS.items():
+        q[key] = rows[stage]
+    q["n_evidence"] = n_evidence
+    q["triples_per_sec"] = round(rows["triples"] / total, 2)
     q["evidence_per_sec"] = round(n_evidence / total, 2)
-    q["candidates_per_sec"] = round(n_cands / total, 2)
-    q["sentences_per_sec"] = round(n_sentences / total, 2)
-    q["cpus"] = cpus
+    q["candidates_per_sec"] = round(rows["candidates"] / total, 2)
+    q["sentences_per_sec"] = round(rows["sentences"] / total, 2)
+    q["cpus"] = _cpus()
     q["parser"] = parser
-    triples.unpersist()
-    for d in _tmp_dirs:
-        shutil.rmtree(d, ignore_errors=True)
     return total, q
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = _cpus()
     parser_env = os.environ.get("SPARK_GRAFT_PARSER")  # unset → both
     parser = parser_env or "whitespace"
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from pyspark.sql import functions as F
-
     from snorkel_spark.session import get_spark
 
-    spark = get_spark(app_name="snorkel_spark_bench", cores=cpus)
+    spark = get_spark(app_name="snorkel_spark_bench", cores=_cpus())
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup (JVM + Arrow init)
-    spark.range(1000).select(F.sum("id")).collect()
 
     total, q = run_pipeline(spark, sf_dir, parser)
 

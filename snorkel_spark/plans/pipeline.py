@@ -39,7 +39,6 @@ class PipelineContext:
     spark: SparkSession
     catalog: Catalog
     config: dict = field(default_factory=dict)
-    collect_metrics: bool = True
 
     def _lineage_key(self, stage: str, inputs: dict[str, int]) -> dict:
         return {
@@ -67,28 +66,25 @@ class PipelineContext:
         inputs: dict[str, int],
         build: "callable[[], DataFrame]",
         partition_by: list[str] | None = None,
-        force: bool = False,
     ) -> tuple[DataFrame, int, bool]:
         """Returns (df, snapshot_id, was_skipped)."""
-        if not force:
-            snap = self.find_completed(stage, inputs)
-            if snap is not None:
-                return self.catalog.read(self.spark, stage, snap), snap, True
+        snap = self.find_completed(stage, inputs)
+        if snap is not None:
+            return self.catalog.read(self.spark, stage, snap), snap, True
         t0 = time.time()
         df = build()
         snap = self.catalog.write(df, stage, partition_by=partition_by,
                                   meta=self._lineage_key(stage, inputs))
         out = self.catalog.read(self.spark, stage, snap)
         wall_ms = int((time.time() - t0) * 1000)
-        if self.collect_metrics:
-            # per-partition rows from parquet footers (metadata-only) —
-            # the stage output is scanned exactly once: by its write.
-            self.catalog.log_metrics(
-                [
-                    {"stage": stage, "snapshot_id": snap, "wall_ms": wall_ms, **fm}
-                    for fm in self.catalog.file_metrics(stage, snap)
-                ]
-            )
+        # per-partition rows from parquet footers (metadata-only) — the
+        # stage output is scanned exactly once: by its write.
+        self.catalog.log_metrics(
+            [
+                {"stage": stage, "snapshot_id": snap, "wall_ms": wall_ms, **fm}
+                for fm in self.catalog.file_metrics(stage, snap)
+            ]
+        )
         self.catalog.log_lineage(
             {
                 **self._lineage_key(stage, inputs),

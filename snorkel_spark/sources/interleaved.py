@@ -85,12 +85,7 @@ def synthesize_raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.explain('formatted')``: a single project over the parquet scan,
     no shuffle, no Python).
     """
-    return synthesize_from_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def synthesize_from_docs(docs: DataFrame) -> DataFrame:
-    """Synthesis over an arbitrary (doc_id bigint-able, text) frame —
-    used by the bench's replicated corpus."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # batched withColumns: each withColumn() call is a full analysis
     # pass over the growing plan on the driver — grouping the
     # independent columns into three dependency levels cuts the

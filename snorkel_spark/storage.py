@@ -73,14 +73,13 @@ class Catalog:
         self,
         df: DataFrame,
         table: str,
-        mode: str = "append",
         partition_by: list[str] | None = None,
         meta: dict | None = None,
     ) -> int:
         """Commit ``df`` as a new snapshot of ``table``; returns snapshot_id.
 
-        ``mode='append'`` adds a snapshot alongside prior ones (readers of
-        the *table* see only the latest — snapshots are full replacements,
+        The snapshot is added alongside prior ones (readers of the
+        *table* see only the latest — snapshots are full replacements,
         matching how the reference's ``clear=True`` reruns behave:
         ⚠ snorkel/udf.py::UDFRunner.clear, SURVEY.md §2.9 U1).
         """
@@ -97,8 +96,6 @@ class Catalog:
         if os.path.exists(final):  # crashed previous attempt
             shutil.rmtree(final)
         os.rename(tmp, final)
-        if mode == "overwrite":
-            manifest["snapshots"] = []
         manifest["snapshots"].append(
             {
                 "snapshot_id": snap_id,

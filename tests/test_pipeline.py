@@ -124,14 +124,35 @@ def test_changed_lf_set_reruns_label_matrix(spark, tmp_path_factory, monkeypatch
 
 
 def test_bench_and_contract_agree_with_pipeline(spark, pipeline_run):
-    """bench.run_pipeline and the contract's flagship query compose the
-    same chain as run_kg_pipeline: equal row counts at every stage."""
+    """bench.run_pipeline reports run_kg_pipeline's own stage records and
+    the contract's flagship query composes the same chain: equal row
+    counts at every stage, and the five lineage walls fit in the total."""
     import __spark_entry__
     import bench
 
     cat, info = pipeline_run
-    _, q = bench.run_pipeline(spark, SF)
+    total, q = bench.run_pipeline(spark, SF)
     for key, stage in (("n_sentences", "sentences"), ("n_candidates", "candidates"),
                        ("n_label_rows", "label_matrix"), ("n_triples", "triples")):
         assert q[key] == cat.read(spark, stage, info[stage]).count(), key
+    walls = {k for k in q if k.endswith("_sec") and not k.endswith("_per_sec")}
+    assert walls == {"sentences_sec", "candidates_sec", "label_matrix_sec",
+                     "marginals_sec", "triples_sec"}, walls
+    assert sum(q[k] for k in walls) <= total, q
     assert __spark_entry__.entry(spark).count() == 134
+
+
+def test_g1_oracle_fit_failure_is_loud(monkeypatch):
+    """An error while fitting the label-model oracles propagates instead
+    of silently turning the value-checked G1/G4 entries into rows-only
+    checks."""
+    import __spark_entry__
+    from snorkel_spark.labelmodel.model import LabelModel
+
+    def boom(self, *a, **k):
+        raise RuntimeError("fit failed")
+
+    monkeypatch.setattr(__spark_entry__, "_ORACLE_SF", SF)
+    monkeypatch.setattr(LabelModel, "fit", boom)
+    with pytest.raises(RuntimeError, match="fit failed"):
+        __spark_entry__._g1_oracle_entries()
