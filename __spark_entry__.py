@@ -52,7 +52,7 @@ def _persons(spark, sf_dir):
     from snorkel_spark.sources import fixtures as FX
 
     return _memo(spark, sf_dir, "persons",
-                 lambda: person_matcher(FX.person_full_names(spark)).apply(
+                 lambda: person_matcher(FX.PERSON_FULL_NAMES).apply(
                      _mentions(spark, sf_dir)))
 
 
@@ -60,14 +60,14 @@ def _candidates(spark, sf_dir):
     from snorkel_spark.plans.pipeline import build_candidates
 
     return _memo(spark, sf_dir, "candidates",
-                 lambda: build_candidates(spark, _sentences(spark, sf_dir)))
+                 lambda: build_candidates(_sentences(spark, sf_dir)))
 
 
 def _fixture_lfs(spark):
     from snorkel_spark.functions.labeling import make_fixture_lfs
     from snorkel_spark.sources import fixtures as FX
 
-    return make_fixture_lfs(FX.known_spouse_names(spark))
+    return make_fixture_lfs(FX.known_spouse_names())
 
 
 def _label_matrix(spark, sf_dir):
@@ -91,7 +91,7 @@ def _mv_triples(spark, sf_dir):
     from snorkel_spark.plans.pipeline import build_triples
 
     mv = majority_vote(_label_matrix(spark, sf_dir))
-    t = build_triples(spark, _candidates(spark, sf_dir), mv, threshold=0.5)
+    t = build_triples(_candidates(spark, sf_dir), mv, threshold=0.5)
     return t.select("subj", "pred", "obj", "n_evidence", F.round("prob", 4).alias("prob"))
 
 
@@ -568,7 +568,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         L = _label_matrix(spark, sf)
         C, n = _label_counts(spark, sf)
         lm = LabelModel(m=7).fit(C, n)
-        t = build_triples(spark, _candidates(spark, sf), lm.marginals(spark, L),
+        t = build_triples(_candidates(spark, sf), lm.marginals(spark, L),
                           threshold=0.5, n_salts=8)
         return t.select("subj", "pred", "obj", "n_evidence")
 

@@ -5,20 +5,27 @@ Re-implements the query/data-processing capabilities of the reference
 SURVEY.md §0 for provenance) as an idiomatic Spark 4 DataFrame pipeline:
 
 - interleaved text+media document ingest (Iceberg-style snapshot tables)
-- sentence/span projection via Arrow-batched ``mapInPandas``
+- sentence/span projection as one built-in-expression ``select``
+  (split/transform/explode — no Python)
 - n-gram candidate spaces + matcher algebra (dictionary/regex/union/concat)
 - labeling-function application → sparse long-form (candidate_id, lf_id,
   label) matrix
 - generative label model (matrix-completion / SGD over LF accuracies,
-  Snorkel-MeTaL formulation) fit from a ``treeAggregate`` of sufficient
-  statistics
-- entity linking against a broadcast alias dictionary, canonicalization,
-  salted two-phase aggregation, triple materialization with lineage and
+  Snorkel-MeTaL formulation) fit from the O statistic, summed as
+  Arrow-batched per-partition partials plus one hash aggregate
+- entity linking against the driver-side alias dictionary, folded into
+  literal maps each row probes in place; canonicalization, salted
+  two-phase aggregation, triple materialization with lineage and
   checkpoint/resume.
 
 No per-row Python UDFs anywhere on the hot path — only built-in
-``pyspark.sql.functions``, pandas UDFs, ``mapInPandas``/``applyInPandas``
-and one metrics-free ``treeAggregate`` of NumPy arrays.
+``pyspark.sql.functions``, pandas UDFs and ``mapInPandas``/``applyInPandas``.
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# the package's one logger: best-effort paths that fail, and opt-in
+# settings with a known cost, warn here instead of passing silently
+log = logging.getLogger("snorkel_spark")

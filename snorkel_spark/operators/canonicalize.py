@@ -16,34 +16,40 @@ result — asserted by the skew test.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def canonical_triples(
     candidates: DataFrame,
     marginals: DataFrame,
-    subj_links: DataFrame,
-    obj_links: DataFrame,
+    subj: Column,
+    obj: Column,
     pred: str = "spouse_of",
     threshold: float = 0.5,
     evidence_k: int = 5,
     n_salts: int = 0,
 ) -> DataFrame:
-    """candidates ⋈ marginals(≥τ) ⋈ links → (subj, pred, obj, prob,
-    n_evidence, evidence).
+    """candidates ⋈ marginals(>τ) → (subj, pred, obj, prob, n_evidence,
+    evidence).
 
-    ``subj_links``/``obj_links``: (candidate_id, entity_id) for each slot
-    (from linker.link_mentions on the slot mentions).
+    ``subj``/``obj``: each slot's entity id as an expression over the
+    candidate's columns (e.g. ``linker.link_text_map(...)["entity_id"]``),
+    evaluated only on the candidates above the threshold; a candidate
+    with a null slot is dropped.
     ``n_salts=0`` → plain two-phase hash agg (Spark's partial+final);
     ``n_salts>0`` → explicit salting for skewed keys.
     """
     probs = marginals.select("candidate_id", "prob_true").filter(F.col("prob_true") > threshold)
+    # Null slots are dropped by a generator, not a Filter: Catalyst
+    # pushes a Filter on the slot columns below the join (inlining the
+    # slot expressions), which evaluates them on every candidate; a
+    # Generate is a pushdown barrier.
+    slots = F.filter(F.array(F.struct(subj.alias("subj"), obj.alias("obj"))),
+                     lambda s: s["subj"].isNotNull() & s["obj"].isNotNull())
     base = (
-        candidates.select("candidate_id", "doc_id", "sentence_id")
-        .join(probs, "candidate_id")
-        .join(subj_links.select("candidate_id", F.col("entity_id").alias("subj")), "candidate_id")
-        .join(obj_links.select("candidate_id", F.col("entity_id").alias("obj")), "candidate_id")
+        candidates.join(probs, "candidate_id")
+        .select("candidate_id", "doc_id", "sentence_id", "prob_true", F.inline(slots))
         .withColumn("pred", F.lit(pred))
     )
     ev = F.struct("doc_id", "sentence_id", "candidate_id")

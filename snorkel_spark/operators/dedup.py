@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import log
+
 N_MINHASH = 128
 N_BANDS = 32  # rows per band r = 128/32 = 4
 MAX_BUCKET = 64
@@ -250,6 +252,8 @@ def _lsh_jaccard_pairs(
     else:
         # uncapped: keep the join shape — a collect_list over an
         # unbounded bucket would be a single-task memory hazard
+        log.warning("LSH pairs with max_bucket=None: the uncapped band self-join "
+                    "emits w² pairs per bucket of width w")
         other = bands.select(F.col("doc_id").alias("doc_b"), F.col("band_key").alias("bk2"))
         cand = (
             bands.join(other, on=[bands["band_key"] == other["bk2"], bands["doc_id"] < other["doc_b"]])

@@ -161,10 +161,16 @@ class DictionaryMatch(Matcher):
     def predicate(self, df: DataFrame) -> Column:
         if self.stemmer == "porter":
             # stem the dict side with the Python twin of the SQL rules
-            words = [" ".join(porter_stem_word(t) for t in w.split(" ")) for w in self.d]
+            words = {" ".join(porter_stem_word(t) for t in w.split(" ")) for w in self.d}
         else:
-            words = [w.lower() if self.ignore_case else w for w in self.d]
-        return _normalize(self.attrib, self.ignore_case, self.stemmer).isin(words)
+            words = {w.lower() if self.ignore_case else w for w in self.d}
+        return _normalize(self.attrib, self.ignore_case, self.stemmer).isin(sorted(words))
+
+    def mention_lengths(self) -> list[int]:
+        """Distinct token counts of the dictionary entries — the prune
+        set for ``ngram_mentions(n_values=...)`` (see
+        ``DictionaryJoinMatch.mention_lengths``); no Spark job."""
+        return sorted({len(w.split(" ")) for w in self.d})
 
 
 @dataclass
@@ -359,10 +365,11 @@ class LambdaFunctionMatcher(Matcher):
         return _m(F.col("text"))
 
 
-def person_matcher(alias_dict: DataFrame, **kw) -> DictionaryJoinMatch:
-    """M5 ``PersonMatcher`` equivalent: gazetteer NER via the broadcast
-    alias dictionary (no spaCy offline — SURVEY.md §2.2 P2 note)."""
-    return DictionaryJoinMatch(dict_df=alias_dict, dict_col="alias", **kw)
+def person_matcher(names, **kw) -> DictionaryMatch:
+    """M5 ``PersonMatcher`` equivalent: gazetteer NER against driver-side
+    names (no spaCy offline — SURVEY.md §2.2 P2 note).  The
+    ``lower(text) IN (…)`` filter plans as an InSet probe: no broadcast."""
+    return DictionaryMatch(d=frozenset(names), **kw)
 
 
 def person_matcher_ner(**kw) -> RegexMatchEach:

@@ -43,7 +43,7 @@ def ngram_mentions(
     ⊆ 1..n_max).  This is the *dictionary-length pruning* planner rule:
     when the only consumer is a matcher that provably rejects other
     lengths (e.g. a full-name gazetteer of bigrams —
-    ``DictionaryJoinMatch.mention_lengths()``), skipping their
+    ``DictionaryMatch.mention_lengths()``), skipping their
     generation halves-or-better the explode + probe volume without
     changing any result.  Default None = all of 1..n_max.
 

@@ -102,14 +102,14 @@ class PipelineContext:
 # cache).  Operators are imported in the function body, so they are
 # looked up on their modules at call time and a patched attribute is
 # picked up.
-def build_candidates(spark: SparkSession, sentences: DataFrame, n_max: int = 2) -> DataFrame:
+def build_candidates(sentences: DataFrame, n_max: int = 2) -> DataFrame:
     """sentences → n-gram mentions → person matcher → spouse candidates."""
     from ..operators.candidates import extract_candidates
     from ..operators.matchers import person_matcher
     from ..operators.ngrams import ngram_mentions
     from ..sources import fixtures as FX
 
-    pm = person_matcher(FX.person_full_names(spark))
+    pm = person_matcher(FX.PERSON_FULL_NAMES)
     # dictionary-length pruning: the matcher is the only consumer of
     # the mention space, so skip generating window lengths it provably
     # rejects (results identical, explode halved)
@@ -121,7 +121,6 @@ def build_candidates(spark: SparkSession, sentences: DataFrame, n_max: int = 2) 
 
 
 def build_triples(
-    spark: SparkSession,
     cands: DataFrame,
     marg: DataFrame,
     threshold: float = 0.5,
@@ -132,20 +131,13 @@ def build_triples(
     from ..operators.linker import link_text_map
     from ..sources import fixtures as FX
 
-    # link by distinct text (scores are text-pure) → broadcast map, no
-    # shuffle of the candidate table
-    tmap = link_text_map(
-        cands.selectExpr("subj_text as text").unionByName(
-            cands.selectExpr("obj_text as text")),
-        FX.alias_dict(spark))
-    subj_links = cands.join(
-        F.broadcast(tmap.withColumnRenamed("text", "subj_text")), "subj_text"
-    ).select("candidate_id", "entity_id")
-    obj_links = cands.join(
-        F.broadcast(tmap.withColumnRenamed("text", "obj_text")), "obj_text"
-    ).select("candidate_id", "entity_id")
+    # each slot links inside the row's own expression against the
+    # driver-side gazetteer, after the threshold join: no link table
+    def slot(col: str):
+        return link_text_map(F.col(col), FX.ALIASES)["entity_id"]
+
     return canonical_triples(
-        cands, marg, subj_links, obj_links, threshold=threshold, n_salts=n_salts
+        cands, marg, slot("subj_text"), slot("obj_text"), threshold=threshold, n_salts=n_salts
     )
 
 
@@ -201,11 +193,11 @@ def run_kg_pipeline(
         return info
 
     cands, s2 = stage("candidates", {"sentences": s1},
-                      lambda: build_candidates(spark, sents, n_max=n_max))
+                      lambda: build_candidates(sents, n_max=n_max))
     if stop_after == "candidates":
         return info
 
-    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
+    lfs = make_fixture_lfs(FX.known_spouse_names())
     # keyed on the LFs actually applied, so a changed LF set never
     # resumes from a label matrix an older set produced
     ctx.config["label_matrix"] = {
@@ -225,7 +217,7 @@ def run_kg_pipeline(
 
     triples, s5 = stage(
         "triples", {"marginals": s4, "candidates": s2},
-        lambda: build_triples(spark, cands, marg, threshold=threshold, n_salts=n_salts)
+        lambda: build_triples(cands, marg, threshold=threshold, n_salts=n_salts)
         .withColumn("snapshot_id", F.lit(-1)),
         partition_by=["pred"],
     )

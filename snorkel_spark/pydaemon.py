@@ -10,14 +10,17 @@ process-image level).  This also keeps sessions from needing a wide
 warm-up fan-out that leaves a pool of idle resident workers behind.
 
 Failure policy: the imports are best-effort — a broken/missing optional
-package must never take down the worker machinery, so each is guarded.
+package must never take down the worker machinery, so each is guarded
+and a failure is logged.
 """
 
+from snorkel_spark import log
+
 for _mod in ("numpy", "pandas", "pyarrow", "pyarrow.pandas_compat"):
-    try:  # noqa: SIM105
+    try:
         __import__(_mod)
-    except Exception:
-        pass
+    except Exception as e:
+        log.warning("worker daemon: preloading %s failed: %r", _mod, e)
 
 from pyspark.daemon import manager  # noqa: E402
 

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import log
+
 # Arrow batch size: large enough to amortize (de)serialization, small
 # enough that a densified per-batch label block (batch × m·k) stays
 # comfortably in executor memory at any corpus size.
@@ -116,8 +118,8 @@ def _warm_engine(spark: SparkSession) -> None:
     try:
         if spark.conf.get("spark.snorkel.engineWarm", None):
             return
-    except Exception:
-        pass
+    except Exception as e:
+        log.warning("engine warm-up: session conf unreadable: %r", e)
     try:
         import shutil
         import tempfile
@@ -149,8 +151,8 @@ def _warm_engine(spark: SparkSession) -> None:
         finally:
             shutil.rmtree(d, ignore_errors=True)
         spark.conf.set("spark.snorkel.engineWarm", "1")
-    except Exception:
-        pass  # warm-up is best-effort; never block the session
+    except Exception as e:  # best-effort: never block the session
+        log.warning("engine warm-up failed: %r", e)
 
 
 def _warm_python_workers(spark: SparkSession) -> None:
@@ -167,8 +169,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
     try:
         if spark.conf.get("spark.snorkel.pythonWorkersWarm", None):
             return
-    except Exception:
-        pass
+    except Exception as e:
+        log.warning("Python worker warm-up: session conf unreadable: %r", e)
 
     def _touch(batches):
         import pandas as _pd
@@ -178,6 +180,5 @@ def _warm_python_workers(spark: SparkSession) -> None:
     try:
         spark.range(0, 1, 1, 1).mapInPandas(_touch, "id long").count()
         spark.conf.set("spark.snorkel.pythonWorkersWarm", "1")
-    except Exception:
-        # warm-up is best-effort; a failure must never block the session
-        pass
+    except Exception as e:  # best-effort: never block the session
+        log.warning("Python worker warm-up failed: %r", e)

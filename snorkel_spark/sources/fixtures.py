@@ -24,62 +24,58 @@ FAMILY_WORDS = ["brother", "sister", "father", "mother", "son", "cousin"]
 _EJ = f"cast(if((7*id+3) % {N_ENTITIES} = id, (id+1) % {N_ENTITIES}, (7*id+3) % {N_ENTITIES}) as int)"
 
 
-def alias_dict(spark: SparkSession) -> DataFrame:
-    """B2: ``alias, entity_id, canonical_name, prior``.
-
-    Per subj entity E{i}: full name (prior .9), surname (.6), ambiguous
-    first name shared with E{(i+1)%137} (.7/.3 — exercises prior
-    tie-breaking).  Per obj entity F{i}: full name (.9), surname (.6).
-    Broadcast to executors at link time (SURVEY.md §2.11 N1).
-    """
-    ids = spark.range(N_ENTITIES).select(F.col("id").cast("int").alias("i"))
-    rows = ids.selectExpr(
-        f"""
-        array(
-          named_struct('alias', concat('anna', i, ' lee', i), 'entity_id', concat('E', i),
-                       'canonical_name', concat('anna', i, ' lee', i), 'prior', 0.9d),
-          named_struct('alias', concat('lee', i), 'entity_id', concat('E', i),
-                       'canonical_name', concat('anna', i, ' lee', i), 'prior', 0.6d),
-          named_struct('alias', concat('anna', i), 'entity_id', concat('E', i),
-                       'canonical_name', concat('anna', i, ' lee', i), 'prior', 0.7d),
-          named_struct('alias', concat('anna', i), 'entity_id', concat('E', (i + 1) % {N_ENTITIES}),
-                       'canonical_name', concat('anna', (i + 1) % {N_ENTITIES}, ' lee', (i + 1) % {N_ENTITIES}), 'prior', 0.3d),
-          named_struct('alias', concat('bob', i, ' kim', i), 'entity_id', concat('F', i),
-                       'canonical_name', concat('bob', i, ' kim', i), 'prior', 0.9d),
-          named_struct('alias', concat('kim', i), 'entity_id', concat('F', i),
-                       'canonical_name', concat('bob', i, ' kim', i), 'prior', 0.6d)
-        ) as a
-        """
-    ).select(F.explode("a").alias("r")).select("r.alias", "r.entity_id", "r.canonical_name", "r.prior")
-    return rows
+def _partner(i: int) -> int:
+    """Python twin of ``_EJ``."""
+    j = (7 * i + 3) % N_ENTITIES
+    return (i + 1) % N_ENTITIES if j == i else j
 
 
-def person_full_names(spark: SparkSession) -> DataFrame:
-    """The full-name aliases only — the gazetteer the person matcher uses
-    (bigram mentions)."""
-    return alias_dict(spark).filter(F.col("alias").contains(" ")).select("alias")
-
-
-def known_spouses(spark: SparkSession) -> DataFrame:
-    """B3 lf_distant_supervision support set: canonical pairs
-    (E{a}, F{b}) with b = planted partner of a, for even a."""
+def _aliases_of(i: int) -> tuple:
+    subj, nxt, obj = f"anna{i} lee{i}", (i + 1) % N_ENTITIES, f"bob{i} kim{i}"
     return (
-        spark.range(N_ENTITIES)
-        .filter("id % 2 = 0")
-        .selectExpr(
-            "concat('E', cast(id as int)) as subj_entity",
-            f"concat('F', {_EJ}) as obj_entity",
-        )
+        (subj, f"E{i}", subj, 0.9),
+        (f"lee{i}", f"E{i}", subj, 0.6),
+        (f"anna{i}", f"E{i}", subj, 0.7),
+        (f"anna{i}", f"E{nxt}", f"anna{nxt} lee{nxt}", 0.3),
+        (obj, f"F{i}", obj, 0.9),
+        (f"kim{i}", f"F{i}", obj, 0.6),
     )
 
 
-def known_spouse_names(spark: SparkSession) -> set[tuple[str, str]]:
-    """``known_spouses`` as (subj, obj) full-name mention pairs — the
-    distant-supervision set ``make_fixture_lfs`` takes."""
+# B2, as driver-side rows ``(alias, entity_id, canonical_name, prior)``.
+# Per subj entity E{i}: full name (prior .9), surname (.6), ambiguous
+# first name shared with E{(i+1)%137} (.7/.3 — exercises prior
+# tie-breaking).  Per obj entity F{i}: full name (.9), surname (.6).
+# 822 rows of arithmetic: the linker folds them into literal maps
+# (SURVEY.md §2.11 N1), the person matcher into an IN-set.
+ALIASES: tuple[tuple[str, str, str, float], ...] = tuple(
+    row for i in range(N_ENTITIES) for row in _aliases_of(i)
+)
+# The full-name aliases only — the gazetteer the person matcher uses
+# (bigram mentions).
+PERSON_FULL_NAMES: tuple[str, ...] = tuple(a for a, *_ in ALIASES if " " in a)
+
+
+def alias_dict(spark: SparkSession) -> DataFrame:
+    """``ALIASES`` as a DataFrame, for the operators that take the
+    dictionary as a table (``DictionaryJoinMatch``, ``link_mentions``)."""
+    return spark.createDataFrame(
+        ALIASES, "alias string, entity_id string, canonical_name string, prior double"
+    )
+
+
+def person_full_names(spark: SparkSession) -> DataFrame:
+    """``PERSON_FULL_NAMES`` as a one-column ``alias`` DataFrame."""
+    return spark.createDataFrame([(a,) for a in PERSON_FULL_NAMES], "alias string")
+
+
+def known_spouse_names() -> set[tuple[str, str]]:
+    """B3 lf_distant_supervision support set: the (subj, obj) full-name
+    pairs of (E{a}, F{b}) with b = planted partner of a, for even a —
+    the distant-supervision set ``make_fixture_lfs`` takes."""
     return {
-        (f"anna{r.subj_entity[1:]} lee{r.subj_entity[1:]}",
-         f"bob{r.obj_entity[1:]} kim{r.obj_entity[1:]}")
-        for r in known_spouses(spark).collect()
+        (f"anna{i} lee{i}", f"bob{_partner(i)} kim{_partner(i)}")
+        for i in range(0, N_ENTITIES, 2)
     }
 
 

@@ -31,6 +31,27 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — how Spark
+    reads back any parquet it wrote."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _read_schema(schema: StructType, partition_by: list[str]) -> StructType:
+    """The schema a snapshot reads back with: data fields, then the
+    partition fields, all nullable."""
+    fields = [f for f in schema.fields if f.name not in partition_by]
+    fields += [schema[c] for c in partition_by]
+    return _nullable(StructType(fields))
 
 
 def _atomic_write_json(path: str, obj) -> None:
@@ -101,6 +122,7 @@ class Catalog:
                 "snapshot_id": snap_id,
                 "committed_at": time.time(),
                 "partition_by": partition_by or [],
+                "schema": _read_schema(df.schema, partition_by or []).jsonValue(),
                 "meta": meta or {},
             }
         )
@@ -113,7 +135,14 @@ class Catalog:
             snapshot_id = self.current_snapshot(table)
         if snapshot_id is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot under {self.root}")
-        return spark.read.parquet(os.path.join(self.root, table, f"snapshot={snapshot_id}"))
+        reader = spark.read
+        # the recorded schema spares the read its footer-inference job;
+        # entries committed before schemas were recorded still infer
+        schema = next((s.get("schema") for s in self.snapshots(table)
+                       if s["snapshot_id"] == snapshot_id), None)
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(os.path.join(self.root, table, f"snapshot={snapshot_id}"))
 
     def exists(self, table: str, snapshot_id: int | None = None) -> bool:
         snaps = self.snapshots(table)

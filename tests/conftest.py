@@ -47,14 +47,14 @@ def persons(spark, mentions):
     from snorkel_spark.operators.matchers import person_matcher
     from snorkel_spark.sources import fixtures as FX
 
-    return person_matcher(FX.person_full_names(spark)).apply(mentions).cache()
+    return person_matcher(FX.PERSON_FULL_NAMES).apply(mentions).cache()
 
 
 @pytest.fixture(scope="session")
 def candidates(spark, sentences):
     from snorkel_spark.plans.pipeline import build_candidates
 
-    return build_candidates(spark, sentences).cache()
+    return build_candidates(sentences).cache()
 
 
 @pytest.fixture(scope="session")
@@ -62,7 +62,7 @@ def fixture_lfs(spark):
     from snorkel_spark.functions.labeling import make_fixture_lfs
     from snorkel_spark.sources import fixtures as FX
 
-    return make_fixture_lfs(FX.known_spouse_names(spark))
+    return make_fixture_lfs(FX.known_spouse_names())
 
 
 @pytest.fixture(scope="session")

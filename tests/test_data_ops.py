@@ -514,6 +514,21 @@ def test_lsh_capped_groupby_pairs_equal_join_pairs(spark, docs):
     assert a == b and len(a) > 0
 
 
+def test_lsh_uncapped_self_join_warns(spark, docs, caplog):
+    """max_bucket=None turns on the uncapped w² band self-join: it is
+    allowed, but said out loud on the package logger."""
+    import logging
+
+    from snorkel_spark.operators.dedup import ngram_jaccard_pairs
+
+    with caplog.at_level(logging.WARNING, logger="snorkel_spark"):
+        ngram_jaccard_pairs(docs, n_hashes=16, n_bands=8, max_bucket=64)
+        assert not caplog.records
+        ngram_jaccard_pairs(docs, n_hashes=16, n_bands=8, max_bucket=None)
+    assert [r.name for r in caplog.records] == ["snorkel_spark"]
+    assert "max_bucket=None" in caplog.records[0].getMessage()
+
+
 def test_repetition_stats_equals_bruteforce(spark):
     """r06 optimization contract: the sorted-run max-frequency kernel
     must reproduce the brute-force n-gram counts."""

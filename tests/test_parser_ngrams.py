@@ -196,7 +196,7 @@ def test_dictionary_length_pruning_identical_matches(spark, sentences, persons):
     from snorkel_spark.operators.ngrams import ngram_mentions
     from snorkel_spark.sources import fixtures as FX
 
-    pm = person_matcher(FX.person_full_names(spark))
+    pm = person_matcher(FX.PERSON_FULL_NAMES)
     lengths = pm.mention_lengths()
     assert lengths == [2]  # full-name gazetteer is bigrams only
     pruned = pm.apply(ngram_mentions(sentences, n_max=2, n_values=lengths))

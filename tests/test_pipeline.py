@@ -156,3 +156,42 @@ def test_g1_oracle_fit_failure_is_loud(monkeypatch):
     monkeypatch.setattr(LabelModel, "fit", boom)
     with pytest.raises(RuntimeError, match="fit failed"):
         __spark_entry__._g1_oracle_entries()
+
+
+def test_pass_job_budget(spark, tmp_path):
+    """One pass runs ≤16 Spark jobs (32 before the gazetteer moved to the
+    driver and snapshot reads took their recorded schema)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pass_job_budget", "one run_kg_pipeline pass")
+    try:
+        run_kg_pipeline(spark, SF, Catalog(str(tmp_path / "wh")), n_salts=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pass_job_budget")
+    assert 0 < len(jobs) <= 16, len(jobs)
+
+
+def test_catalog_read_schema_equals_inferred(spark, pipeline_run, tmp_path):
+    """A snapshot read with its recorded schema has exactly the schema
+    parquet inference gives, partitioned ``triples`` included; a
+    manifest entry without a schema still reads (by inference)."""
+    import json
+    import os
+
+    cat, info = pipeline_run
+    for t in ("sentences", "candidates", "label_matrix", "marginals", "triples"):
+        path = os.path.join(cat.root, t, f"snapshot={info[t]}")
+        assert cat.read(spark, t, info[t]).schema == spark.read.parquet(path).schema, t
+
+    legacy = Catalog(str(tmp_path / "wh"))
+    snap = legacy.write(info["triples_df"], "triples", partition_by=["pred"])
+    mpath = os.path.join(legacy.root, "triples", "_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["snapshots"][0]["schema"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    df = legacy.read(spark, "triples", snap)
+    assert df.schema == cat.read(spark, "triples", info["triples"]).schema
+    assert df.count() == info["triples_df"].count()

@@ -57,14 +57,12 @@ def test_skewed_triples_salted_equals_unsalted(spark, candidates, label_matrix):
 
     # skew: every pat0 candidate mapped onto the SAME entity pair
     mv = majority_vote(label_matrix)
-    links = candidates.select(
-        "candidate_id",
+    entity = (
         F.when(F.expr("cast(doc_id as bigint) % 3 = 0"), "E0")
         .otherwise(F.concat(F.lit("E"), F.expr("cast(doc_id as bigint) % 137")))
-        .alias("entity_id"),
     )
-    t_plain = canonical_triples(candidates, mv, links, links, n_salts=0)
-    t_salted = canonical_triples(candidates, mv, links, links, n_salts=8)
+    t_plain = canonical_triples(candidates, mv, entity, entity, n_salts=0)
+    t_salted = canonical_triples(candidates, mv, entity, entity, n_salts=8)
     cols = ["subj", "pred", "obj", "prob", "n_evidence"]
     assert t_plain.select(*cols).exceptAll(t_salted.select(*cols)).count() == 0
     assert t_salted.select(*cols).exceptAll(t_plain.select(*cols)).count() == 0

@@ -21,10 +21,10 @@ NOTES = {
         "Python node, no shuffle."
     ),
     "candidates": (
-        "build_candidates: the gazetteer dictionary match is a "
-        "**BroadcastHashJoin LeftSemi** (BuildRight = the broadcast dict), "
-        "so the length-pruned ngram stream is filtered in the stage that "
-        "generates it.  Sentence-local self-pairing (r06): mentions group "
+        "build_candidates: the gazetteer dictionary match is an **InSet** "
+        "probe inside the Filter over the length-pruned ngram stream (the "
+        "driver-side names fold into a hash set), so there is no broadcast "
+        "and no extra job.  Sentence-local self-pairing (r06): mentions group "
         "once per sentence and ordered pairs explode bucket-locally, so the "
         "ngram+matcher subtree is evaluated ONCE (a self-join evaluated it "
         "on both sides) with ONE shuffle; global dedup is a pure "
@@ -44,8 +44,10 @@ NOTES = {
         "pivot, leaving exactly ONE exchange (candidate_id).  Zero Python."
     ),
     "triples_salted": (
-        "build_triples: the entity link is a distinct-text map joined to "
-        "the candidates twice by broadcast.  Salted two-phase aggregation: partial agg on (subj,pred,obj,salt) "
+        "build_triples: each slot links inside the **Generate** above the "
+        "threshold join — three literal-map probes and a greatest per slot, "
+        "so only candidates above the threshold are linked and the link "
+        "needs no join or broadcast.  Salted two-phase aggregation: partial agg on (subj,pred,obj,salt) "
         "then final on (subj,pred,obj) — the explicit skew treatment for "
         "hot entities (AQE only fixes skewed *joins*)."
     ),
@@ -255,12 +257,12 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     sents = parse_sentences(synthesize_raw_documents(spark, SF))
-    cands = build_candidates(spark, sents)
-    lfs = make_fixture_lfs(FX.known_spouse_names(spark))
+    cands = build_candidates(sents)
+    lfs = make_fixture_lfs(FX.known_spouse_names())
     L = apply_lfs(cands, lfs)
     lm = LabelModel(m=len(lfs)).fit(*compute_O_arrow(L, m=len(lfs)))
     marg = lm.marginals(spark, L)
-    trip = build_triples(spark, cands, marg, n_salts=16)
+    trip = build_triples(cands, marg, n_salts=16)
 
     from snorkel_spark.operators.dedup import ngram_jaccard_pairs
     from snorkel_spark.operators.parser import with_ner_tags_join

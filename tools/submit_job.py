@@ -30,8 +30,8 @@ def main():
     from snorkel_spark.sources.interleaved import synthesize_raw_documents
 
     sents = parse_sentences(synthesize_raw_documents(spark, sf_dir))
-    cands = build_candidates(spark, sents)
-    L = apply_lfs(cands, make_fixture_lfs(FX.known_spouse_names(spark)))
+    cands = build_candidates(sents)
+    L = apply_lfs(cands, make_fixture_lfs(FX.known_spouse_names()))
     mv = majority_vote(L)
     print(json.dumps({"ok": True, "n_scored": mv.count()}))
     spark.stop()
