@@ -11,15 +11,18 @@ SURVEY.md §0 for provenance) as an idiomatic Spark 4 DataFrame pipeline:
 - labeling-function application → sparse long-form (candidate_id, lf_id,
   label) matrix
 - generative label model (matrix-completion / SGD over LF accuracies,
-  Snorkel-MeTaL formulation) fit from the O statistic, summed as
-  Arrow-batched per-partition partials plus one hash aggregate
+  Snorkel-MeTaL formulation) fit from the O statistic, counted per
+  distinct label pattern by two in-engine hash aggregates
 - entity linking against the driver-side alias dictionary, folded into
   literal maps each row probes in place; canonicalization, salted
   two-phase aggregation, triple materialization with lineage and
   checkpoint/resume.
 
-No per-row Python UDFs anywhere on the hot path — only built-in
-``pyspark.sql.functions``, pandas UDFs and ``mapInPandas``/``applyInPandas``.
+The default KG chain runs no Python on executors — only built-in
+``pyspark.sql.functions``.  Stages outside it that need Python (LFs
+without an expression twin, MinHash dedup, multimodal decoding, XML
+ingest, streaming state) are Arrow-batched pandas UDFs and
+``mapInPandas``/``applyInPandas``, never per-row UDFs.
 """
 
 import logging

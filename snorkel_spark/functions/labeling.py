@@ -189,7 +189,8 @@ def _between_contains(words: list[str]) -> Callable[[pd.DataFrame], pd.Series]:
     rgx = re.compile(r"(?:^| )(?:" + "|".join(map(re.escape, words)) + r")(?: |$)")
 
     def fn(pdf: pd.DataFrame) -> pd.Series:
-        return pdf["text_between"].str.contains(rgx)
+        # a null text_between abstains on its row, as in the expr twin
+        return pdf["text_between"].str.contains(rgx, na=False)
 
     return fn
 

@@ -4,13 +4,11 @@ The distributed piece of label-model training is the second-moment
 matrix ``O = E[ψ ψᵀ]`` where ψ is the {0,1} one-hot expansion of the
 label vector over (lf, class) pairs — dimension d = m·k (tiny).
 
-- ``compute_O_arrow`` — the distributed path, the treeAggregate-of-
-  partials shape north_star names: collect each candidate's votes
-  (groupBy + collect_list), then an Arrow-batched pass accumulates
-  per-partition partial outer-product sums in NumPy and emits them as
-  (i, j, partial_count) rows; a final tiny hash aggregation sums
-  partials.  Partial + final = two-phase aggregation; only d² integers
-  are collected.
+- ``compute_O_arrow`` — the distributed path, two hash aggregates in
+  the engine: each candidate's sorted set of ψ coordinates (its label
+  pattern), then the count of candidates per pattern.  Only the
+  distinct patterns (≤ 3^m for binary labels) reach the driver, which
+  expands each into its d×d block; no Python runs on executors.
 - ``compute_O_local`` — the NumPy oracle over a dense L.
 
 Both return the *count* matrix C (O = C / n) so equality checks between
@@ -22,10 +20,7 @@ Label index convention: binary labels {−1,+1} → class index {0,1} via
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,47 +43,35 @@ def psi_index(L: DataFrame, cardinality: int = 2) -> DataFrame:
 
 
 def compute_O_arrow(L: DataFrame, m: int, cardinality: int = 2) -> tuple[np.ndarray, int]:
-    """Two-phase partial aggregation of outer products via Arrow batches.
+    """The count matrix C = ΨᵀΨ and the labeled-candidate count n from
+    two in-engine aggregates over the long-form L.
 
-    Single action: each partition's partial pass also counts its rows
-    and emits the count as the sentinel cell (−1,−1), so ``n`` rides
-    the same job instead of a separate ``votes.count()`` that re-runs
-    the groupBy shuffle (guide §1.2: don't compute things twice).
+    Ψ's row depends only on the candidate's label *pattern* (its sorted
+    set of ψ coordinates), so the engine collects one row per distinct
+    pattern with its multiplicity — at most 3^m rows whatever the
+    corpus size — and the driver adds each pattern's count to its
+    block ``C[p × p]``.  ``collect_set`` counts a duplicated vote once,
+    as a {0,1} ψ does.
+
+    The name predates this plan (it was an Arrow-batched NumPy pass)
+    and stays because callers patch and import the module attribute
+    ``encoding.compute_O_arrow``.
     """
     d = m * cardinality
-    votes = (
+    patterns = (
         psi_index(L, cardinality)
         .groupBy("candidate_id")
-        .agg(F.collect_list("a").alias("coords"))
+        .agg(F.sort_array(F.collect_set("a")).alias("p"))
+        .groupBy("p")
+        .count()
+        .collect()
     )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = np.zeros((d, d), dtype=np.int64)
-        n_rows = 0
-        for pdf in batches:
-            for coords in pdf["coords"]:
-                idx = np.asarray(coords, dtype=np.int64)
-                acc[np.ix_(idx, idx)] += 1
-            n_rows += len(pdf)
-        if n_rows:
-            i, j = np.nonzero(acc)
-            yield pd.DataFrame(
-                {
-                    "i": np.append(i, -1).astype("int32"),
-                    "j": np.append(j, -1).astype("int32"),
-                    "cnt": np.append(acc[i, j], n_rows),
-                }
-            )
-
-    parts = votes.mapInPandas(partials, "i int, j int, cnt long")
-    cells = parts.groupBy("i", "j").agg(F.sum("cnt").alias("cnt")).collect()
     C = np.zeros((d, d), dtype=np.int64)
     n = 0
-    for r in cells:
-        if r["i"] < 0:
-            n = int(r["cnt"])
-        else:
-            C[r["i"], r["j"]] = r["cnt"]
+    for r in patterns:
+        idx = np.asarray(r["p"], dtype=np.int64)
+        C[np.ix_(idx, idx)] += r["count"]
+        n += r["count"]
     return C, n
 
 

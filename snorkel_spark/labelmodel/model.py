@@ -65,7 +65,7 @@ class LabelModel:
         Exact additive projection (closed form for a single linear
         constraint per row), then box clip.  Leave OFF (default) when
         O's denominator counts only LABELED candidates (the long-form
-        ``compute_O_arrow`` path): conditioning on 'some LF fired'
+        ``compute_O_arrow`` pattern counts): conditioning on 'some LF fired'
         is a collider that shifts the observed vote rates, and pinning
         μ to them then biases the accuracies the slack would absorb.
         """

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import time
 from dataclasses import dataclass, field
 
@@ -32,6 +33,21 @@ from ..storage import Catalog
 
 def config_hash(cfg: dict) -> str:
     return hashlib.md5(json.dumps(cfg, sort_keys=True, default=str).encode()).hexdigest()[:12]
+
+
+def _input_listing(path: str) -> list[list]:
+    """``[relative name, size, mtime_ns]`` of every file under ``path``
+    (a file or a directory), sorted — keys a stage on its input files,
+    so a rewritten input never resumes a stale snapshot."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return [[os.path.basename(path), st.st_size, st.st_mtime_ns]]
+    out = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append([os.path.relpath(os.path.join(d, f), path), st.st_size, st.st_mtime_ns])
+    return sorted(out)
 
 
 @dataclass
@@ -175,7 +191,11 @@ def run_kg_pipeline(
     parse_fn = parse_sentences if parser == "whitespace" else parse_sentences_full
 
     ctx = PipelineContext(spark, catalog, config={
-        "sentences": {"sf_dir": sf_dir, "parser": parser},
+        "sentences": {
+            "sf_dir": sf_dir,
+            "parser": parser,
+            "documents": _input_listing(f"{sf_dir}/documents.parquet"),
+        },
         "candidates": {"n_max": n_max},
         "triples": {"threshold": threshold, "n_salts": n_salts},
     })

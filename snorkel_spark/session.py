@@ -54,19 +54,13 @@ def get_spark(
         "SPARK_GRAFT_LOCAL_DIR",
         "/dev/shm/spark_local" if os.path.isdir("/dev/shm") else None,
     )
-    # Preload pandas/NumPy/Arrow in the worker DAEMON so every forked
-    # worker inherits them copy-on-write (snorkel_spark/pydaemon.py) —
-    # cuts Python-stage cold start from ~1–2 s (per-worker imports) to
-    # the fork latency.  The daemon module must be importable by the
-    # worker python: export the repo root on PYTHONPATH for the local
-    # JVM (inherited by the daemon it spawns) and via executorEnv for
-    # clusters.
-    _pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _pp = os.environ.get("PYTHONPATH", "")
-    if _pkg_root not in _pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _pkg_root + (os.pathsep + _pp if _pp else "")
-        )
+    # The KG chain runs no Python on executors; Python stages outside it
+    # (pandas-only LFs, MinHash, streaming) unpickle closures that import
+    # this package, so the worker must find it.  Only the workers' env is
+    # set — the driver process's own PYTHONPATH is left alone — and an
+    # entry that does not exist on a cluster node is simply skipped
+    # (there ``spark-submit --py-files`` ships the package).
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -77,16 +71,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        .config("spark.python.daemon.module", "snorkel_spark.pydaemon")
-        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.executorEnv.PYTHONPATH", pkg_root)
         # NOTE on spark.python.worker.idleTimeoutSeconds: an aggressive
         # idle-kill (1 s + killOnIdleTimeout) was tried to drain
         # resident worker pools (OPTIMIZATION_r06.md §8b) and REVERTED:
         # the kill races with worker reuse ("Python worker exited
         # unexpectedly"), and local mode's task.maxFailures=1 turns
         # that race into a job failure.  It also showed no measurable
-        # bench benefit — the narrow pool from the 1-worker session
-        # warm-up is the effective mitigation.
+        # bench benefit.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -98,7 +90,6 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    _warm_python_workers(spark)
     _warm_engine(spark)
     return spark
 
@@ -154,31 +145,3 @@ def _warm_engine(spark: SparkSession) -> None:
     except Exception as e:  # best-effort: never block the session
         log.warning("engine warm-up failed: %r", e)
 
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Start the preloaded worker daemon (snorkel_spark/pydaemon.py)
-    and ONE worker at session creation, so the first real Python stage
-    measures its computation rather than daemon+import latency (guide
-    §4.5).  Deliberately a single partition: subsequent workers fork
-    from the daemon's preloaded image in milliseconds, and a session
-    must NOT hold a wide pool of resident idle workers — measured here,
-    32 idle workers attached to one session slow a CONCURRENT Spark
-    application on the same box ~1.8× (the bench's cold-vs-cold
-    subprocess runs exactly that way).  Guarded by a session conf flag
-    so repeated ``get_spark`` calls in one process warm only once."""
-    try:
-        if spark.conf.get("spark.snorkel.pythonWorkersWarm", None):
-            return
-    except Exception as e:
-        log.warning("Python worker warm-up: session conf unreadable: %r", e)
-
-    def _touch(batches):
-        import pandas as _pd
-        for pdf in batches:
-            yield _pd.DataFrame({"id": pdf["id"][:0]})
-
-    try:
-        spark.range(0, 1, 1, 1).mapInPandas(_touch, "id long").count()
-        spark.conf.set("spark.snorkel.pythonWorkersWarm", "1")
-    except Exception as e:  # best-effort: never block the session
-        log.warning("Python worker warm-up failed: %r", e)

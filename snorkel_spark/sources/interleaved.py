@@ -85,14 +85,16 @@ def synthesize_raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.explain('formatted')``: a single project over the parquet scan,
     no shuffle, no Python).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # the columns read have a fixed schema, so the read runs no
+    # footer-inference job
+    docs = spark.read.schema("doc_id bigint, text string").parquet(f"{sf_dir}/documents.parquet")
     # batched withColumns: each withColumn() call is a full analysis
     # pass over the growing plan on the driver — grouping the
     # independent columns into three dependency levels cuts the
     # plan-build latency without touching the executed plan (Catalyst
     # collapses adjacent Projects either way).
     return (
-        docs.select(F.col("doc_id").cast("bigint").alias("_did"), "text")
+        docs.select(F.col("doc_id").alias("_did"), "text")
         .withColumns(
             {
                 "_toks": F.split("text", " "),

@@ -125,3 +125,29 @@ def test_expr_noise_lf_abstains_on_non_numeric_doc_id(spark, fixture_lfs):
     fast = {tuple(r) for r in apply_lfs(rows, fixture_lfs).collect()}
     slow = {tuple(r) for r in apply_lfs(rows, pandas_lfs).collect()}
     assert fast == slow == {("c1", 0, 1), ("c1", 5, 1)}
+
+
+def test_pandas_path_abstains_per_row_on_null_text_between(spark, fixture_lfs):
+    """A null text_between makes the between-word LFs abstain on that row
+    only, on the pandas path as in the expr twins: no LF fails its batch."""
+    import dataclasses
+
+    from snorkel_spark.functions.labeling import make_lf_error_counters
+
+    rows = spark.createDataFrame(
+        [
+            ("c1", "7", "anna lee", "bob kim", "was married to"),
+            ("c2", "8", "anna lee", "bob kim", None),
+            ("c3", "9", "ann cho", "ann cho", "brother of the wife of"),
+        ],
+        "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
+    )
+    pandas_lfs = [dataclasses.replace(lf, expr=None) for lf in fixture_lfs]
+    counters = make_lf_error_counters(spark, pandas_lfs)
+    slow = {tuple(r) for r in apply_lfs(rows, pandas_lfs, error_counters=counters).collect()}
+    fast = {
+        tuple(r)
+        for r in apply_lfs_columnar(rows, {lf.lf_id: lf.expr for lf in fixture_lfs}).collect()
+    }
+    assert slow == fast
+    assert {lf_id: c.value for lf_id, c in counters.items()} == {lf.lf_id: 0 for lf in fixture_lfs}

@@ -36,6 +36,9 @@ def test_O_paths_agree(spark, synth):
     # the long form only sees labeled candidates — O cells identical.
     assert np.array_equal(C1, C2)
     assert n1 == int((L_dense != 0).any(axis=1).sum())
+    # a duplicated (candidate_id, lf_id, label) row is one vote, as in ψ
+    C3, n3 = compute_O_arrow(sdf.unionByName(sdf.filter("lf_id = 0")), m=6)
+    assert np.array_equal(C3, C1) and n3 == n1
 
 
 def test_accuracy_recovery(spark, synth):

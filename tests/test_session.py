@@ -1,10 +1,15 @@
-"""Session factory: best-effort warm-ups fail loudly, never fatally."""
+"""Session factory: the best-effort warm-up fails loudly, never
+fatally; Python workers import the package without the driver's
+PYTHONPATH being touched."""
 
 import logging
+import os
+import subprocess
+import sys
 
 
 class _BrokenSession:
-    """Enough of a SparkSession for the warm-ups to reach their work,
+    """Enough of a SparkSession for the warm-up to reach its work,
     which then fails."""
 
     class conf:
@@ -17,11 +22,46 @@ class _BrokenSession:
 
 
 def test_warm_up_failure_logs_warning(caplog):
-    from snorkel_spark.session import _warm_engine, _warm_python_workers
+    from snorkel_spark.session import _warm_engine
 
     with caplog.at_level(logging.WARNING, logger="snorkel_spark"):
         _warm_engine(_BrokenSession())  # returns instead of raising
-        _warm_python_workers(_BrokenSession())
     msgs = [r.getMessage() for r in caplog.records if r.name == "snorkel_spark"]
-    assert len(msgs) == 2, msgs
-    assert all("warm-up failed" in m and "engine unavailable" in m for m in msgs)
+    assert len(msgs) == 1, msgs
+    assert "warm-up failed" in msgs[0] and "engine unavailable" in msgs[0]
+
+
+# Runs in a fresh interpreter whose cwd is not the repo and whose
+# environment has no PYTHONPATH: only sys.path (driver-side) finds the
+# package, so a Python worker can import it only through the session.
+_WORKER_IMPORTS = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import dataclasses, os
+from snorkel_spark.functions.labeling import apply_lfs, make_fixture_lfs
+from snorkel_spark.session import get_spark
+from snorkel_spark.sources import fixtures as FX
+
+spark = get_spark(cores=2)
+assert "PYTHONPATH" not in os.environ, os.environ["PYTHONPATH"]
+rows = spark.createDataFrame(
+    [("c1", "7", "anna1 lee1", "bob10 kim10", "married"),
+     ("c2", "8", "anna2 lee2", "bob17 kim17", "brother of")],
+    "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
+)
+lfs = make_fixture_lfs(FX.known_spouse_names())
+fast = {tuple(r) for r in apply_lfs(rows, lfs).collect()}
+slow = {tuple(r) for r in apply_lfs(rows, [dataclasses.replace(lf, expr=None) for lf in lfs]).collect()}
+assert fast == slow and fast, (fast, slow)
+spark.stop()
+"""
+
+
+def test_python_workers_import_package_without_driver_pythonpath(tmp_path):
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _WORKER_IMPORTS, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
