@@ -84,8 +84,10 @@ def lf_pattern_counts(
     in lexicographic order so any float reduction downstream is
     order-stable across engines/partitionings.
     """
+    # one vote per (candidate, LF): a duplicated label row must not
+    # count twice; no otherwise(0), or max(0, -1) would drop a −1 vote
     vote_cols = [
-        F.sum(F.when(F.col("lf_id") == k, F.col("label")).otherwise(0))
+        F.coalesce(F.max(F.when(F.col("lf_id") == k, F.col("label"))), F.lit(0))
         .cast("int")
         .alias(f"v{k}")
         for k in range(m)

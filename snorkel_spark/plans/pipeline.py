@@ -19,11 +19,13 @@ Design:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +35,22 @@ from ..storage import Catalog
 
 def config_hash(cfg: dict) -> str:
     return hashlib.md5(json.dumps(cfg, sort_keys=True, default=str).encode()).hexdigest()[:12]
+
+
+@functools.cache
+def source_fingerprint() -> str:
+    """md5 of the sorted relative paths and bytes of the package's
+    ``*.py`` files, computed once per process.  Folded into every
+    stage's config hash, so a code change never resumes a snapshot the
+    old code wrote.  The whole package, not each builder: a builder's
+    behaviour lives in operators across it."""
+    root = Path(__file__).resolve().parents[1]
+    if not root.is_dir():  # imported from a zip (--py-files): hash the archive
+        return hashlib.md5(root.parent.read_bytes()).hexdigest()[:12]
+    h = hashlib.md5()
+    for p in sorted(root.rglob("*.py")):
+        h.update(p.relative_to(root).as_posix().encode() + b"\0" + p.read_bytes())
+    return h.hexdigest()[:12]
 
 
 def _input_listing(path: str) -> list[list]:
@@ -60,7 +78,9 @@ class PipelineContext:
         return {
             "stage": stage,
             "inputs": {k: int(v) for k, v in sorted(inputs.items())},
-            "config_hash": config_hash(self.config.get(stage, {})),
+            "config_hash": config_hash(
+                {"config": self.config.get(stage, {}), "source": source_fingerprint()}
+            ),
         }
 
     def find_completed(self, stage: str, inputs: dict[str, int]) -> int | None:
@@ -221,7 +241,7 @@ def run_kg_pipeline(
     # keyed on the LFs actually applied, so a changed LF set never
     # resumes from a label matrix an older set produced
     ctx.config["label_matrix"] = {
-        "lfs": [(lf.lf_id, lf.name, lf.sql, str(lf.expr)) for lf in lfs]
+        "lfs": [(lf.lf_id, lf.name, str(lf.fn)) for lf in lfs]
     }
     L, s3 = stage("label_matrix", {"candidates": s2}, lambda: apply_lfs(cands, lfs))
     if stop_after == "label_matrix":

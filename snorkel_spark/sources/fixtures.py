@@ -17,9 +17,6 @@ from pyspark.sql import functions as F
 
 from .interleaved import N_ENTITIES
 
-SPOUSE_WORDS = ["married", "wife", "husband", "spouse", "wedded"]
-FAMILY_WORDS = ["brother", "sister", "father", "mother", "son", "cousin"]
-
 # M of N: the planted obj entity index as a function of the subj index.
 _EJ = f"cast(if((7*id+3) % {N_ENTITIES} = id, (id+1) % {N_ENTITIES}, (7*id+3) % {N_ENTITIES}) as int)"
 

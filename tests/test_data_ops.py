@@ -1,5 +1,8 @@
 """Dedup / similarity / textstats / multimodal operators."""
 
+import contextlib
+import io
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -565,3 +568,434 @@ def test_lsh_duplicate_doc_id_rows_no_self_pairs(spark, docs):
     doubled = docs.limit(20).unionByName(docs.limit(20))
     pairs = ngram_jaccard_pairs(doubled, threshold=0.0, n_hashes=16, n_bands=8)
     assert pairs.filter("doc_a >= doc_b").count() == 0
+
+
+# ------------------------------------------------- span dedup (Lee'22)
+def test_span_dedup_planted_cross_doc(spark, docs):
+    from snorkel_spark.operators.dedup import span_dedup_flags
+    from snorkel_spark.sources.fixtures import docs_with_planted_spans
+
+    flagged = span_dedup_flags(
+        docs_with_planted_spans(docs), span_tokens=12, stride=6
+    ).toPandas().set_index("doc_id")
+    planted = [d for d in flagged.index if int(d) % 7 == 0]
+    clean = [d for d in flagged.index if int(d) % 7 != 0]
+    assert planted and clean
+    # the 25-token shared prefix fully contains the strided 12-token
+    # windows at offsets 1, 7 and 13 → ≥ 3 cross-doc duplicated
+    # windows per planted doc
+    for d in planted:
+        assert flagged.loc[d, "n_dup_spans"] >= 3, d
+    # unplanted docs can still share spans (the corpus re-plants the
+    # same relation sentence for entity index N = doc_id % 137), but
+    # most of each doc is per-doc salad: the bulk must be flag-free
+    n_hit = sum(1 for d in clean if flagged.loc[d, "n_dup_spans"] > 0)
+    assert n_hit < len(clean) // 4
+
+
+def test_span_dedup_short_doc_and_same_doc(spark):
+    from snorkel_spark.operators.dedup import span_dedup_flags
+
+    df = spark.createDataFrame(
+        [
+            ("1", "too short to window"),  # < k tokens → no rows
+            ("2", "a b c d e f a b c d e f"),  # same span twice IN one doc
+            ("3", "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10"),
+        ],
+        "doc_id string, text string",
+    )
+    got = {
+        r["doc_id"]: (r["n_spans"], r["n_dup_spans"])
+        for r in span_dedup_flags(df, span_tokens=6, stride=6).collect()
+    }
+    assert "1" not in got  # 4 tokens < 6 → no full window
+    assert got["2"] == (2, 2)  # windows at 1 and 7 are identical
+    assert got["3"] == (1, 0)
+
+
+# -------------------------------------------- pack_sequences auto-shard
+def test_auto_n_shards_growth_rule():
+    from snorkel_spark.operators.textstats import auto_n_shards
+
+    t = 100_000_000
+    assert auto_n_shards(0, target_tokens_per_shard=t) == 16
+    assert auto_n_shards(10 * t, target_tokens_per_shard=t) == 16  # min clamp
+    assert auto_n_shards(5_000 * t, target_tokens_per_shard=t) == 5_000
+    # monotone growth: 100× corpus → 100× shards (per-shard sort size
+    # is held constant, unlike a fixed default)
+    assert auto_n_shards(500_000 * t, t) == 100 * auto_n_shards(5_000 * t, t)
+    # cap keeps shard·2^40 seq_id packing inside a signed long
+    assert auto_n_shards(10**18, target_tokens_per_shard=1) == 1 << 20
+
+
+def test_pack_sequences_auto_matches_explicit(spark, docs):
+    from snorkel_spark.operators.textstats import auto_n_shards, pack_sequences
+
+    total = docs.select(
+        F.sum(F.size(F.split("text", " ")))
+    ).first()[0]
+    want_shards = auto_n_shards(total, target_tokens_per_shard=1000)
+    assert want_shards > 16  # the auto value actually engaged at this sf
+    auto = pack_sequences(
+        docs, max_tokens=128, n_shards=None, target_tokens_per_shard=1000
+    ).toPandas().sort_values("doc_id").reset_index(drop=True)
+    explicit = pack_sequences(
+        docs, max_tokens=128, n_shards=want_shards
+    ).toPandas().sort_values("doc_id").reset_index(drop=True)
+    assert auto.equals(explicit)
+    # packing invariants under the auto shard count
+    assert (auto["offset_in_seq"] < 128).all()
+    assert (auto["shard"] < want_shards).all()
+    assert auto["doc_id"].nunique() == len(auto)
+
+
+# -------------------------------------------------- top_terms plan shape
+def test_top_terms_plans_as_take_ordered(spark, docs):
+    from snorkel_spark.operators.textstats import top_terms
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        top_terms(docs, k=20).explain(True)
+    plan = buf.getvalue()
+    # global top-k must be a per-partition heap + driver merge, never a
+    # single-partition exchange of the |vocab|-row aggregate
+    assert "TakeOrdered" in plan
+    got = top_terms(docs, k=5).collect()
+    assert [r["rank"] for r in got] == [1, 2, 3, 4, 5]
+    freqs = [r["doc_freq"] for r in got]
+    assert freqs == sorted(freqs, reverse=True)
+
+
+# ------------------------------------- CC convergence confirmation round
+def _path_pairs(spark, nodes):
+    return spark.createDataFrame(
+        [(a, b) for a, b in zip(nodes, nodes[1:])], "doc_a string, doc_b string"
+    )
+
+
+def test_cc_converges_exactly_at_max_iter(spark):
+    """A 5-node path needs exactly 4 propagation rounds; with
+    max_iter=4 the final round still reports changes (it changed labels
+    INTO the fixpoint), so the guard must confirm with one extra round
+    instead of false-positively raising."""
+    from snorkel_spark.operators.dedup import connected_components
+
+    nodes = ["a", "b", "c", "d", "e"]
+    got = connected_components(_path_pairs(spark, nodes), max_iter=4)
+    assert {(r["node"], r["component"]) for r in got.collect()} == {
+        (n, "a") for n in nodes
+    }
+
+
+def test_cc_still_raises_when_genuinely_unconverged(spark):
+    from snorkel_spark.operators.dedup import connected_components
+
+    nodes = [f"n{i:02d}" for i in range(8)]  # diameter 7
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_path_pairs(spark, nodes), max_iter=2)
+
+
+def test_bmp_ppm_roundtrip():
+    """encode→decode is the identity on pixels for both real codecs,
+    including BMP's padded-row case (w=3 → stride 12 ≠ 9)."""
+    import numpy as np
+    from snorkel_spark.operators.multimodal import (
+        decode_media, encode_bmp, encode_ppm,
+    )
+
+    rng = np.random.default_rng(7)
+    for h, w in [(2, 2), (3, 3), (5, 7)]:
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        fmt, back = decode_media(encode_bmp(img))
+        assert fmt == "bmp" and back.shape == (h, w, 3)
+        assert (back == img).all()
+        fmt, back = decode_media(encode_ppm(img))
+        assert fmt == "ppm" and back.shape == (h, w, 3)
+        assert (back == img).all()
+    with pytest.raises(NotImplementedError):
+        decode_media(b"\x89PNG\r\n\x1a\n....")  # compressed: honest raise
+
+
+def test_decode_images_spark(spark):
+    """The Arrow-batched decode path on a mixed corpus: real BMP + PPM
+    payloads decode to exact dims/means; a poison payload is skipped
+    under the default policy and raises under on_error='raise'."""
+    import numpy as np
+    from snorkel_spark.operators.multimodal import (
+        decode_images, encode_bmp, encode_ppm,
+    )
+
+    solid = np.full((4, 6, 3), (10, 200, 30), dtype=np.uint8)
+    grad = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
+    rows = [
+        ("d1", "media://a.bmp", "image", bytearray(encode_bmp(solid)), 0),
+        ("d2", "media://b.ppm", "image", bytearray(encode_ppm(grad)), 0),
+        ("d3", "media://c.png", "image", bytearray(b"\x89PNG poison"), 0),
+    ]
+    m = spark.createDataFrame(rows, "doc_id string, media_ref string, kind string, payload binary, n_bytes int")
+    got = {r["media_ref"]: r for r in decode_images(m).collect()}
+    assert set(got) == {"media://a.bmp", "media://b.ppm"}
+    a = got["media://a.bmp"]
+    assert (a["format"], a["width"], a["height"]) == ("bmp", 6, 4)
+    assert (a["mean_r"], a["mean_g"], a["mean_b"]) == (10000, 200000, 30000)
+    b = got["media://b.ppm"]
+    assert (b["format"], b["width"], b["height"]) == ("ppm", 3, 2)
+    assert b["mean_r"] == int(grad[:, :, 0].mean() * 1000)
+    with pytest.raises(Exception):
+        decode_images(m, on_error="raise").collect()
+
+
+def test_gopher_rules_per_rule(spark):
+    """Each MassiveText rule (Rae et al. 2021 §A1.1) trips on exactly
+    the doc constructed to violate it and only that rule; a clean doc
+    passes all seven.  min_words lowered so the tiny fixtures are
+    in-range for every rule except the one under test."""
+    from snorkel_spark.operators.textstats import gopher_rules
+
+    good = ("the cat and the dog have to be there with food . " * 3).strip()
+    docs = [
+        ("ok", good),
+        ("short", "the cat and dogs"),                       # word-count
+        ("longword", good + " " + "z" * 4000),               # mean-word-len
+        ("symbols", good + " ### ### ### # #"),              # symbol-ratio
+        ("bullets", "the cat and" + "\n- b" * 30),           # bullet-lines
+        ("ellipsis", "the cat and" + "\nfades..." * 30),     # ellipsis-lines
+        ("nonalpha", good + (" 123" * 40)),                  # alpha-words
+        ("nostop", "cats dogs eat food . " * 6),             # stopwords
+    ]
+    out = {
+        r["doc_id"]: r
+        for r in gopher_rules(
+            spark.createDataFrame(docs, "doc_id string, text string"),
+            min_words=10,
+        ).collect()
+    }
+    rules = ["r_word_count", "r_mean_word_len", "r_symbol_ratio",
+             "r_bullet_lines", "r_ellipsis_lines", "r_alpha_words",
+             "r_stopwords"]
+    assert all(out["ok"][r] == 1 for r in rules) and out["ok"]["keep"] == 1
+    failing = {
+        "short": "r_word_count", "longword": "r_mean_word_len",
+        "symbols": "r_symbol_ratio", "bullets": "r_bullet_lines",
+        "ellipsis": "r_ellipsis_lines", "nonalpha": "r_alpha_words",
+        "nostop": "r_stopwords",
+    }
+    for doc_id, bad_rule in failing.items():
+        row = out[doc_id]
+        assert row[bad_rule] == 0, f"{doc_id} should fail {bad_rule}: {row}"
+        assert row["keep"] == 0
+
+
+def test_mixture_sample_exact_and_deterministic(spark):
+    """The keep decision is exactly md5(doc_id‖salt)-derived: expected
+    u_ppm recomputed in Python; rate-1.0 keeps all, weight-0 and
+    unknown-source rows drop; a different salt draws an independent
+    (different) sample of the same table."""
+    import hashlib
+
+    from snorkel_spark.operators.textstats import mixture_sample
+
+    rows = [(str(i), "a" if i < 10 else ("b" if i < 20 else "zz"))
+            for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id string, source string")
+
+    def u(doc_id, salt="mix"):
+        return int(hashlib.md5(f"{doc_id}:{salt}".encode()).hexdigest()[:12], 16) % 1_000_000
+
+    got = {r["doc_id"]: r for r in
+           mixture_sample(docs, {"a": 1_000_000, "b": 500_000}).collect()}
+    expect = {d for d, s in rows
+              if (s == "a") or (s == "b" and u(d) < 500_000)}
+    assert set(got) == expect            # zz (unknown) all dropped
+    for d in expect:
+        assert got[d]["u_ppm"] == u(d)
+    again = {r["doc_id"] for r in
+             mixture_sample(docs, {"a": 1_000_000, "b": 500_000}).collect()}
+    assert again == expect               # content-stable re-run
+    other = {r["doc_id"] for r in
+             mixture_sample(docs, {"b": 500_000}, salt="mix2").collect()}
+    b_mix2 = {d for d, s in rows if s == "b" and u(d, "mix2") < 500_000}
+    assert other == b_mix2 and other != (expect - {str(i) for i in range(10)})
+
+
+def test_unigram_surprisal_hand_computed(spark):
+    """bits(tok) = ⌊log₂⌊N/c⌋⌋ against hand counts, and the vocab_k cut
+    actually bites: an out-of-vocab token scores as count=1."""
+    from snorkel_spark.operators.textstats import unigram_surprisal
+
+    docs = spark.createDataFrame(
+        [("d1", "a a b b a"), ("d2", "b c")], "doc_id string, text string"
+    )
+    # counts: a=3, b=3, c=1, N=7; bits: a=⌊log2(7//3=2)⌋=1, b=1, c=⌊log2 7⌋=2
+    full = {r["doc_id"]: r for r in unigram_surprisal(docs).collect()}
+    assert full["d1"]["n_tokens"] == 5
+    assert full["d1"]["mean_bits"] == 1.0          # (1+1+1+1+1)/5
+    assert full["d2"]["mean_bits"] == 1.5          # (1+2)/2
+    # vocab_k=1 keeps only 'a' (count desc, token asc tie-break):
+    # b becomes OOV -> treated as c=1 -> bits 2
+    cut = {r["doc_id"]: r for r in unigram_surprisal(docs, vocab_k=1).collect()}
+    assert cut["d2"]["mean_bits"] == 2.0           # (2+2)/2
+    assert cut["d1"]["mean_bits"] == 1.4           # (1,1,2,2,1)/5
+
+
+# ------------------------------------------------ SemDeDup (Abbas'23)
+def _np_semdedup(vecs, n_centroids, threshold):
+    """Independent NumPy reference of the semdedup spec: stride-sample
+    centroids, argmax-cosine assignment (ccos rounded to 6 dp), then
+    the per-cluster greedy sweep in (ccos ASC, id ASC) order."""
+    import numpy as np
+
+    n = len(vecs)
+    s = max(n // n_centroids, 1)
+    cids = [i * s for i in range(n_centroids) if i * s < n]
+
+    def cos(a, b):
+        a, b = np.asarray(a, float), np.asarray(b, float)
+        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
+
+    assign, ccos = {}, {}
+    for i in range(n):
+        best = max(cids, key=lambda c: (cos(vecs[i], vecs[c]), -c))
+        assign[i] = best
+        ccos[i] = round(cos(vecs[i], vecs[best]), 6)
+    dup = {}
+    for c in set(assign.values()):
+        members = sorted((i for i in assign if assign[i] == c),
+                         key=lambda i: (ccos[i], i))
+        for pos, i in enumerate(members):
+            dup[i] = any(
+                round(cos(vecs[i], vecs[j]), 6) >= threshold
+                for j in members[:pos]
+            )
+    return assign, ccos, dup
+
+
+def test_semdedup_matches_numpy_reference(spark):
+    import numpy as np
+
+    from snorkel_spark.operators.similarity import semdedup
+
+    rng = np.random.RandomState(11)
+    vecs = rng.randn(12, 6).round(3).astype(np.float32)
+    # plant a near-dup PAIR: row 9 ≈ row 3 (tiny perturbation), and an
+    # exact triple: rows 10, 11 == row 5
+    vecs[9] = vecs[3] + 0.001
+    vecs[10] = vecs[5]
+    vecs[11] = vecs[5]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(12)],
+        "vec_id int, embedding array<float>",
+    )
+    got = {r["vec_id"]: r for r in semdedup(df, n_centroids=3, threshold=0.95).collect()}
+    assign, ccos, dup = _np_semdedup([list(map(float, v)) for v in vecs], 3, 0.95)
+    assert set(got) == set(range(12))
+    for i in range(12):
+        assert got[i]["centroid_id"] == assign[i], i
+        assert abs(got[i]["ccos"] - ccos[i]) < 1e-6, i
+        assert got[i]["is_dup"] == dup[i], i
+    # the planted groups really did dedup: exactly one survivor each
+    for group in ([3, 9], [5, 10, 11]):
+        if len({assign[i] for i in group}) == 1:  # co-clustered
+            assert sum(not dup[i] for i in group) == 1
+
+
+def test_semdedup_keeps_furthest_from_centroid(spark):
+    """Paper semantics: among near-dups the survivor is the member with
+    the LOWEST cosine to its centroid (the 'edge' example)."""
+    import numpy as np
+
+    from snorkel_spark.operators.similarity import semdedup
+
+    base = np.array([1.0, 0.0, 0.0, 0.0])
+    near = np.array([0.9, 0.1, 0.0, 0.0])   # same dup group, further out
+    far = np.array([0.0, 0.0, 1.0, 0.0])    # second centroid's singleton
+    # n=4, k=2 -> stride 2 -> centroids at vec_id 0 and 2
+    rows = [(0, list(base)), (1, list(near / np.linalg.norm(near))),
+            (2, list(far)), (3, list(-far + np.array([0.0, 0.01, 0.0, 0.0])))]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows],
+        "vec_id int, embedding array<float>",
+    )
+    out = {r["vec_id"]: r for r in semdedup(df, n_centroids=2, threshold=0.95).collect()}
+    # 0 and 1 share centroid 0 and are ≥0.95-similar; 1 sits further
+    # from the centroid (ccos < 1) so 1 survives, 0 is pruned
+    assert out[0]["centroid_id"] == 0 and out[1]["centroid_id"] == 0
+    assert out[1]["ccos"] < out[0]["ccos"]
+    assert out[0]["is_dup"] is True and out[1]["is_dup"] is False
+    # singletons stay kept
+    assert out[2]["is_dup"] is False and out[3]["is_dup"] is False
+
+
+def test_auto_n_centroids_growth():
+    from snorkel_spark.operators.similarity import auto_n_centroids
+
+    assert auto_n_centroids(0) == 4
+    assert auto_n_centroids(1000, target_cluster=512) == 4   # min clamp
+    assert auto_n_centroids(1_000_000, target_cluster=512) == 1954
+    # 100x corpus -> 100x clusters, constant expected width
+    assert auto_n_centroids(100_000_000, target_cluster=512) == 195313
+
+
+# --------------------------------------- intra-doc line dedup (RefinedWeb)
+def test_dedup_lines_first_occurrence(spark):
+    from snorkel_spark.operators.dedup import dedup_lines
+
+    docs = spark.createDataFrame(
+        [("1", "A\nB\nA\nC\nB"), ("2", "x\ny"), ("3", "z\nz\nz")],
+        "doc_id string, text string",
+    )
+    out = {r["doc_id"]: r for r in dedup_lines(docs).collect()}
+    assert out["1"]["text_deduped"] == "A\nB\nC"
+    assert out["1"]["n_lines"] == 5 and out["1"]["n_dropped"] == 2
+    assert out["2"]["text_deduped"] == "x\ny" and out["2"]["n_dropped"] == 0
+    assert out["3"]["text_deduped"] == "z" and out["3"]["n_dropped"] == 2
+
+
+def test_dedup_lines_planted_fixture(spark, docs):
+    from snorkel_spark.operators.dedup import dedup_lines
+    from snorkel_spark.sources.fixtures import docs_with_repeated_lines
+
+    out = dedup_lines(docs_with_repeated_lines(docs)).collect()
+    for r in out:
+        expect = 2 if int(r["doc_id"]) % 5 == 0 else 1
+        assert r["n_lines"] == 5 and r["n_dropped"] == expect, r["doc_id"]
+
+
+# ------------------------------------------- cluster representatives
+def test_cluster_representatives_keep_longest(spark):
+    from snorkel_spark.operators.dedup import cluster_representatives
+
+    # two exact dups (same text -> same cluster, tie on length ->
+    # lowest doc_id wins), one longer near-dup joined via clusters
+    # arg, one singleton
+    docs = spark.createDataFrame(
+        [("10", "aa bb cc"), ("11", "aa bb cc"), ("12", "aa bb cc dd"),
+         ("13", "zz yy")],
+        "doc_id string, text string",
+    )
+    clusters = spark.createDataFrame(
+        [("10", "10"), ("11", "10"), ("12", "10")],
+        "doc_id string, cluster_id string",
+    )
+    out = {r["doc_id"]: r for r in
+           cluster_representatives(docs, clusters=clusters).collect()}
+    assert out["12"]["is_rep"] is True          # longest member
+    assert out["10"]["is_rep"] is False and out["11"]["is_rep"] is False
+    assert out["13"]["is_rep"] is True          # singleton keeps itself
+    assert out["13"]["cluster_id"] == "13"
+    # exactly one rep per cluster
+    reps = [r for r in out.values() if r["cluster_id"] == "10" and r["is_rep"]]
+    assert len(reps) == 1
+
+
+def test_cluster_representatives_end_to_end(spark, docs):
+    """Composed with the real clustering: every cluster has exactly one
+    representative and every doc is flagged."""
+    from snorkel_spark.operators.dedup import cluster_representatives
+
+    out = cluster_representatives(
+        docs, threshold=0.5, n_hashes=32, n_bands=16
+    ).toPandas()
+    assert len(out) == docs.count()
+    per = out.groupby("cluster_id")["is_rep"].sum()
+    assert (per == 1).all()

@@ -1,4 +1,5 @@
-"""A1 LF applier: Arrow path == columnar path; fault tolerance;
+"""A1 LF applier: the fixture LFs equal the DuckDB oracle, Column LFs
+run no Python, pandas LFs keep fault tolerance, mixed sets union;
 A4–A7 analytics sanity."""
 
 import pandas as pd
@@ -7,8 +8,59 @@ import pytest
 
 from snorkel_spark.functions.labeling import LF, apply_lfs, apply_lfs_columnar
 
+_ROWS_SCHEMA = (
+    "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string"
+)
 
-def test_arrow_equals_columnar(spark, candidates, label_matrix):
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _map_in_pandas_command(df) -> bytes:
+    """The pickled closure of the MapInPandas node in ``df``'s plan."""
+
+    def find(node):
+        if node.getClass().getSimpleName() == "MapInPandas":
+            return node
+        ch = node.children()
+        return next((r for r in (find(ch.apply(i)) for i in range(ch.size())) if r), None)
+
+    udf = find(df._jdf.queryExecution().analyzed()).functionExpr()
+    return bytes(udf.func().command().unsafeArray())
+
+
+def test_label_matrix_equals_oracle(label_matrix):
+    """The fixture LFs' label matrix equals the DuckDB LABEL_MATRIX CTE
+    row for row over the same documents."""
+    import duckdb
+
+    from snorkel_spark.oracle import PREFIX_LABELS
+    from tests.conftest import SF
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    want = con.execute(
+        PREFIX_LABELS + " SELECT candidate_id, lf_id, label FROM label_matrix"
+    ).fetchall()
+    con.close()
+    got = [tuple(r) for r in label_matrix.collect()]
+    assert len(got) > 0
+    assert sorted(got) == sorted(want)
+
+
+def test_column_lfs_plan_has_no_python_node(spark, fixture_lfs):
+    """Column LFs never cross into Python: over a plain in-memory frame
+    the applied matrix's executed plan is pure JVM."""
+    tiny = spark.createDataFrame([("c1", "7", "anna lee", "bob kim", "was married to")], _ROWS_SCHEMA)
+    plan = _executed_plan(apply_lfs(tiny, fixture_lfs))
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_regex_columns_equal_token_array_columns(spark, candidates, label_matrix):
+    """Two Column formulations of the fixture LFs agree: the regex on
+    ``text_between`` the fixture set runs, and array predicates on
+    ``tokens_between``."""
     from snorkel_spark.functions.labeling import FAMILY_WORDS, SPOUSE_WORDS
 
     exprs = {
@@ -26,10 +78,10 @@ def test_arrow_equals_columnar(spark, candidates, label_matrix):
             " when cast(doc_id as bigint) % 7 = 1 then -1 else 0 end"
         ),
     }
-    col = apply_lfs_columnar(candidates, exprs)
-    arrow = label_matrix.filter(F.col("lf_id") != 3)  # DS LF not in columnar set
-    assert col.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(col).count() == 0
+    arrays = apply_lfs_columnar(candidates, exprs)
+    regex = label_matrix.filter(F.col("lf_id") != 3)  # DS LF not in the array set
+    assert arrays.exceptAll(regex).count() == 0
+    assert regex.exceptAll(arrays).count() == 0
 
 
 def test_fault_tolerance(candidates):
@@ -89,65 +141,67 @@ def test_lf_error_counters(spark, candidates):
     assert counters[1].value == 0
 
 
-def test_expr_fast_path_equals_pandas_path(spark, candidates, fixture_lfs):
-    """r06 optimization contract: when every LF carries a Catalyst
-    ``expr`` twin, apply_lfs runs entirely JVM-side — the emitted
-    long-form matrix must be row-identical to the Arrow/pandas path."""
-    import dataclasses
-
-    assert all(lf.expr is not None for lf in fixture_lfs)  # fast path active
-    pandas_lfs = [dataclasses.replace(lf, expr=None) for lf in fixture_lfs]
-    fast = apply_lfs(candidates, fixture_lfs)
-    slow = apply_lfs(candidates, pandas_lfs)
-    # the LF application itself must add NO Python node: over a plain
-    # in-memory frame the fast path's plan is pure JVM
-    tiny = spark.createDataFrame(
-        [("c1", "7", "anna lee", "bob kim", "was married to")],
-        "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
-    )
-    tplan = apply_lfs(tiny, fixture_lfs)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in tplan and "ArrowEvalPython" not in tplan
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-
-
 def test_expr_noise_lf_abstains_on_non_numeric_doc_id(spark, fixture_lfs):
-    """A non-numeric doc_id makes the noise LF abstain on the fast path,
-    as the fault-tolerant pandas path does, instead of failing the whole
-    job on an ANSI cast; the row's other LFs still vote."""
-    import dataclasses
-
-    rows = spark.createDataFrame(
-        [("c1", "doc-x", "anna lee", "bob kim", "married")],
-        "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
-    )
-    pandas_lfs = [dataclasses.replace(lf, expr=None) for lf in fixture_lfs]
-    fast = {tuple(r) for r in apply_lfs(rows, fixture_lfs).collect()}
-    slow = {tuple(r) for r in apply_lfs(rows, pandas_lfs).collect()}
-    assert fast == slow == {("c1", 0, 1), ("c1", 5, 1)}
+    """A non-numeric doc_id makes the noise LF abstain instead of failing
+    the whole job on an ANSI cast; the row's other LFs still vote."""
+    rows = spark.createDataFrame([("c1", "doc-x", "anna lee", "bob kim", "married")], _ROWS_SCHEMA)
+    got = {tuple(r) for r in apply_lfs(rows, fixture_lfs).collect()}
+    assert got == {("c1", 0, 1), ("c1", 5, 1)}
 
 
-def test_pandas_path_abstains_per_row_on_null_text_between(spark, fixture_lfs):
+def test_column_lfs_abstain_per_row_on_null_text_between(spark, fixture_lfs):
     """A null text_between makes the between-word LFs abstain on that row
-    only, on the pandas path as in the expr twins: no LF fails its batch."""
-    import dataclasses
-
-    from snorkel_spark.functions.labeling import make_lf_error_counters
-
+    only; the other rows and the other LFs still vote."""
     rows = spark.createDataFrame(
         [
             ("c1", "7", "anna lee", "bob kim", "was married to"),
             ("c2", "8", "anna lee", "bob kim", None),
             ("c3", "9", "ann cho", "ann cho", "brother of the wife of"),
         ],
-        "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string",
+        _ROWS_SCHEMA,
     )
-    pandas_lfs = [dataclasses.replace(lf, expr=None) for lf in fixture_lfs]
-    counters = make_lf_error_counters(spark, pandas_lfs)
-    slow = {tuple(r) for r in apply_lfs(rows, pandas_lfs, error_counters=counters).collect()}
-    fast = {
-        tuple(r)
-        for r in apply_lfs_columnar(rows, {lf.lf_id: lf.expr for lf in fixture_lfs}).collect()
+    got = {tuple(r) for r in apply_lfs(rows, fixture_lfs).collect()}
+    assert got == {
+        ("c1", 0, 1), ("c1", 5, 1), ("c1", 6, 1),
+        ("c2", 6, -1),
+        ("c3", 1, 1), ("c3", 2, -1), ("c3", 4, -1), ("c3", 5, 1),
     }
-    assert slow == fast
-    assert {lf_id: c.value for lf_id, c in counters.items()} == {lf.lf_id: 0 for lf in fixture_lfs}
+
+
+def test_mixed_lf_set_unions_column_and_pandas_lfs(spark):
+    """One Column LF, one pandas LF and one crashing pandas LF: the
+    matrix is the union of the two working LFs' rows, only the crashing
+    LF's counter moves, and the mapInPandas closure holds only the
+    pandas LFs.  A duplicate lf_id raises."""
+    from snorkel_spark.functions.labeling import LABEL_MATRIX_SCHEMA, make_lf_error_counters
+
+    rows = spark.createDataFrame(
+        [
+            ("c1", "7", "anna lee", "bob kim", "was married to"),
+            ("c2", "8", "ann cho", "ann cho", "and"),
+        ],
+        _ROWS_SCHEMA,
+    )
+
+    def boom(pdf: pd.DataFrame) -> pd.Series:
+        raise RuntimeError("lf crashed")
+
+    lfs = [
+        LF(0, "lf_col_married", F.when(F.col("text_between").contains("married"), 1).otherwise(0)),
+        LF(1, "lf_py_same", lambda p: -(p["subj_text"] == p["obj_text"]).astype(int)),
+        LF(2, "lf_py_boom", boom),
+    ]
+    counters = make_lf_error_counters(spark, lfs)
+    out = apply_lfs(rows, lfs, fault_tolerant=True, error_counters=counters)
+    assert {tuple(r) for r in out.collect()} == {("c1", 0, 1), ("c2", 1, -1)}
+    assert {k: c.value > 0 for k, c in counters.items()} == {0: False, 1: False, 2: True}
+    plan = _executed_plan(out)
+    assert plan.count("MapInPandas") == 1 and "Generate explode" in plan
+    cmd = _map_in_pandas_command(out)
+    assert b"lf_py_same" in cmd and b"lf_py_boom" in cmd and b"lf_col_married" not in cmd
+    # a duplicate lf_id would lose one LF's votes; an empty set is empty
+    with pytest.raises(ValueError, match="duplicate lf_id"):
+        apply_lfs(rows, [*lfs, LF(1, "lf_dup", F.lit(1))])
+    empty = apply_lfs(rows, [])
+    assert empty.schema == LABEL_MATRIX_SCHEMA and empty.count() == 0
+

@@ -151,6 +151,14 @@ def test_lf_pattern_counts_bounded_collect(spark):
     # same arrays as a generous cap (no behavior change when P < cap)
     p1, c1 = lf_pattern_counts(L, m, n_total=n, max_patterns=10**6)
     assert len(p1) == n and int(c1.sum()) == n
+    # one vote per (candidate, LF): a duplicated label row is one vote,
+    # and a −1 vote is kept beside the LFs that abstain
+    dup = spark.createDataFrame(
+        [("a", 0, 1), ("a", 0, 1), ("a", 1, -1), ("b", 1, -1), ("b", 1, -1)],
+        "candidate_id string, lf_id int, label int",
+    )
+    p2, c2 = lf_pattern_counts(dup, 3)
+    assert p2.tolist() == [[0, -1, 0], [1, -1, 0]] and c2.tolist() == [1, 1]
 
 
 # ------------------------------------------------------- KMV rollup

@@ -32,10 +32,10 @@ NOTES = {
         "token attach rides the same sentence_id partitioning ahead of it."
     ),
     "label_matrix": (
-        "r06: every fixture LF carries a Catalyst expr twin, so the matrix "
-        "is one JVM projection+explode+filter — NO Python node at all.  "
-        "LFs without an expr fall back to the Arrow-batched mapInPandas "
-        "applier over an explicitly narrowed projection."
+        "Every fixture LF is one Catalyst Column, so the matrix is one JVM "
+        "projection+explode+filter — NO Python node at all.  LFs with a "
+        "pandas body run in the Arrow-batched mapInPandas applier over an "
+        "explicitly narrowed projection, unioned with the Column part."
     ),
     "marginals": (
         "Scoring (r06): the m\u00b7k\u00b2 factor table is inlined as a literal "
