@@ -11,12 +11,19 @@ minimizing ‖mask ⊙ (O − μ P μᵀ)‖²_F.
 
 Division of labor (the architectural win over the reference —
 SURVEY.md §3.1 step E3):
-- distributed: O (two-phase aggregation, see encoding.py) — one pass.
+- distributed: the label-pattern counts (``encoding.label_patterns``,
+  two in-engine aggregates, ≤ 3^m rows) — one pass; O is expanded
+  from them on the driver.
 - driver: this module's pure-NumPy full-batch Adam on a (m·k)² problem
   — O(1) in corpus size, deterministic (no sampling anywhere), so
   hyperparameter search (G7) refits WITHOUT re-scanning the corpus.
-- distributed again: marginals = a broadcast-joined factor table +
+- distributed again: marginals = a literal factor map probed per label row +
   one hash aggregation — **no Python at all** on the scoring path.
+
+The dependency screens (G4) compare O with an expected second moment
+E — ``outer(diag, diag)`` for the marginal screen, a fit's μ̂Pμ̂ᵀ for
+the conditional and greedy ones — through one statistic,
+``block_deviation``: the per-LF-pair max |O − E|.
 """
 
 from __future__ import annotations
@@ -64,10 +71,12 @@ class LabelModel:
         dependencies (``select_dependencies_greedy`` turns it on).
         Exact additive projection (closed form for a single linear
         constraint per row), then box clip.  Leave OFF (default) when
-        O's denominator counts only LABELED candidates (the long-form
-        ``compute_O_arrow`` pattern counts): conditioning on 'some LF fired'
-        is a collider that shifts the observed vote rates, and pinning
-        μ to them then biases the accuracies the slack would absorb.
+        O's denominator counts only LABELED candidates — the ``n`` of
+        ``compute_O_arrow``, which sums the long-form label-pattern
+        counts and cannot see a candidate no LF voted on: conditioning
+        on 'some LF fired' is a collider that shifts the observed vote
+        rates, and pinning μ to them then biases the accuracies the
+        slack would absorb.
         """
         k = self.cardinality
         d = self.m * k
@@ -113,6 +122,10 @@ class LabelModel:
         self.mu = mu
         self.class_balance = p
         return self
+
+    def expected_O(self) -> np.ndarray:
+        """μ̂Pμ̂ᵀ — the second moment the fitted model implies."""
+        return self.mu @ np.diag(self.class_balance) @ self.mu.T
 
     # ---- G3: learned LF stats ---------------------------------------
     def learned_lf_stats(self) -> list[dict]:
@@ -253,26 +266,23 @@ def score_marginals(marginals: DataFrame, gold: DataFrame, b: float = 0.5) -> di
 
 
 # ---- G4: dependency selection -------------------------------------------
+def block_deviation(O: np.ndarray, E: np.ndarray, m: int, k: int) -> np.ndarray:
+    """Per-pair max |O − E| over each (j1, j2) off-diagonal LF block,
+    upper-triangular — the deviation statistic every screen uses, with
+    E the independence product ``outer(diag, diag)`` or a fit's μ̂Pμ̂ᵀ."""
+    return np.triu(np.abs(O - E).reshape(m, k, m, k).max(axis=(1, 3)), 1)
+
+
 def select_dependencies(
     C: np.ndarray, n: int, m: int, cardinality: int = 2, threshold: float = 0.05
 ) -> set[tuple[int, int]]:
     """Correlation screen on O (SURVEY.md §2.7 G4 v1 of the ICML'17
     structure learner): flag LF pairs whose joint-vote cell deviates
     from independence by > threshold."""
-    k = cardinality
     O = C.astype(np.float64) / max(n, 1)
     diag = np.diag(O)
-    deps: set[tuple[int, int]] = set()
-    for j1 in range(m):
-        for j2 in range(j1 + 1, m):
-            dev = 0.0
-            for c1 in range(k):
-                for c2 in range(k):
-                    a, b2 = j1 * k + c1, j2 * k + c2
-                    dev = max(dev, abs(O[a, b2] - diag[a] * diag[b2]))
-            if dev > threshold:
-                deps.add((j1, j2))
-    return deps
+    D = block_deviation(O, np.outer(diag, diag), m, cardinality)
+    return {(int(j1), int(j2)) for j1, j2 in zip(*np.nonzero(D > threshold))}
 
 
 def select_dependencies_conditional(
@@ -305,40 +315,15 @@ def select_dependencies_conditional(
     """
     k = cardinality
     O = C.astype(np.float64) / max(n, 1)
-    deps: set[tuple[int, int]] = set()
     dev = np.zeros((m, m))
     for j1 in range(m):
         for j2 in range(j1 + 1, m):
             lm = LabelModel(
                 m=m, cardinality=k, class_balance=class_balance, deps={(j1, j2)}
             ).fit(C, n)
-            expected = lm.mu @ np.diag(lm.class_balance) @ lm.mu.T
-            block = np.abs(
-                O[j1 * k : (j1 + 1) * k, j2 * k : (j2 + 1) * k]
-                - expected[j1 * k : (j1 + 1) * k, j2 * k : (j2 + 1) * k]
-            )
-            dev[j1, j2] = block.max()
-            if dev[j1, j2] > threshold:
-                deps.add((j1, j2))
+            dev[j1, j2] = block_deviation(O, lm.expected_O(), m, k)[j1, j2]
+    deps = {(int(j1), int(j2)) for j1, j2 in zip(*np.nonzero(dev > threshold))}
     return deps, dev
-
-
-def _block_dev_matrix(
-    O: np.ndarray, lm: "LabelModel", m: int, k: int
-) -> np.ndarray:
-    """Per-pair max |O − μ̂Pμ̂ᵀ| over the (j1, j2) off-diagonal block,
-    upper-triangular (the deviation statistic every screen uses)."""
-    expected = lm.mu @ np.diag(lm.class_balance) @ lm.mu.T
-    D = np.zeros((m, m))
-    for j1 in range(m):
-        for j2 in range(j1 + 1, m):
-            D[j1, j2] = float(
-                np.abs(
-                    O[j1 * k : (j1 + 1) * k, j2 * k : (j2 + 1) * k]
-                    - expected[j1 * k : (j1 + 1) * k, j2 * k : (j2 + 1) * k]
-                ).max()
-            )
-    return D
 
 
 def select_dependencies_greedy(
@@ -397,7 +382,7 @@ def select_dependencies_greedy(
         ).fit(C, n, constrain_coverage=True)
 
     while len(deps) < cap:
-        D = _block_dev_matrix(O, refit(), m, k)
+        D = block_deviation(O, refit().expected_O(), m, k)
         for (j1, j2) in deps:
             D[j1, j2] = -1.0
         worst = np.unravel_index(np.argmax(D), D.shape)
@@ -405,7 +390,7 @@ def select_dependencies_greedy(
             break
         deps.add((int(worst[0]), int(worst[1])))
     while deps:
-        D = _block_dev_matrix(O, refit(), m, k)
+        D = block_deviation(O, refit().expected_O(), m, k)
         weakest = min(deps, key=lambda pr: D[pr])
         if D[weakest] >= threshold:
             break

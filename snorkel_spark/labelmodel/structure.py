@@ -9,13 +9,14 @@ a dependency (j, k) whenever the learned correlation weight |θ_{jk}|
 clears a threshold (⚠ snorkel/learning/structure/gen_learning.py +
 synthetic.py, reconstructed — SURVEY.md §0).
 
-Spark-first division of labor — the same trick as the O statistics
-(encoding.py): for binary tasks the per-candidate contribution to the
-objective AND its exact gradient depend only on the candidate's vote
-row λ ∈ {−1, 0, +1}^m, so the whole corpus compresses losslessly into
-**distinct-pattern counts** — one distributed aggregation, at most
-min(n, 3^m) rows, in practice a handful (LFs are rule-like and
-correlated).  The driver then optimizes the EXACT weighted
+Spark-first division of labor — the same statistic as O: for binary
+tasks the per-candidate contribution to the objective AND its exact
+gradient depend only on the candidate's vote row λ ∈ {−1, 0, +1}^m, so
+the whole corpus compresses losslessly into **distinct-pattern
+counts** — ``encoding.label_patterns``, the aggregate O is expanded
+from, at most min(n, 3^m) rows, in practice a handful (LFs are
+rule-like and correlated), each decoded into its vote row on the
+driver.  The driver then optimizes the EXACT weighted
 pseudolikelihood — full-batch proximal gradient (ISTA) with the closed
 -form 6-configuration conditional (λ_j ∈ {−1,0,+1} × Y ∈ {−1,+1}) — so
 the result is deterministic (no sampling noise, unlike the reference's
@@ -36,6 +37,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .encoding import label_patterns
 
 
 def add_abstain_mass(
@@ -65,49 +68,39 @@ def lf_pattern_counts(
     n_total: int | None = None,
     max_patterns: int = 65536,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Compress the long-form label matrix (candidate_id, lf_id, label)
-    into (patterns (P, m) int8, counts (P,)) — the exact sufficient
-    statistics of the pseudolikelihood for binary tasks.
+    """Compress the long-form binary label matrix (candidate_id, lf_id,
+    label) into (patterns (P, m) int8, counts (P,)) — the exact
+    sufficient statistics of the pseudolikelihood for binary tasks.
 
-    Two aggregations: per-candidate vote-vector assembly (shuffle on
-    candidate_id — the matrix's natural key), then pattern counting
-    (shuffle on the m-vector; output ≤ min(n, 3^m) rows — a handful for
-    rule-like LF sets).  The driver collect is HARD-bounded by
-    ``max_patterns``: patterns are taken top-K by count (Spark plans
-    the orderBy+limit as TakeOrderedAndProject — per-partition top-K,
-    K·P-row merge, never a global sort), and if the matrix is more
-    diverse than the cap, the dropped tail's mass is folded into the
-    all-abstain pattern (an explicit, warned approximation — the exact
-    regime is len(patterns) < max_patterns, where no extra job runs).
+    Reads ``encoding.label_patterns``, the aggregate O is built from,
+    and decodes each ψ-coordinate set into its vote vector on the
+    driver.  Coordinates are sorted, so a conflicting duplicate vote
+    keeps the larger label, and vectors that decode alike are merged.
+    The driver collect is HARD-bounded by ``max_patterns``: patterns
+    are taken top-K by count (Spark plans the orderBy+limit as
+    TakeOrderedAndProject — per-partition top-K, K·P-row merge, never a
+    global sort), and if the matrix is more diverse than the cap, the
+    dropped tail's mass is folded into the all-abstain pattern (an
+    explicit, warned approximation — the exact regime is
+    len(patterns) < max_patterns, where no extra job runs).
     ``n_total`` (candidates including the never-voted) adds the
     all-abstain mass the long form cannot carry.  Patterns are returned
     in lexicographic order so any float reduction downstream is
     order-stable across engines/partitionings.
     """
-    # one vote per (candidate, LF): a duplicated label row must not
-    # count twice; no otherwise(0), or max(0, -1) would drop a −1 vote
-    vote_cols = [
-        F.coalesce(F.max(F.when(F.col("lf_id") == k, F.col("label"))), F.lit(0))
-        .cast("int")
-        .alias(f"v{k}")
-        for k in range(m)
-    ]
-    names = [f"v{k}" for k in range(m)]
-    per_cand = L.groupBy("candidate_id").agg(*vote_cols)
-    pc = per_cand.groupBy(*names).count()
-    pats = (
-        pc.orderBy(F.col("count").desc(), *[F.col(nm) for nm in names])
-        .limit(max_patterns)
-        .collect()
-    )
-    patterns = np.array(
-        [[r[nm] for nm in names] for r in pats], dtype=np.int8
-    ).reshape(len(pats), m)
-    counts = np.array([r["count"] for r in pats], dtype=np.int64)
-    if len(pats) == max_patterns:
+    pats = label_patterns(L, m)
+    rows = pats.orderBy(F.col("count").desc(), "p").limit(max_patterns).collect()
+    votes = np.zeros((len(rows), m), dtype=np.int8)
+    for i, r in enumerate(rows):
+        for a in r["p"]:  # ascending: a later (larger) label overwrites
+            votes[i, a // 2] = 2 * (a % 2) - 1
+    patterns, inv = np.unique(votes, axis=0, return_inverse=True)
+    counts = np.zeros(len(patterns), dtype=np.int64)
+    np.add.at(counts, inv.ravel(), [r["count"] for r in rows])
+    if len(rows) == max_patterns:
         # cap possibly hit: one extra scalar job tells us how much
         # pattern mass the top-K missed; fold it into all-abstain
-        n_voting = per_cand.count()
+        n_voting = pats.agg(F.sum("count")).first()[0]
         dropped = n_voting - int(counts.sum())
         if dropped > 0:
             import warnings

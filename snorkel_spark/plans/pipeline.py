@@ -4,10 +4,10 @@ north_rule: "checkpoints the label matrix and triple stages to Iceberg
 snapshots with per-partition lineage + metrics, resumable mid-run".
 
 Design:
-- every stage runs through ``run_stage``: skip iff a lineage row with
-  the same (stage, input_snapshot_ids, config_hash) points at an
-  existing snapshot (idempotent resume — deterministic content-hash ids
-  make re-runs produce identical bytes);
+- every stage runs through ``run_stage``: skip iff a committed
+  snapshot's manifest entry carries the same (stage,
+  input_snapshot_ids, config_hash) lineage key (idempotent resume —
+  deterministic content-hash ids make re-runs produce identical bytes);
 - per-partition metrics come from the written snapshot's **parquet
   footers** (Catalog.file_metrics) — metadata-only reads, so each stage
   output is scanned exactly once (by its own write); rows land in the
@@ -22,12 +22,13 @@ from __future__ import annotations
 import functools
 import hashlib
 import json
+import marshal
 import os
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import Catalog
@@ -68,6 +69,15 @@ def _input_listing(path: str) -> list[list]:
     return sorted(out)
 
 
+def _lf_body_key(fn) -> str:
+    """A Column by its expression; a callable by its qualified name and
+    bytecode md5 (``str`` of a function holds a per-process address)."""
+    if isinstance(fn, Column):
+        return str(fn)
+    code = hashlib.md5(marshal.dumps(fn.__code__)).hexdigest()[:12]
+    return f"{fn.__module__}.{fn.__qualname__}:{code}"
+
+
 @dataclass
 class PipelineContext:
     spark: SparkSession
@@ -84,16 +94,12 @@ class PipelineContext:
         }
 
     def find_completed(self, stage: str, inputs: dict[str, int]) -> int | None:
+        """The newest snapshot whose manifest entry (committed in the
+        same atomic swap as its data) carries this lineage key."""
         key = self._lineage_key(stage, inputs)
-        for row in reversed(self.catalog.lineage()):
-            if (
-                row.get("stage") == key["stage"]
-                and row.get("inputs") == key["inputs"]
-                and row.get("config_hash") == key["config_hash"]
-                and row.get("status") == "committed"
-                and self.catalog.exists(stage, row.get("snapshot_id"))
-            ):
-                return row["snapshot_id"]
+        for s in reversed(self.catalog.snapshots(stage)):
+            if s.get("meta") == key:
+                return s["snapshot_id"]
         return None
 
     def run_stage(
@@ -125,7 +131,6 @@ class PipelineContext:
             {
                 **self._lineage_key(stage, inputs),
                 "snapshot_id": snap,
-                "status": "committed",
                 "wall_ms": wall_ms,
                 "committed_at": time.time(),
             }
@@ -241,7 +246,7 @@ def run_kg_pipeline(
     # keyed on the LFs actually applied, so a changed LF set never
     # resumes from a label matrix an older set produced
     ctx.config["label_matrix"] = {
-        "lfs": [(lf.lf_id, lf.name, str(lf.fn)) for lf in lfs]
+        "lfs": [(lf.lf_id, lf.name, _lf_body_key(lf.fn)) for lf in lfs]
     }
     L, s3 = stage("label_matrix", {"candidates": s2}, lambda: apply_lfs(cands, lfs))
     if stop_after == "label_matrix":

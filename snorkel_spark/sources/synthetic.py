@@ -43,7 +43,6 @@ def make_synthetic_L(
     for (a, b) in dep_pairs or []:
         copy = (L[:, a] != 0) & (rng.random(n) < dep_strength)
         L[copy, b] = L[copy, a]
-    rows = []
     cand, lf = np.nonzero(L)
     L_long = pd.DataFrame(
         {

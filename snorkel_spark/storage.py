@@ -28,7 +28,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
@@ -66,7 +66,6 @@ class Catalog:
     """A warehouse root holding snapshot tables + lineage/metrics logs."""
 
     root: str
-    _manifests: dict = field(default_factory=dict, repr=False)
 
     def __post_init__(self):
         os.makedirs(self.root, exist_ok=True)

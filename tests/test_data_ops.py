@@ -999,3 +999,87 @@ def test_cluster_representatives_end_to_end(spark, docs):
     assert len(out) == docs.count()
     per = out.groupby("cluster_id")["is_rep"].sum()
     assert (per == 1).all()
+
+
+# ------------------------------------------------------- KMV rollup
+def test_kmv_shard_merge_equals_global(spark, docs):
+    from snorkel_spark.operators.sketches import kmv_shard_merge
+
+    row = kmv_shard_merge(docs, k=64, shingle_n=3, n_shards=8).collect()[0]
+    # bottom-k mergeability: per-shard sketches re-bottom-k'd give
+    # EXACTLY the global sketch
+    assert row["merged_estimate"] == row["global_estimate"]
+    assert row["k"] == 64 and row["n_shards"] == 8
+
+
+# ------------------------------------------ CC non-convergence guard
+def test_connected_components_raises_when_not_converged(spark):
+    from snorkel_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(6)],
+        "doc_a string, doc_b string",
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=1)
+    # and converges fine with the default bound
+    got = {r["node"]: r["component"] for r in connected_components(chain).collect()}
+    assert set(got.values()) == {"n00"}
+
+
+# ------------------------------------------------- C4 + packing
+def test_c4_line_filters_rules(spark, docs):
+    from snorkel_spark.operators.textstats import c4_line_filters
+    from snorkel_spark.sources.fixtures import docs_with_planted_lines
+
+    pages = docs_with_planted_lines(docs)
+    out = c4_line_filters(pages).cache()
+    rows = {r["doc_id"]: r for r in out.collect()}
+    n_docs = docs.count()
+    assert 0 < len(rows) < n_docs
+    for did, r in rows.items():
+        d = int(did)
+        # lorem-ipsum pages and 2-kept-line pages never survive
+        assert d % 97 != 0 and d % 11 != 0
+        assert r["n_lines"] == 6 and r["n_kept"] == 3
+        lines = r["clean_text"].split("\n")
+        # exactly the three planted keepable sentences, in order
+        assert lines[0].endswith(" one.") and lines[1].endswith(" two!")
+        assert lines[2].endswith(" three?")
+        for ln in lines:
+            assert "javascript" not in ln and "{" not in ln
+    # every non-planted-drop doc survives (word salad is long enough)
+    survivors = {int(d) for d in rows}
+    expect = {
+        r["doc_id"] for r in docs.select(F.col("doc_id").cast("bigint").alias("doc_id")).collect()
+        if r["doc_id"] % 97 != 0 and r["doc_id"] % 11 != 0
+    }
+    assert survivors == expect
+
+
+def test_pack_sequences_shape_and_budget(spark, docs):
+    from snorkel_spark.operators.textstats import pack_sequences
+
+    out = pack_sequences(docs, max_tokens=512, n_shards=16).cache()
+    rows = out.collect()
+    assert len(rows) == docs.count()
+    by_shard: dict = {}
+    for r in rows:
+        by_shard.setdefault(r["shard"], []).append(r)
+    assert len(by_shard) == 16
+    for shard, rs in by_shard.items():
+        rs.sort(key=lambda r: int(r["doc_id"]))
+        cum = 0
+        for r in rs:
+            # every doc STARTS inside its assigned sequence's budget
+            assert r["seq_id"] == shard * (1 << 40) + cum // 512
+            assert r["offset_in_seq"] == cum % 512
+            cum += r["n_tokens"]
+    # sequences are well-filled: mean fill of non-final sequences ≥ the
+    # budget minus one mean doc (greedy start-in-sequence packing)
+    import collections
+
+    fill = collections.Counter()
+    for r in rows:
+        fill[r["seq_id"]] += r["n_tokens"]
+    assert max(fill.values()) >= 512

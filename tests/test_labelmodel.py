@@ -41,6 +41,100 @@ def test_O_paths_agree(spark, synth):
     assert np.array_equal(C3, C1) and n3 == n1
 
 
+def test_lf_pattern_counts_bounded_collect(spark):
+    from snorkel_spark.labelmodel.structure import (
+        fit_pseudolikelihood,
+        lf_pattern_counts,
+    )
+
+    m, n = 20, 500
+    # high-diversity synthetic matrix: every candidate a distinct
+    # pattern (deterministic bit spread), so P = n >> cap
+    rows = []
+    for cid in range(n):
+        for j in range(m):
+            v = ((cid >> (j % 9)) + j) % 3 - 1
+            if v != 0:
+                rows.append((cid, j, v))
+    L = spark.createDataFrame(rows, "candidate_id long, lf_id int, label int")
+    cap = 64
+    with pytest.warns(UserWarning, match="pattern diversity exceeds"):
+        pats, cnts = lf_pattern_counts(L, m, n_total=n, max_patterns=cap)
+    # hard bound: top-cap + at most one abstain row ever reach driver
+    assert len(pats) <= cap + 1
+    # no mass lost: the dropped tail folds into the all-abstain row
+    assert int(cnts.sum()) == n
+    theta = fit_pseudolikelihood(pats, cnts, m, iters=20)
+    assert np.isfinite(theta["corr"]).all()
+    # exact regime: uncapped call returns the full pattern set and the
+    # same arrays as a generous cap (no behavior change when P < cap)
+    p1, c1 = lf_pattern_counts(L, m, n_total=n, max_patterns=10**6)
+    assert len(p1) == n and int(c1.sum()) == n
+    # one vote per (candidate, LF): a duplicated label row is one vote,
+    # and a −1 vote is kept beside the LFs that abstain
+    dup = spark.createDataFrame(
+        [("a", 0, 1), ("a", 0, 1), ("a", 1, -1), ("b", 1, -1), ("b", 1, -1)],
+        "candidate_id string, lf_id int, label int",
+    )
+    p2, c2 = lf_pattern_counts(dup, 3)
+    assert p2.tolist() == [[0, -1, 0], [1, -1, 0]] and c2.tolist() == [1, 1]
+
+
+def test_conflicting_votes_read_from_one_pattern_aggregate(spark):
+    """O and the pattern counts read the same label patterns: a
+    conflicting duplicate vote books both ψ cells in O and keeps the
+    larger label in the vote vector (as ``max`` over the votes would)."""
+    from snorkel_spark.labelmodel.structure import lf_pattern_counts
+
+    L = spark.createDataFrame(
+        [("a", 0, 1), ("a", 0, -1), ("a", 1, -1), ("b", 0, -1), ("c", 0, 1)],
+        "candidate_id string, lf_id int, label int",
+    )
+    C, n = compute_O_arrow(L, m=2)
+    assert n == 3 and C[0, 1] == 1 and C[1, 1] == 2 and C[0, 0] == 2
+    pats, cnts = lf_pattern_counts(L, 2)
+    assert pats.tolist() == [[-1, 0], [1, -1], [1, 0]] and cnts.tolist() == [1, 1, 1]
+
+
+@pytest.mark.parametrize(
+    "row, cardinality",
+    [(("a", 5, 1), 2), (("a", -1, 1), 2), (("a", 0, 3), 2), (("a", 0, 0), 2),
+     (("a", 0, None), 2), (("a", 0, 4), 3)],
+)
+def test_out_of_range_vote_fails_loudly(spark, row, cardinality):
+    """An lf_id outside 0..m−1 or a label outside the cardinality's
+    range fails the job in both consumers of the pattern aggregate,
+    instead of landing in another LF's cell or being dropped."""
+    from snorkel_spark.labelmodel.structure import lf_pattern_counts
+
+    L = spark.createDataFrame(
+        [("b", 1, 1), row], "candidate_id string, lf_id int, label int"
+    )
+    with pytest.raises(Exception, match="label matrix row out of range"):
+        compute_O_arrow(L, m=2, cardinality=cardinality)
+    if cardinality == 2:
+        with pytest.raises(Exception, match="label matrix row out of range"):
+            lf_pattern_counts(L, 2)
+
+
+def test_block_deviation_is_the_per_pair_block_max():
+    """``block_deviation`` equals the per-cell loop every screen used to
+    spell out: max |O − E| over each off-diagonal LF block, j1 < j2."""
+    from snorkel_spark.labelmodel.model import block_deviation
+
+    rng = np.random.default_rng(5)
+    m, k = 5, 3
+    O, E = rng.random((m * k, m * k)), rng.random((m * k, m * k))
+    want = np.zeros((m, m))
+    for j1 in range(m):
+        for j2 in range(j1 + 1, m):
+            for c1 in range(k):
+                for c2 in range(k):
+                    a, b = j1 * k + c1, j2 * k + c2
+                    want[j1, j2] = max(want[j1, j2], abs(O[a, b] - E[a, b]))
+    assert np.array_equal(block_deviation(O, E, m, k), want)
+
+
 def test_accuracy_recovery(spark, synth):
     """Known accuracies 0.65–0.9 recovered within ±0.05 (SURVEY §5.2.2)."""
     sdf, Y, accs, L_dense = synth

@@ -1,6 +1,7 @@
 """P1/P2 sentence projection and C1 ngram space."""
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_sentence_ids_unique(sentences):
@@ -219,3 +220,45 @@ def test_parse_sentences_null_text_span_dropped(spark):
     )
     rows = parse_sentences(raw).collect()
     assert len(rows) == 1 and rows[0]["tokens"] == ["a", "b"]
+
+
+# ---------------------------------------------------------------- NER
+def _sorted_tags(df):
+    return sorted(
+        (r["sentence_id"], tuple(r["ner_tags"])) for r in df.collect()
+    )
+
+
+def test_ner_join_path_equals_inline(spark, sentences):
+    from snorkel_spark.operators.parser import with_ner_tags, with_ner_tags_join
+    from snorkel_spark.sources import fixtures as FX
+
+    names = FX.person_full_names(spark)
+    inline = with_ner_tags(sentences, names, method="inline")
+    joined = with_ner_tags_join(sentences, names)
+    a = _sorted_tags(inline.select("sentence_id", "ner_tags"))
+    b = _sorted_tags(joined.select("sentence_id", "ner_tags"))
+    assert a == b and len(a) > 0
+    # at least one sentence actually carries a PERSON tag
+    assert any("PERSON" in tags for _, tags in a)
+
+
+def test_ner_auto_selects_join_above_threshold(spark, sentences):
+    from snorkel_spark.operators.parser import with_ner_tags
+    from snorkel_spark.sources import fixtures as FX
+
+    names = FX.person_full_names(spark)
+    # max_inline=1 forces the auto probe over the threshold → join path
+    auto = with_ner_tags(sentences, names, method="auto", max_inline=1)
+    inline = with_ner_tags(sentences, names, method="inline")
+    assert _sorted_tags(auto.select("sentence_id", "ner_tags")) == _sorted_tags(
+        inline.select("sentence_id", "ner_tags")
+    )
+
+
+def test_ner_join_rejects_3_token_names(spark, sentences):
+    from snorkel_spark.operators.parser import with_ner_tags_join
+
+    names = spark.createDataFrame([("a b c",)], "alias string")
+    with pytest.raises(ValueError):
+        with_ner_tags_join(sentences, names)

@@ -123,6 +123,49 @@ def test_changed_lf_set_reruns_label_matrix(spark, tmp_path_factory, monkeypatch
     assert set(info["skipped"]) == {"sentences", "candidates"}
 
 
+def test_pandas_lf_set_resumes_label_matrix(spark, tmp_path_factory, monkeypatch):
+    """A pandas LF body is keyed on its code, not on ``str`` of the
+    function (which holds a per-process address): an LF set that builds
+    a fresh pandas closure on every call still resumes its label
+    matrix."""
+    import pandas as pd
+
+    from snorkel_spark.functions import labeling
+
+    fixture_lfs = labeling.make_fixture_lfs
+    built = []  # keeps every body alive, so no address is reused
+
+    def with_pandas_lf(pairs):
+        lfs = fixture_lfs(pairs)
+        built.append(labeling.LF(len(lfs), "lf_abstain", lambda pdf: pd.Series(0, index=pdf.index)))
+        return lfs + built[-1:]
+
+    monkeypatch.setattr(labeling, "make_fixture_lfs", with_pandas_lf)
+    cat = Catalog(str(tmp_path_factory.mktemp("warehouse_pandas_lf")))
+    run_kg_pipeline(spark, SF, cat, stop_after="label_matrix")
+    info = run_kg_pipeline(spark, SF, cat, stop_after="label_matrix")
+    assert built[0].fn is not built[1].fn
+    assert set(info["skipped"]) == {"sentences", "candidates", "label_matrix"}
+
+
+def test_commit_without_lineage_row_resumes(spark, tmp_path_factory, monkeypatch):
+    """Resume reads the manifest's commit record, written in the same
+    atomic swap as the data: a stage whose lineage append fails after
+    the commit is skipped on the rerun, not recomputed."""
+    cat = Catalog(str(tmp_path_factory.mktemp("warehouse_lineage_crash")))
+
+    def crash(row):
+        raise OSError("lineage log unwritable")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(cat, "log_lineage", crash)
+        with pytest.raises(OSError, match="lineage log unwritable"):
+            run_kg_pipeline(spark, SF, cat, stop_after="sentences")
+    assert cat.lineage() == [] and len(cat.snapshots("sentences")) == 1
+    assert run_kg_pipeline(spark, SF, cat, stop_after="sentences")["skipped"] == ["sentences"]
+    assert len(cat.snapshots("sentences")) == 1
+
+
 def test_source_change_reruns_sentences(spark, tmp_path_factory, monkeypatch):
     """Every stage key carries the package source fingerprint: after a
     code change, resuming on the same catalog recomputes the stage."""

@@ -289,3 +289,62 @@ def test_range_join_bucketed_equals_naive(spark, events):
         got.explain(True)
     plan = buf.getvalue().split("== Physical Plan ==")[-1]
     assert "NestedLoop" not in plan and "Cartesian" not in plan
+
+
+# ---------------------------------------------------------- as-of join
+@pytest.fixture(scope="module")
+def skewed_events(spark):
+    """One mega-key (u0: 600 left / 150 right rows over 50 h — spans
+    many 1 h buckets, with right-empty gaps that exercise the
+    cross-bucket carry) plus normal keys, plus a key with left rows
+    BEFORE any right row (inner-drop case) and same-timestamp
+    collisions (at-timestamp visibility case)."""
+    rows = []
+    base = 1_700_000_000
+    for i in range(600):  # mega key left
+        rows.append(("u0", base + i * 300, float(i), "L"))
+    for i in range(150):  # mega key right: every 20 min, first 50 h... then silence
+        rows.append(("u0", base + i * 1200, float(1000 + i), "R"))
+    for k in range(1, 4):  # normal keys
+        for i in range(10):
+            rows.append((f"u{k}", base + i * 7000 + k, float(i), "L"))
+        for i in range(3):
+            rows.append((f"u{k}", base + i * 21000 + k, float(100 + i), "R"))
+    # left strictly before the only right row → must drop (inner)
+    rows.append(("u9", base - 500, 7.0, "L"))
+    rows.append(("u9", base + 500, 8.0, "R"))
+    # same-timestamp left/right → right visible to that left row
+    rows.append(("u8", base + 42, 1.0, "L"))
+    rows.append(("u8", base + 42, 2.0, "R"))
+    df = spark.createDataFrame(
+        rows, "user_id string, epoch bigint, value double, side string"
+    ).select(
+        "user_id", F.timestamp_seconds("epoch").alias("ts"), "value", "side"
+    )
+    return df.cache()
+
+
+def _canon_asof(df):
+    return sorted(
+        (r["user_id"], r["ts"], r["value"], r["r_ts"], r["r_value"])
+        for r in df.collect()
+    )
+
+
+def test_asof_bucketed_equals_window_on_skew(spark, skewed_events):
+    from snorkel_spark.operators.temporal import asof_join, asof_join_bucketed
+
+    left = skewed_events.filter("side = 'L'")
+    right = skewed_events.filter("side = 'R'")
+    plain = asof_join(left, right, key="user_id", ts_col="ts")
+    for bucket_sec in (3600, 900):  # two widths: many buckets both ways
+        bucketed = asof_join_bucketed(
+            left, right, key="user_id", ts_col="ts", bucket_sec=bucket_sec
+        )
+        assert _canon_asof(bucketed) == _canon_asof(plain)
+    got = _canon_asof(plain)
+    # inner semantics: u9's too-early left row dropped
+    assert not any(u == "u9" for u, *_ in got)
+    # at-timestamp right row visible
+    u8 = [r for r in got if r[0] == "u8"]
+    assert len(u8) == 1 and u8[0][4] == 2.0
