@@ -986,10 +986,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # round-5-new queries, (c) every query whose underlying operator
     # changed this round (regressions must show in the driver file,
     # not only in pytest), (d) flagship core fill.  The rotated-out
-    # tail (all driver-green in r04) is re-verified every round by
-    # tools/check_contract.py with output committed
-    # (tests/contract_rotated_out.txt) AND by the pytest smoke gate
-    # (tests/test_round5.py::test_rotated_out_tail_contract).
+    # tail (all driver-green in r04) is re-verified on every test run
+    # by tests/test_pipeline.py::test_rotated_out_tail_contract.
     return {
         # --- (a) rotated out in round 4, back in-window -------------
         "ts_langid": ts_langid,

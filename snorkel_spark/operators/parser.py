@@ -60,7 +60,10 @@ def parse_sentences(raw: DataFrame) -> DataFrame:
     ``parse_sentences_full``.
     """
     return (
-        raw.select("doc_id", F.explode("spans").alias("span"))
+        # explode_outer: the filter below drops the null row of an empty
+        # array, and unlike explode it invites no inferred size(spans) > 0
+        # filter that would evaluate the spans expression a second time
+        raw.select("doc_id", F.explode_outer("spans").alias("span"))
         .filter("span.kind = 'text' and span.text != ''")
         .select(
             "doc_id",
@@ -97,7 +100,8 @@ def parse_sentences_full(raw: DataFrame) -> DataFrame:
     sentence runs, pre-filter, so ids are stable across both engines).
     """
     return (
-        raw.select("doc_id", F.explode("spans").alias("span"))
+        # explode_outer, not explode: see parse_sentences
+        raw.select("doc_id", F.explode_outer("spans").alias("span"))
         .filter("span.kind = 'text' and span.text != ''")
         .select(
             "doc_id",

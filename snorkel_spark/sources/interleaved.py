@@ -81,9 +81,8 @@ _SPANS_EXPR = f"""
 def synthesize_raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → raw_documents(doc_id string, spans array<struct>).
 
-    Pure built-in expressions end-to-end (verify with
-    ``df.explain('formatted')``: a single project over the parquet scan,
-    no shuffle, no Python).
+    Pure built-in expressions end-to-end: no shuffle, no Python
+    (asserted on the sentences stage's plan in ``tests/test_plans.py``).
     """
     # the columns read have a fixed schema, so the read runs no
     # footer-inference job

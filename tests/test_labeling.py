@@ -7,26 +7,17 @@ import pyspark.sql.functions as F
 import pytest
 
 from snorkel_spark.functions.labeling import LF, apply_lfs, apply_lfs_columnar
+from tests.conftest import plan_nodes, tree_nodes
 
 _ROWS_SCHEMA = (
     "candidate_id string, doc_id string, subj_text string, obj_text string, text_between string"
 )
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _map_in_pandas_command(df) -> bytes:
     """The pickled closure of the MapInPandas node in ``df``'s plan."""
-
-    def find(node):
-        if node.getClass().getSimpleName() == "MapInPandas":
-            return node
-        ch = node.children()
-        return next((r for r in (find(ch.apply(i)) for i in range(ch.size())) if r), None)
-
-    udf = find(df._jdf.queryExecution().analyzed()).functionExpr()
+    (udf,) = [node.functionExpr() for n, node in tree_nodes(df._jdf.queryExecution().analyzed())
+              if n == "MapInPandas"]
     return bytes(udf.func().command().unsafeArray())
 
 
@@ -53,8 +44,8 @@ def test_column_lfs_plan_has_no_python_node(spark, fixture_lfs):
     """Column LFs never cross into Python: over a plain in-memory frame
     the applied matrix's executed plan is pure JVM."""
     tiny = spark.createDataFrame([("c1", "7", "anna lee", "bob kim", "was married to")], _ROWS_SCHEMA)
-    plan = _executed_plan(apply_lfs(tiny, fixture_lfs))
-    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    names = [n for n, _ in plan_nodes(apply_lfs(tiny, fixture_lfs))]
+    assert "MapInPandasExec" not in names and "ArrowEvalPythonExec" not in names
 
 
 def test_regex_columns_equal_token_array_columns(spark, candidates, label_matrix):
@@ -195,8 +186,8 @@ def test_mixed_lf_set_unions_column_and_pandas_lfs(spark):
     out = apply_lfs(rows, lfs, fault_tolerant=True, error_counters=counters)
     assert {tuple(r) for r in out.collect()} == {("c1", 0, 1), ("c2", 1, -1)}
     assert {k: c.value > 0 for k, c in counters.items()} == {0: False, 1: False, 2: True}
-    plan = _executed_plan(out)
-    assert plan.count("MapInPandas") == 1 and "Generate explode" in plan
+    names = [n for n, _ in plan_nodes(out)]
+    assert names.count("MapInPandasExec") == 1 and "GenerateExec" in names
     cmd = _map_in_pandas_command(out)
     assert b"lf_py_same" in cmd and b"lf_py_boom" in cmd and b"lf_col_married" not in cmd
     # a duplicate lf_id would lose one LF's votes; an empty set is empty

@@ -16,7 +16,7 @@ def test_parse_sentences_equals_oracle(raw):
 
     from snorkel_spark.oracle import PREFIX_SENTENCES
     from snorkel_spark.operators.parser import parse_sentences
-    from tests.conftest import SF
+    from tests.conftest import SF, plan_nodes
 
     cols = ["doc_id", "sentence_id", "position", "text", "n_tokens"]
     con = duckdb.connect()
@@ -30,7 +30,7 @@ def test_parse_sentences_equals_oracle(raw):
     got = [tuple(r) for r in df.select(*cols, F.array_join("tokens", "|")).collect()]
     assert len(got) > 0
     assert sorted(got) == sorted(want)
-    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandasExec" not in [n for n, _ in plan_nodes(df)]
 
 
 def test_ngram_count_formula(sentences, mentions):
