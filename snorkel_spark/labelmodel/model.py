@@ -55,7 +55,6 @@ class LabelModel:
         epochs: int = 2000,
         prec_init: float = 0.7,
         l2: float = 0.0,
-        seed: int = 42,
         constrain_coverage: bool = False,
     ) -> "LabelModel":
         """Full-batch Adam on ‖M ⊙ (O − μPμᵀ)‖² (deterministic: the

@@ -2,24 +2,24 @@
 (SURVEY.md §2.3, C3/C4).
 
 Reference: ``CandidateExtractor`` runs matchers over each span space,
-forms the cross-product across arity slots, drops identical-span pairs
-(unless ``self_relations``), nested pairs (unless ``nested_relations``),
-and canonically orders (unless ``symmetric_relations``)
+forms the cross-product across arity slots, drops identical-span and
+nested pairs and canonically orders them
 (⚠ snorkel/candidates.py::CandidateExtractor/UDF ~L120–260,
 reconstructed — SURVEY.md §0).
 
-Spark design: the cross-product is **sentence-local**, so it is an
-equi-join on ``sentence_id`` with theta residual predicates — the join
-shuffles once on sentence_id (well distributed, no skew) and Catalyst
-turns it into a sort-merge/shuffled-hash join with the residuals
-evaluated inline.  Dedup across a re-run is ``dropDuplicates`` on the
-deterministic content-hash ``candidate_id`` (replaces the reference's
-DB unique constraint, SURVEY.md §4.1).
+Spark design: the cross-product is **sentence-local**, so the mentions
+are grouped per sentence (one shuffle on sentence_id, well distributed,
+no skew) and each group explodes its ordered in-sentence pairs.  Every
+mention carries its sentence's ``tokens`` (as a ``TemporarySpan`` reads
+its sentence's words), so the helper columns need no join.  Dedup
+across a re-run is a distinct on the deterministic content-hash
+``candidate_id`` (replaces the reference's DB unique constraint,
+SURVEY.md §4.1).
 
 The extractor also precomputes the LF-helper columns (SURVEY.md §2.5:
-``text_between``, ``tokens_between``, left/right windows, tagged text)
-as ordinary DataFrame columns so labeling functions downstream are pure
-column/vectorized ops and Catalyst can prune them when unused.
+``text_between``, ``tokens_between``) as ordinary DataFrame columns so
+labeling functions downstream are pure column/vectorized ops and
+Catalyst can prune them when unused.
 """
 
 from __future__ import annotations
@@ -34,141 +34,70 @@ CANDIDATE_COLS = [
 ]
 
 
-def extract_candidates(
-    subj_mentions: DataFrame,
-    obj_mentions: DataFrame,
-    rel_type: str = "spouse_of",
-    self_relations: bool = False,
-    nested_relations: bool = False,
-    symmetric_relations: bool = False,
-    sentences: DataFrame | None = None,
-) -> DataFrame:
-    """Pair subj × obj mentions per sentence → candidates.
-
-    ``sentences`` (optional) re-attaches token arrays for the helper
-    columns; pass the output of ``parse_sentences``.
-    """
-    if obj_mentions is subj_mentions and not symmetric_relations:
-        # Self-pairing fast path (the common relation-extraction shape,
-        # guide §1.2/§2.4): the two join sides would be the SAME
-        # expensive subtree (ngram explode + matcher probe), and a
-        # self-join evaluates it twice (the broadcast/build side cannot
-        # reuse the probe side's exchange).  Instead: ONE evaluation,
-        # ONE shuffle — group mentions per sentence and explode the
-        # ordered in-sentence pairs.  Per-sentence mention counts are
-        # bounded by sentence length × n_max, so the w² pair explosion
-        # is bounded per row exactly like the join's per-key output.
-        # Pair set is identical: all (a, b) with a.ws < b.ws, same
-        # residual filters below.
-        # drop null sentence_ids explicitly: the join path's equi-key
-        # never matches nulls, while a groupBy would lump every
-        # null-key mention into ONE cross-document group
-        m = subj_mentions.filter(F.col("sentence_id").isNotNull()).select(
-            "doc_id", "sentence_id", "position", "n_tokens",
-            "word_start", "word_end", "text",
-        )
-        # group on sentence_id ALONE so the output stays hash-partitioned
-        # on the tokens-attach join key (guide §2.4); doc_id/position/
-        # n_tokens are functionally determined by sentence_id, so
-        # ``first`` is deterministic in value, and the collect_list
-        # already makes this an ObjectHashAggregate (no sort added).
-        grouped = m.groupBy("sentence_id").agg(
-            F.first("doc_id").alias("doc_id"),
-            F.first("position").alias("position"),
-            F.first("n_tokens").alias("n_tokens"),
-            F.collect_list(F.struct("word_start", "word_end", "text")).alias("_ms"),
-        )
-        pairs = F.expr(
-            "flatten(transform(_ms, pa -> "
-            "transform(filter(_ms, pb -> pa.word_start < pb.word_start), "
-            "pb -> struct(pa as a, pb as b))))"
-        )
-        cand = (
-            grouped.select(
-                "doc_id", "sentence_id", "position", "n_tokens",
-                F.explode(pairs).alias("_pr"),
-            )
-            .select(
-                "doc_id", "sentence_id", "position", "n_tokens",
-                F.col("_pr.a.word_start").alias("subj_ws"),
-                F.col("_pr.a.word_end").alias("subj_we"),
-                F.col("_pr.a.text").alias("subj_text"),
-                F.col("_pr.b.word_start").alias("obj_ws"),
-                F.col("_pr.b.word_end").alias("obj_we"),
-                F.col("_pr.b.text").alias("obj_text"),
-            )
-        )
-    else:
-        s = subj_mentions.select(
-            "doc_id", "sentence_id", "position", "n_tokens",
-            F.col("word_start").alias("subj_ws"), F.col("word_end").alias("subj_we"),
-            F.col("text").alias("subj_text"),
-        )
-        o = obj_mentions.select(
-            F.col("sentence_id").alias("o_sid"),
-            F.col("word_start").alias("obj_ws"), F.col("word_end").alias("obj_we"),
-            F.col("text").alias("obj_text"),
-        )
-        conds = [s["sentence_id"] == o["o_sid"]]
-        if symmetric_relations:
-            # emit both orderings; still drop identical spans below
-            pass
-        else:
-            # canonical ordering: subj strictly before obj in the sentence
-            conds.append(s["subj_ws"] < o["obj_ws"])
-        cand = s.join(o, on=conds).drop("o_sid")
-    if not self_relations:
-        cand = cand.filter(~((F.col("subj_ws") == F.col("obj_ws")) & (F.col("subj_we") == F.col("obj_we"))))
-    if not nested_relations:
-        # neither span contains the other
-        cand = cand.filter(
-            ~(
-                (F.col("subj_ws") <= F.col("obj_ws")) & (F.col("obj_we") <= F.col("subj_we"))
-            )
-            & ~(
-                (F.col("obj_ws") <= F.col("subj_ws")) & (F.col("subj_we") <= F.col("obj_we"))
-            )
-        )
-    # tokens attach FIRST, in the same sentence_id-keyed join chain as
-    # the pairing join (guide §2.4: operations keyed the same way share
-    # one exchange — the s⋈o and the toks join co-partition, so this
-    # costs no extra shuffle), and the dedup runs LAST.  The former
-    # order (dedup, then toks join) re-shuffled the deduped wide rows a
-    # second time because the all-column distinct destroys the
-    # sentence_id partitioning: one full exchange of the widest rows
-    # saved at corpus scale.  Result-identical: the derived columns are
-    # deterministic functions of the join row, so distinct-after-attach
-    # collapses exactly the rows distinct-before-attach did.
-    if sentences is not None:
-        toks = sentences.select(F.col("sentence_id").alias("t_sid"), "tokens")
-        cand = (
-            cand.join(toks, on=[cand["sentence_id"] == toks["t_sid"]], how="left")
-            .drop("t_sid")
-            # H2 get_between_tokens: tokens strictly between the spans
-            .withColumn(
-                "tokens_between",
-                F.expr("slice(tokens, subj_we + 2, greatest(obj_ws - subj_we - 1, 0))"),
-            )
-            # H1 get_text_between
-            .withColumn("text_between", F.array_join("tokens_between", " "))
-            .drop("tokens")
-        )
-    else:
-        cand = cand.withColumn("tokens_between", F.expr("array()").cast("array<string>")).withColumn(
-            "text_between", F.lit("")
-        )
+def extract_candidates(mentions: DataFrame, rel_type: str = "spouse_of") -> DataFrame:
+    """Pair the mentions of each sentence → candidates: every (subj, obj)
+    with subj starting strictly before obj and neither span containing
+    the other."""
+    # The pairs come from a grouping, not a self-join: the two join
+    # sides would be the SAME expensive subtree (ngram explode + matcher
+    # probe), evaluated twice.  Grouping evaluates it once and shuffles
+    # once.  Per-sentence mention counts are bounded by sentence length
+    # × n_max, so the w² pair explosion is bounded per row exactly like
+    # a join's per-key output.
+    # Null sentence_ids are dropped explicitly: a groupBy would lump
+    # every null-key mention into ONE cross-document group.
+    m = mentions.filter(F.col("sentence_id").isNotNull())
+    # doc_id/position/n_tokens/tokens are functionally determined by
+    # sentence_id, so ``first`` is deterministic in value, and the
+    # collect_list already makes this an ObjectHashAggregate (no sort).
+    grouped = m.groupBy("sentence_id").agg(
+        *[F.first(c).alias(c) for c in ("doc_id", "position", "n_tokens", "tokens")],
+        F.collect_list(F.struct("word_start", "word_end", "text")).alias("_ms"),
+    )
+    # with a.word_start < b.word_start, "neither span contains the
+    # other" is a.word_end < b.word_end
+    pairs = F.expr(
+        "flatten(transform(_ms, pa -> "
+        "transform(filter(_ms, pb -> pa.word_start < pb.word_start "
+        "and pa.word_end < pb.word_end), "
+        "pb -> struct(pa as a, pb as b))))"
+    )
     cand = (
+        grouped.select(
+            "doc_id", "sentence_id", "position", "n_tokens", "tokens",
+            F.explode(pairs).alias("_pr"),
+        )
+        .select(
+            "doc_id", "sentence_id", "position", "n_tokens", "tokens",
+            F.col("_pr.a.word_start").alias("subj_ws"),
+            F.col("_pr.a.word_end").alias("subj_we"),
+            F.col("_pr.a.text").alias("subj_text"),
+            F.col("_pr.b.word_start").alias("obj_ws"),
+            F.col("_pr.b.word_end").alias("obj_we"),
+            F.col("_pr.b.text").alias("obj_text"),
+        )
+        # H2 get_between_tokens: tokens strictly between the spans
+        .withColumn(
+            "tokens_between",
+            F.expr("slice(tokens, subj_we + 2, greatest(obj_ws - subj_we - 1, 0))"),
+        )
+        # H1 get_text_between
+        .withColumn("text_between", F.array_join("tokens_between", " "))
+    )
+    return _with_id(cand, rel_type, ["subj_ws", "subj_we", "obj_ws", "obj_we"]).select(
+        *CANDIDATE_COLS
+    )
+
+
+def _with_id(cand: DataFrame, rel_type: str, span_cols: list[str]) -> DataFrame:
+    """``candidate_id``, ``rel_type`` and ``split``, then the dedup.
+    rel_type is part of the hash so candidates of two relation types
+    over the same span pair never collide when their tables are unioned
+    (SURVEY.md §1.1 id spec)."""
+    return (
         cand.withColumn(
-            # rel_type is part of the hash so candidates of two relation
-            # types over the same span pair never collide when their
-            # tables are unioned (SURVEY.md §1.1 id spec).
             "candidate_id",
-            F.md5(
-                F.concat_ws(
-                    "|", F.lit(rel_type), F.col("sentence_id"),
-                    "subj_ws", "subj_we", "obj_ws", "obj_we",
-                )
-            ),
+            F.md5(F.concat_ws("|", F.lit(rel_type), F.col("sentence_id"), *span_cols)),
         )
         .withColumn("rel_type", F.lit(rel_type))
         .withColumn("split", F.lit(0))
@@ -180,14 +109,9 @@ def extract_candidates(
         # two extra full sorts of the wide pair rows at corpus scale
         .dropDuplicates()
     )
-    return cand.select(*CANDIDATE_COLS)
 
 
-def extract_candidates_kary(
-    slot_mentions: list[DataFrame],
-    rel_type: str,
-    sentences: DataFrame | None = None,
-) -> DataFrame:
+def extract_candidates_kary(slot_mentions: list[DataFrame], rel_type: str) -> DataFrame:
     """k-ary candidate extraction (arity ≥ 2): one mention table per
     slot, paired sentence-locally with slots in strict left-to-right
     DISJOINT order (e_i ends before e_{i+1} starts) — the common k-ary
@@ -222,22 +146,7 @@ def extract_candidates_kary(
                 F.col(f"e{i - 1}_we") < nxt[f"e{i}_ws"],
             ],
         ).drop("_sid")
-    span_cols = [c for i in range(k) for c in (f"e{i}_ws", f"e{i}_we")]
-    cand = (
-        cur.withColumn(
-            "candidate_id",
-            F.md5(F.concat_ws("|", F.lit(rel_type), F.col("sentence_id"), *span_cols)),
-        )
-        .withColumn("rel_type", F.lit(rel_type))
-        .withColumn("split", F.lit(0))
-        # distinct-on-ALL-columns, not dropDuplicates([candidate_id]):
-        # equivalent (every column here is a deterministic function of
-        # the id's hash preimage) but plans as a pure grouping-key
-        # HashAggregate, while a subset-dedup compiles to first(string)
-        # aggregates whose variable-width buffers force SortAggregate —
-        # two extra full sorts of the wide pair rows at corpus scale
-        .dropDuplicates()
-    )
+    cand = _with_id(cur, rel_type, [c for i in range(k) for c in (f"e{i}_ws", f"e{i}_we")])
     out_cols = ["candidate_id", "rel_type", "split", "doc_id", "sentence_id",
                 "position", "n_tokens"]
     out_cols += [c for i in range(k) for c in (f"e{i}_text", f"e{i}_ws", f"e{i}_we")]
@@ -249,11 +158,12 @@ def pretagged_candidates(
     subj_tag: str,
     obj_tag: str,
     rel_type: str,
-    **kw,
 ) -> DataFrame:
     """C4 ``PretaggedCandidateExtractor`` (⚠ snorkel/candidates.py
     ~L260–330): filter a pre-tagged mention table by entity type, then
-    pair — the CDR-tutorial path where NER tags come from the corpus."""
-    s = mentions_with_tags.filter(F.col("tag") == subj_tag)
-    o = mentions_with_tags.filter(F.col("tag") == obj_tag)
-    return extract_candidates(s, o, rel_type=rel_type, **kw)
+    pair a subj-tagged span with a later, disjoint obj-tagged span of
+    the same sentence — the CDR-tutorial path where NER tags come from
+    the corpus.  The slots come out as ``e0_*`` (subj) and ``e1_*``
+    (obj), as from ``extract_candidates_kary``."""
+    slots = [mentions_with_tags.filter(F.col("tag") == t) for t in (subj_tag, obj_tag)]
+    return extract_candidates_kary(slots, rel_type)

@@ -536,13 +536,16 @@ def dedup_lines(docs: DataFrame, sep: str = "\n") -> DataFrame:
     ``array_position(lines, x) = i + 1`` — O(lines² ) per page, fine at
     any corpus size because lines-per-page is bounded (~10³), not
     corpus-sized."""
-    d = docs.withColumn("_l", F.split(F.col("text"), sep))
-    kept = "filter(_l, (x, i) -> array_position(_l, x) = i + 1)"
+    # the kept lines are computed once into a column: Catalyst does not
+    # inline a lambda expression into the two projections that read it
+    d = docs.withColumn("_l", F.split(F.col("text"), sep)).withColumn(
+        "_kept", F.expr("filter(_l, (x, i) -> array_position(_l, x) = i + 1)")
+    )
     return d.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.array_join(F.expr(kept), "\n").alias("text_deduped"),
+        F.array_join("_kept", "\n").alias("text_deduped"),
         F.size("_l").alias("n_lines"),
-        (F.size("_l") - F.size(F.expr(kept))).alias("n_dropped"),
+        (F.size("_l") - F.size("_kept")).alias("n_dropped"),
     )
 
 

@@ -30,17 +30,16 @@ import json
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .parser import rule_lemma
+
 _LINK = "struct<link_score:double,entity_id:string,canonical_name:string>"
 # weight of an exact, a casefolded and a lemma match
 TIERS = (1.0, 0.8, 0.6)
 
 
 def _lemma(c: Column) -> Column:
-    """Per-word rule lemma: strip a trailing 's' from words longer than
-    3 characters, otherwise lowercase the word."""
-    return F.array_join(F.transform(F.split(c, " "), lambda w: F.when(
-        (F.length(w) > 3) & w.endswith("s"), w.substr(F.lit(1), F.length(w) - 1)
-    ).otherwise(F.lower(w))), " ")
+    """The parser's rule lemma of each space-separated word."""
+    return F.array_join(F.transform(F.split(c, " "), rule_lemma), " ")
 
 
 def _lemma_py(s: str) -> str:

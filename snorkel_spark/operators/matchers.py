@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_LEMMA_ONE = "if(length({w}) > 3 and endswith({w}, 's'), substring({w}, 1, length({w}) - 1), lower({w}))"
+from .parser import rule_lemma
 
 # ---------------------------------------------------------------------
 # Porter stemmer, step 1a/1b subset (⚠ the reference passes
@@ -142,7 +142,7 @@ def _normalize(col: Column | str, ignore_case: bool, stemmer: str | None) -> Col
         c = F.expr(porter_span_sql(col))
     elif stemmer == "inflectional":
         # per-token rule lemma, re-joined (multi-token spans normalize per word)
-        c = F.expr(f"array_join(transform(split({col}, ' '), mw -> {_LEMMA_ONE.format(w='mw')}), ' ')")
+        c = F.array_join(F.transform(F.split(c, " "), rule_lemma), " ")
     elif ignore_case:
         c = F.lower(c)
     return c
@@ -322,7 +322,7 @@ class Concat(Matcher):
 
     def matches(self, df: DataFrame) -> DataFrame:
         l = self.left.matches(df).select(
-            "doc_id", "sentence_id", "position", "n_tokens",
+            "doc_id", "sentence_id", "position", "n_tokens", "tokens",
             F.col("word_start").alias("l_ws"), F.col("word_end").alias("l_we"),
             F.col("text").alias("l_text"),
         )
@@ -334,7 +334,7 @@ class Concat(Matcher):
         return (
             l.join(r, on=[l["sentence_id"] == r["r_sid"], l["l_we"] + 1 == r["r_ws"]])
             .select(
-                "doc_id", "sentence_id", "position", "n_tokens",
+                "doc_id", "sentence_id", "position", "n_tokens", "tokens",
                 F.col("l_ws").alias("word_start"),
                 F.col("r_we").alias("word_end"),
                 (F.col("r_we") - F.col("l_ws") + 1).cast("int").alias("n"),

@@ -13,7 +13,9 @@ matcher filter prunes it.  No Python anywhere.
 Mention schema (replaces the reference's TemporarySpan objects,
 ⚠ snorkel/models/context.py::TemporarySpan ~L220–380):
     doc_id, sentence_id, position, word_start, word_end (inclusive),
-    n int, text string, n_tokens int (sentence length)
+    n int, text string, n_tokens int (sentence length),
+    tokens array<string> (the sentence's tokens, as a span reads its
+    sentence's words; pruned by Catalyst wherever nothing reads it)
 
 ``mention_id`` is a deterministic content hash — replaces DB sequence
 ids so retries/resume are idempotent (SURVEY.md §4.2 item 4).
@@ -77,18 +79,16 @@ def ngram_mentions(
                     ws -> named_struct('ws', ws, 'we', ws + wn - 1, 'n', wn)),
           1, greatest(n_tokens - wn + 1, 0))))
     """
-    src_cols = ["doc_id", "sentence_id", "position", "n_tokens", attrib,
-                *[c for c in carry_attribs if c != attrib]]
+    keep = ["doc_id", "sentence_id", "position", "n_tokens", "tokens"]
+    # dict.fromkeys: attrib may be "tokens", and no column is selected twice
+    src_cols = list(dict.fromkeys([*keep, attrib, *carry_attribs]))
     base = (
         sentences.select(
             *src_cols,
             F.explode(F.expr(windows)).alias("w"),
         )
         .select(
-            "doc_id",
-            "sentence_id",
-            "position",
-            "n_tokens",
+            *keep,
             F.col("w.ws").cast("int").alias("word_start"),
             F.col("w.we").cast("int").alias("word_end"),
             F.col("w.n").cast("int").alias("n"),
@@ -108,13 +108,12 @@ def ngram_mentions(
         cls = "[" + "".join("\\" + c for c in split_tokens) + "]"
         subs = (
             sentences.select(
-                "doc_id", "sentence_id", "position", "n_tokens",
-                *[c for c in carry_attribs if c != attrib],
+                *src_cols,
                 F.posexplode(attrib).alias("ws", "tok"),
             )
             .filter(F.col("tok").rlike(cls))
             .select(
-                "doc_id", "sentence_id", "position", "n_tokens",
+                *keep,
                 F.col("ws").cast("int").alias("word_start"),
                 F.col("ws").cast("int").alias("word_end"),
                 F.lit(1).cast("int").alias("n"),

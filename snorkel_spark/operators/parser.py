@@ -22,7 +22,7 @@ removes the widest column from every shuffle at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -44,9 +44,14 @@ SENTENCE_SCHEMA = StructType(
     ]
 )
 
-# Rule lemmatizer (no spaCy offline — SURVEY.md §2.2 P2): lowercase,
-# strip a plural-ish trailing 's' on words longer than 3 chars.
-_LEMMA_EXPR = "transform(tokens, lt -> if(length(lt) > 3 and endswith(lt, 's'), substring(lt, 1, length(lt) - 1), lower(lt)))"
+
+def rule_lemma(word: Column) -> Column:
+    """Rule lemmatizer (no spaCy offline — SURVEY.md §2.2 P2): strip a
+    plural-ish trailing 's' from words longer than 3 characters,
+    otherwise lowercase the word."""
+    return F.when(
+        (F.length(word) > 3) & word.endswith("s"), word.substr(F.lit(1), F.length(word) - 1)
+    ).otherwise(F.lower(word))
 
 
 def parse_sentences(raw: DataFrame) -> DataFrame:
@@ -72,7 +77,7 @@ def parse_sentences(raw: DataFrame) -> DataFrame:
             F.col("span.text").alias("text"),
         )
         .withColumn("tokens", F.filter(F.split("text", "\\s+"), lambda t: t != F.lit("")))
-        .withColumns({"n_tokens": F.size("tokens"), "lemmas": F.expr(_LEMMA_EXPR)})
+        .withColumns({"n_tokens": F.size("tokens"), "lemmas": F.transform("tokens", rule_lemma)})
         .select("doc_id", "sentence_id", "position", "text", "n_tokens", "tokens", "lemmas")
     )
 
@@ -122,7 +127,7 @@ def parse_sentences_full(raw: DataFrame) -> DataFrame:
             {
                 "sentence_id": F.concat_ws(":", "doc_id", "position", "sent_idx"),
                 "n_tokens": F.size("tokens"),
-                "lemmas": F.expr(_LEMMA_EXPR),
+                "lemmas": F.transform("tokens", rule_lemma),
             }
         )
         .select("doc_id", "sentence_id", "position", "text", "n_tokens", "tokens", "lemmas")

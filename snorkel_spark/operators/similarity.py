@@ -176,8 +176,10 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     broadcast cross; the argmax is ``max_by`` over a (cos, −id) struct,
     i.e. a DECLARATIVE aggregation — partial aggregation collapses each
     partition's n_p·k scored rows back to n_p before the exchange, so
-    the shuffle ships one row per vector (a row_number window here
-    would shuffle the full n·k expansion — the plan that dies at 100×).
+    the shuffle ships one row per vector.  A ``row_number() = 1``
+    window plans ``WindowGroupLimit`` on both sides of its shuffle and
+    ships as few rows; ``max_by`` stays because its plan is simpler
+    (one aggregate, no sort).
     At 100 TB the corpus is then WRITTEN partitioned (or bucketed) by
     ``centroid_id``, so a probe of p lists reads p/k of the data via
     partition pruning instead of a full scan."""

@@ -339,7 +339,14 @@ def c4_line_filters(
             F.col("text"),
         )
         .filter(~F.expr("contains(lower(text), 'lorem ipsum')"))
-        .filter(F.size("_kept") >= min_lines)
+        # the page rule drops rows through a generator, not a Filter:
+        # Catalyst pushes a Filter on _kept below the projection with
+        # the line rules inlined, evaluating them twice per page; a
+        # Generate is a pushdown barrier
+        .select(
+            "doc_id", "n_lines",
+            F.explode(F.filter(F.array("_kept"), lambda k: F.size(k) >= min_lines)).alias("_kept"),
+        )
         .select(
             "doc_id",
             "n_lines",

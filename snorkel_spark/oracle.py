@@ -17,6 +17,10 @@ The CTE chain below mirrors, step for step:
   mv          ← labelmodel.model.majority_vote
   triples_mv  ← operators.canonicalize.canonical_triples (MV path)
 
+The Spark mentions carry their sentence's ``tokens`` the way the
+``mentions`` CTE's rows do, so both engines read ``tokens_between``
+from the mention row, with no join back to the sentences.
+
 Keep in lock-step with the Spark implementations; the pipeline tests
 assert equality at every stage.
 """

@@ -156,9 +156,7 @@ def build_candidates(sentences: DataFrame, n_max: int = 2) -> DataFrame:
     # rejects (results identical, explode halved)
     n_vals = [n for n in pm.mention_lengths() if 1 <= n <= n_max] or None
     mentions = ngram_mentions(sentences, n_max=n_max, n_values=n_vals)
-    persons = pm.apply(mentions)
-    # the same object on both sides takes the self-pairing fast path
-    return extract_candidates(persons, persons, sentences=sentences)
+    return extract_candidates(pm.apply(mentions))
 
 
 def build_triples(

@@ -35,14 +35,14 @@ def test_tagged_text_helper(spark, candidates, sentences):
     assert sample["tagged"].endswith("{{A}} married {{B}}")
 
 
-def test_two_relation_union_no_collision(persons, sentences):
+def test_two_relation_union_no_collision(persons):
     """candidate_id includes rel_type: the same span pair extracted for
     two relation types must yield distinct ids, so a union +
     dropDuplicates loses nothing."""
     from snorkel_spark.operators.candidates import extract_candidates
 
-    a = extract_candidates(persons, persons, rel_type="spouse_of", sentences=sentences)
-    b = extract_candidates(persons, persons, rel_type="sibling_of", sentences=sentences)
+    a = extract_candidates(persons, rel_type="spouse_of")
+    b = extract_candidates(persons, rel_type="sibling_of")
     u = a.unionByName(b)
     n = u.count()
     assert n == a.count() + b.count()
@@ -66,15 +66,39 @@ def test_kary_extraction_ternary(spark, persons, mentions):
     assert q.count() == 0
 
 
-def test_self_pairing_fast_path_equals_join_path(spark, sentences, persons):
-    """r06 optimization contract: extract_candidates(p, p) (grouped
-    in-sentence pairing, single subtree evaluation) must produce
-    exactly the rows of the two-sided join path."""
-    from snorkel_spark.operators.candidates import extract_candidates
+def test_candidates_equal_oracle(candidates):
+    """The chain's candidates equal the DuckDB CANDIDATES CTE row for
+    row on every column they share, the helper columns included."""
+    import duckdb
 
-    persons2 = persons.select(*persons.columns)  # distinct object → join path
-    fast = extract_candidates(persons, persons, sentences=sentences)
-    slow = extract_candidates(persons, persons2, sentences=sentences)
-    assert fast.exceptAll(slow).count() == 0
-    assert slow.exceptAll(fast).count() == 0
-    assert fast.count() > 0
+    from snorkel_spark.oracle import PREFIX_CANDIDATES
+    from tests.conftest import SF
+
+    cols = ["candidate_id", "doc_id", "sentence_id", "position", "n_tokens",
+            "subj_text", "subj_ws", "subj_we", "obj_text", "obj_ws", "obj_we", "text_between"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    want = con.execute(
+        PREFIX_CANDIDATES
+        + f" SELECT {', '.join(cols)}, array_to_string(tokens_between, '|') FROM candidates"
+    ).fetchall()
+    con.close()
+    got = [tuple(r) for r in
+           candidates.select(*cols, F.array_join("tokens_between", "|")).collect()]
+    assert len(got) > 0
+    assert sorted(got) == sorted(want)
+
+
+def test_pretagged_candidates(persons, candidates):
+    """Persons tagged by name prefix (anna… subj, bob… obj) pair into
+    the planted relations, at the spans the chain's candidates hold."""
+    from snorkel_spark.operators.candidates import pretagged_candidates
+
+    tagged = persons.withColumn(
+        "tag", F.when(F.col("text").startswith("anna"), "subj")
+        .when(F.col("text").startswith("bob"), "obj"))
+    got = pretagged_candidates(tagged, "subj", "obj", rel_type="spouse_of")
+    rows = {(r["sentence_id"], r["e0_ws"], r["e1_ws"]) for r in got.collect()}
+    assert got.count() == len(rows) == 300
+    want = {(r["sentence_id"], r["subj_ws"], r["obj_ws"]) for r in candidates.collect()}
+    assert rows == want

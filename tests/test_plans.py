@@ -62,10 +62,13 @@ def test_full_parser_filters_hold_no_lambda(spark):
 
 def test_candidates_match_is_inset(salted_pass):
     """The gazetteer match is an InSet probe of the driver-side names,
-    and the only join is the token attach."""
+    and the stage scans its sentences once and joins nothing: each
+    mention carries its sentence's tokens."""
     df = salted_pass["stages"]["candidates"]
+    names = _names(df)
     assert any("InSet" in c for c in _filter_conditions(df))
-    assert [n for n in _names(df) if n.endswith("JoinExec")] == ["BroadcastHashJoinExec"]
+    assert [n for n in names if n.endswith("JoinExec") or n == "BroadcastExchangeExec"] == []
+    assert names.count("FileSourceScanExec") == 1, names
 
 
 def test_label_matrix_is_one_codegen_span(salted_pass):
@@ -141,13 +144,29 @@ CURATION = {
 }
 
 
-@pytest.mark.parametrize("op", list(CURATION))
-def test_curation_plan_shape(spark, op):
-    build, required, exchanges = CURATION[op]
+def _build(spark, op):
     docs, events, emb = (spark.read.parquet(f"{SF}/{t}.parquet")
                          for t in ("documents", "events", "embeddings"))
-    shape = _shape(build(spark, docs, events, emb))
+    return CURATION[op][0](spark, docs, events, emb)
+
+
+@pytest.mark.parametrize("op", list(CURATION))
+def test_curation_plan_shape(spark, op):
+    """No Python node, the required marks, the pinned Exchange count,
+    and no Filter holding a lambda (see ``test_stage_plan_shape``)."""
+    _, required, exchanges = CURATION[op]
+    df = _build(spark, op)
+    shape = _shape(df)
     assert not _has_python(shape), shape
     assert [m for m in required if m not in shape] == [], shape
     if exchanges is not None:
         assert sum("Exchange" in n for n in shape) == exchanges, shape
+    assert not [c for c in _filter_conditions(df) if "LambdaFunction" in c]
+
+
+def test_line_dedup_filters_lines_once(spark):
+    """The O(lines²) kept-line filter is evaluated once per page: one
+    ArrayFilter in the whole executed plan."""
+    exprs = [e for _, node in plan_nodes(_build(spark, "line_dedup"))
+             for x in _seq(node.expressions()) for e, _ in tree_nodes(x)]
+    assert exprs.count("ArrayFilter") == 1, exprs
