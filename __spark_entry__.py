@@ -83,7 +83,35 @@ def _label_counts(spark, sf_dir):
     from snorkel_spark.labelmodel.encoding import compute_O_arrow
 
     return _memo(spark, sf_dir, "label_counts",
-                 lambda: compute_O_arrow(_label_matrix(spark, sf_dir), m=7), cache=False)
+                 lambda: compute_O_arrow(_label_matrix(spark, sf_dir),
+                                         m=len(_fixture_lfs(spark))), cache=False)
+
+
+def _label_model(spark, sf_dir):
+    """The label model fit on the memoized O, once per session."""
+    from snorkel_spark.labelmodel.model import LabelModel
+
+    return _memo(spark, sf_dir, "label_model",
+                 lambda: LabelModel(m=len(_fixture_lfs(spark))).fit(
+                     *_label_counts(spark, sf_dir)), cache=False)
+
+
+def _dependencies(spark, sf_dir):
+    """The structure learner's (deps, W) over the memoized label
+    matrix, computed once per session.  ``n_total`` is the FULL
+    candidate set (the reference fits all candidates; never-voted ones
+    carry all-abstain mass the long-form matrix cannot), counted from
+    the candidates table, not from L, where distinct(candidate_id)
+    would just re-derive the voting count and the mass would be 0."""
+    from snorkel_spark.labelmodel.structure import lf_pattern_counts, select_dependencies
+
+    def build():
+        m = len(_fixture_lfs(spark))
+        n_total = _candidates(spark, sf_dir).count()
+        return select_dependencies(
+            *lf_pattern_counts(_label_matrix(spark, sf_dir), m, n_total), m)
+
+    return _memo(spark, sf_dir, "dependencies", build, cache=False)
 
 
 def _mv_triples(spark, sf_dir):
@@ -462,39 +490,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return partial.groupBy("entity_id").agg(F.sum("c").alias("n_mentions"))
 
-    def g4_dependencies(spark, sf):
-        from snorkel_spark.labelmodel.model import select_dependencies
-
-        C, n = _label_counts(spark, sf)
-        deps = sorted(select_dependencies(C, n, m=7, threshold=0.05))
-        return spark.createDataFrame(
-            [(int(a), int(b)) for a, b in deps] or [(None, None)], "lf_a int, lf_b int"
-        ).filter("lf_a is not null")
-
     def g4c_pseudolikelihood_deps(spark, sf):
-        # G4 v4 — the reference's actual algorithm shape (ICML'17 ℓ1
-        # pseudolikelihood, Y marginalized), Spark-first: the corpus
+        # G4 — the reference's algorithm (ICML'17 ℓ1 pseudolikelihood,
+        # Y marginalized), Spark-first: the corpus
         # compresses to distinct vote-pattern counts (one distributed
         # agg), the driver solves the exact weighted objective.  The
         # oracle runs the SAME fit on DuckDB-computed pattern counts at
         # import time — a cross-engine check of the compression path.
-        import numpy as np
-
-        from snorkel_spark.labelmodel.structure import (
-            select_dependencies_pseudolikelihood,
-        )
-
-        L = _label_matrix(spark, sf)
-        # n_total = the FULL candidate set (the reference fits all
-        # candidates; never-voted ones carry all-abstain mass the
-        # long-form matrix cannot) — counted from the candidates
-        # table, not from L, where distinct(candidate_id) would just
-        # re-derive the voting count and the mass would always be 0
-        n_total = _candidates(spark, sf).count()
-        deps, W = select_dependencies_pseudolikelihood(
-            L, m=7, n_total=n_total, threshold=0.05
-        )
-        rows = [(int(a), int(b), round(float(W[a, b]), 4)) for a, b in sorted(deps)]
+        deps, W = _dependencies(spark, sf)
+        rows = [(a, b, round(float(W[a, b]), 4)) for a, b in sorted(deps)]
         return spark.createDataFrame(
             rows or [(None, None, None)], "lf_a int, lf_b int, weight double"
         ).filter("lf_a is not null")
@@ -503,38 +507,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # learned per-LF coverage/accuracy from the DISTRIBUTED O path;
         # the oracle fits the same model from DuckDB's label matrix —
         # a true cross-engine check of the sufficient-statistics path
-        from snorkel_spark.labelmodel.model import LabelModel
-
-        C, n = _label_counts(spark, sf)
-        lm = LabelModel(m=7).fit(C, n)
         return spark.createDataFrame(
             [
                 (s["lf_id"], round(s["learned_coverage"], 6), round(s["learned_accuracy"], 6))
-                for s in lm.learned_lf_stats()
+                for s in _label_model(spark, sf).learned_lf_stats()
             ],
             "lf_id int, learned_coverage double, learned_accuracy double",
         )
 
-    def g4b_conditional_dependencies(spark, sf):
-        # G4 v2: conditional-independence screen (matrix-completion
-        # residual) — detects correlation GIVEN Y, unlike g4's marginal
-        # screen which also fires on merely-Y-correlated pairs
-        from snorkel_spark.labelmodel.model import select_dependencies_conditional
-
-        C, n = _label_counts(spark, sf)
-        deps, _dev = select_dependencies_conditional(C, n, m=7, threshold=0.05)
-        return spark.createDataFrame(
-            [(int(a), int(b)) for a, b in sorted(deps)] or [(None, None)],
-            "lf_a int, lf_b int",
-        ).filter("lf_a is not null")
-
     def g1_label_model_marginals(spark, sf):
-        from snorkel_spark.labelmodel.model import LabelModel
-
-        L = _label_matrix(spark, sf).cache()
-        C, n = _label_counts(spark, sf)
-        lm = LabelModel(m=7).fit(C, n)
-        return lm.marginals(spark, L).select(
+        L = _label_matrix(spark, sf)
+        return _label_model(spark, sf).marginals(spark, L).select(
             "candidate_id", F.round("prob_true", 6).alias("prob_true")
         )
 
@@ -545,31 +528,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # longer constrain μ̂), then marginals score distributedly.  The
         # oracle replays the identical chain on DuckDB-computed inputs.
         from snorkel_spark.labelmodel.model import LabelModel
-        from snorkel_spark.labelmodel.structure import (
-            select_dependencies_pseudolikelihood,
-        )
 
-        L = _label_matrix(spark, sf).cache()
-        # full candidate count, same rationale as g4c (see there)
-        n_total = _candidates(spark, sf).count()
-        deps, _W = select_dependencies_pseudolikelihood(
-            L, m=7, n_total=n_total, threshold=0.05
-        )
-        C, n = _label_counts(spark, sf)
-        lm = LabelModel(m=7, deps=deps).fit(C, n)
+        L = _label_matrix(spark, sf)
+        deps, _W = _dependencies(spark, sf)
+        lm = LabelModel(m=len(_fixture_lfs(spark)), deps=deps).fit(*_label_counts(spark, sf))
         return lm.marginals(spark, L).select(
             "candidate_id", F.round("prob_true", 6).alias("prob_true")
         )
 
     def g1_triples_labelmodel(spark, sf):
-        from snorkel_spark.labelmodel.model import LabelModel
         from snorkel_spark.plans.pipeline import build_triples
 
-        L = _label_matrix(spark, sf)
-        C, n = _label_counts(spark, sf)
-        lm = LabelModel(m=7).fit(C, n)
-        t = build_triples(_candidates(spark, sf), lm.marginals(spark, L),
-                          threshold=0.5, n_salts=8)
+        marg = _label_model(spark, sf).marginals(spark, _label_matrix(spark, sf))
+        t = build_triples(_candidates(spark, sf), marg, threshold=0.5, n_salts=8)
         return t.select("subj", "pred", "obj", "n_evidence")
 
     # ---- training-data-pipeline operators --------------------------
@@ -1049,16 +1020,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rotated out this round — every entry below is driver-green
         # in CORRECTNESS_r04.json and stays green under
         # check_contract.py + the pytest smoke gate
-        # (g1_triples_labelmodel, m5b_ner_matcher_join and
-        # g4_dependencies displaced by the round-5-new sim_semdedup /
-        # dd_line_dedup / dd_cluster_reps: all three are r04-green and
-        # their operator families stay in-window via
-        # g1_label_model_marginals + n2_triples_mv, m5_ner_matcher, and
-        # g4c_pseudolikelihood_deps respectively)
+        # (g1_triples_labelmodel and m5b_ner_matcher_join were displaced
+        # by the round-5-new sim_semdedup / dd_line_dedup /
+        # dd_cluster_reps: both are r04-green and their operator
+        # families stay in-window via g1_label_model_marginals +
+        # n2_triples_mv and m5_ner_matcher)
         "g1_triples_labelmodel": g1_triples_labelmodel,
         "m5b_ner_matcher_join": m5b_ner_matcher_join,
-        "g4_dependencies": g4_dependencies,
-        "g4b_conditional_dependencies": g4b_conditional_dependencies,
         "n3_salted_entity_counts": n3_salted_entity_counts,
         "dd_kmv_merge": dd_kmv_merge,
         "ts_c4_clean": ts_c4_clean,
@@ -1122,6 +1090,7 @@ def _g1_oracle_entries() -> dict[str, str]:
 
     from snorkel_spark.labelmodel.encoding import compute_O_local
     from snorkel_spark.labelmodel.model import EPS, LabelModel
+    from snorkel_spark.labelmodel.structure import add_abstain_mass, select_dependencies
     from snorkel_spark.oracle import PREFIX_LABELS
 
     con = duckdb.connect()
@@ -1145,39 +1114,14 @@ def _g1_oracle_entries() -> dict[str, str]:
         dense[idx[cid], int(lf)] = int(lab)
     C, n = compute_O_local(dense)
     lm = LabelModel(m=m).fit(C, n)
-    # g4b: per-pair leave-one-block-out expected cells (the screen
-    # refits with each candidate block masked — mirror those fits)
-    ho_rows = []
-    for j1 in range(m):
-        for j2 in range(j1 + 1, m):
-            lo = LabelModel(m=m, deps={(j1, j2)}).fit(C, n)
-            exp_mat = lo.mu @ np.diag(lo.class_balance) @ lo.mu.T
-            for ai in range(2):
-                for bi in range(2):
-                    a, b = j1 * 2 + ai, j2 * 2 + bi
-                    ho_rows.append(
-                        f"({j1}, {j2}, {a}, {b}, {float(exp_mat[a, b])!r})"
-                    )
-    ho_values = ", ".join(ho_rows)
     # g4c: the ICML'17 pseudolikelihood learner on DuckDB-computed
     # pattern counts — same fit code, ordering pinned by the same
     # lexsort the Spark path uses, so floats match bit-for-bit
-    from snorkel_spark.labelmodel.structure import (
-        add_abstain_mass,
-        fit_pseudolikelihood,
-    )
-
     pats, cnts = np.unique(dense, axis=0, return_counts=True)
     # same abstain-mass fold + lexsort the Spark path applies
-    pats, cnts = add_abstain_mass(pats.astype(np.int8), cnts, m, int(n_cand))
-    theta = fit_pseudolikelihood(pats, cnts, m)
-    Wm = np.maximum(np.abs(theta["corr"]), np.abs(theta["corr"].T))
-    dep_rows = [
-        f"({j}, {k}, {round(float(Wm[j, k]), 4)!r})"
-        for j in range(m)
-        for k in range(j + 1, m)
-        if Wm[j, k] > 0.05
-    ]
+    deps, Wm = select_dependencies(
+        *add_abstain_mass(pats.astype(np.int8), cnts, m, int(n_cand)), m)
+    dep_rows = [f"({j}, {k}, {round(float(Wm[j, k]), 4)!r})" for j, k in sorted(deps)]
     g4c_sql = (
         "SELECT CAST(lf_a AS INT) AS lf_a, CAST(lf_b AS INT) AS lf_b, weight"
         f" FROM (VALUES {', '.join(dep_rows)}) t(lf_a, lf_b, weight)"
@@ -1187,12 +1131,6 @@ def _g1_oracle_entries() -> dict[str, str]:
     )
     # g1c: deps from the pseudolikelihood learner masked into the
     # fit — the structure-aware μ̂ as its own VALUES table
-    deps = {
-        (j, k)
-        for j in range(m)
-        for k in range(j + 1, m)
-        if Wm[j, k] > 0.05
-    }
     lm_deps = LabelModel(m=m, deps=deps).fit(C, n)
     logp = [float(np.log(max(b, EPS))) for b in lm.class_balance]
 
@@ -1248,17 +1186,6 @@ def _g1_oracle_entries() -> dict[str, str]:
           FROM linked JOIN lm_marg USING (candidate_id)
           WHERE lm_marg.pt > 0.5
           GROUP BY subj, obj""",
-        "g4b_conditional_dependencies": PREFIX_LABELS
-        + f""" , psi AS (SELECT candidate_id, lf_id * 2 + (label + 1) // 2 AS a FROM label_matrix),
-          nn AS (SELECT COUNT(DISTINCT candidate_id)::DOUBLE AS n FROM psi),
-          cells AS (SELECT p1.a AS a, p2.a AS b, COUNT(*)::DOUBLE AS cnt
-                    FROM psi p1 JOIN psi p2 USING (candidate_id) GROUP BY 1, 2),
-          heldout(j1, j2, a, b, e) AS (VALUES {ho_values})
-          SELECT CAST(h.j1 AS INT) AS lf_a, CAST(h.j2 AS INT) AS lf_b
-          FROM heldout h
-          LEFT JOIN cells c ON c.a = h.a AND c.b = h.b
-          GROUP BY 1, 2
-          HAVING MAX(ABS(COALESCE(c.cnt, 0) / (SELECT n FROM nn) - h.e)) > 0.05""",
         "g4c_pseudolikelihood_deps": g4c_sql,
     }
 
@@ -1766,18 +1693,6 @@ def oracle_sql() -> dict[str, str]:
             CAST(SUM(CASE WHEN mv.prob_true <= 0.5 AND g.label = -1 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
             CAST(SUM(CASE WHEN mv.prob_true <= 0.5 AND g.label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn
           FROM mv JOIN gold g USING (candidate_id)""",
-        "g4_dependencies": PREFIX_LABELS
-        + """ , psi AS (SELECT candidate_id, lf_id * 2 + (label + 1) // 2 AS a FROM label_matrix),
-          nn AS (SELECT COUNT(DISTINCT candidate_id)::DOUBLE AS n FROM psi),
-          cells AS (SELECT p1.a AS a, p2.a AS b, COUNT(*)::DOUBLE AS cnt
-                    FROM psi p1 JOIN psi p2 USING (candidate_id) GROUP BY 1, 2),
-          diag AS (SELECT a, cnt / (SELECT n FROM nn) AS o FROM cells WHERE a = b)
-          SELECT CAST(d1.a // 2 AS INT) AS lf_a, CAST(d2.a // 2 AS INT) AS lf_b
-          FROM diag d1 CROSS JOIN diag d2
-          LEFT JOIN cells c ON c.a = d1.a AND c.b = d2.a
-          WHERE d1.a // 2 < d2.a // 2
-          GROUP BY 1, 2
-          HAVING MAX(ABS(COALESCE(c.cnt, 0) / (SELECT n FROM nn) - d1.o * d2.o)) > 0.05""",
         "n1_entity_link": PREFIX_MENTIONS
         + f""", {alias_dict_sql},
           scored AS (

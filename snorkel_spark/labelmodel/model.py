@@ -20,10 +20,8 @@ SURVEY.md §3.1 step E3):
 - distributed again: marginals = a literal factor map probed per label row +
   one hash aggregation — **no Python at all** on the scoring path.
 
-The dependency screens (G4) compare O with an expected second moment
-E — ``outer(diag, diag)`` for the marginal screen, a fit's μ̂Pμ̂ᵀ for
-the conditional and greedy ones — through one statistic,
-``block_deviation``: the per-LF-pair max |O − E|.
+Dependency selection (G4) is ``structure.select_dependencies``; the
+pairs it selects enter ``fit`` as ``deps``, the mask.
 """
 
 from __future__ import annotations
@@ -55,28 +53,9 @@ class LabelModel:
         epochs: int = 2000,
         prec_init: float = 0.7,
         l2: float = 0.0,
-        constrain_coverage: bool = False,
     ) -> "LabelModel":
         """Full-batch Adam on ‖M ⊙ (O − μPμᵀ)‖² (deterministic: the
-        'SGD' of the paper is full-batch here because O is tiny).
-
-        ``constrain_coverage``: project μ after every step onto the
-        affine subspace Σ_c p_c μ[(j,c'),c] = P(λ_j = c') = diag(O) —
-        the observed per-LF vote rates.  This removes the inflation
-        freedom where the fit explains a strongly coupled
-        (unmasked-dependent) LF block by overstating those LFs'
-        coverage/accuracy while writing off honest blocks — the failure
-        that makes unconstrained structure search misattribute
-        dependencies (``select_dependencies_greedy`` turns it on).
-        Exact additive projection (closed form for a single linear
-        constraint per row), then box clip.  Leave OFF (default) when
-        O's denominator counts only LABELED candidates — the ``n`` of
-        ``compute_O_arrow``, which sums the long-form label-pattern
-        counts and cannot see a candidate no LF voted on: conditioning
-        on 'some LF fired' is a collider that shifts the observed vote
-        rates, and pinning μ to them then biases the accuracies the
-        slack would absorb.
-        """
+        'SGD' of the paper is full-batch here because O is tiny)."""
         k = self.cardinality
         d = self.m * k
         O = C.astype(np.float64) / max(n, 1)
@@ -107,7 +86,6 @@ class LabelModel:
         mt = np.zeros_like(mu)
         vt = np.zeros_like(mu)
         b1, b2, eps = 0.9, 0.999, 1e-8
-        pp = float(p @ p)
         for t in range(1, epochs + 1):
             delta = M * (O - mu @ P @ mu.T)
             grad = -2.0 * (delta + delta.T) @ mu @ P + 2.0 * l2 * mu
@@ -115,16 +93,10 @@ class LabelModel:
             vt = b2 * vt + (1 - b2) * grad * grad
             step = lr * (mt / (1 - b1**t)) / (np.sqrt(vt / (1 - b2**t)) + eps)
             mu = mu - step
-            if constrain_coverage:
-                mu = mu + ((diag - mu @ p) / pp)[:, None] * p[None, :]
             mu = np.clip(mu, EPS, 1 - EPS)
         self.mu = mu
         self.class_balance = p
         return self
-
-    def expected_O(self) -> np.ndarray:
-        """μ̂Pμ̂ᵀ — the second moment the fitted model implies."""
-        return self.mu @ np.diag(self.class_balance) @ self.mu.T
 
     # ---- G3: learned LF stats ---------------------------------------
     def learned_lf_stats(self) -> list[dict]:
@@ -262,164 +234,6 @@ def score_marginals(marginals: DataFrame, gold: DataFrame, b: float = 0.5) -> di
     acc = (tp + tn) / max(tp + fp + tn + fn, 1)
     return {"tp": tp, "fp": fp, "tn": tn, "fn": fn,
             "precision": prec, "recall": rec, "f1": f1, "accuracy": acc}
-
-
-# ---- G4: dependency selection -------------------------------------------
-def block_deviation(O: np.ndarray, E: np.ndarray, m: int, k: int) -> np.ndarray:
-    """Per-pair max |O − E| over each (j1, j2) off-diagonal LF block,
-    upper-triangular — the deviation statistic every screen uses, with
-    E the independence product ``outer(diag, diag)`` or a fit's μ̂Pμ̂ᵀ."""
-    return np.triu(np.abs(O - E).reshape(m, k, m, k).max(axis=(1, 3)), 1)
-
-
-def select_dependencies(
-    C: np.ndarray, n: int, m: int, cardinality: int = 2, threshold: float = 0.05
-) -> set[tuple[int, int]]:
-    """Correlation screen on O (SURVEY.md §2.7 G4 v1 of the ICML'17
-    structure learner): flag LF pairs whose joint-vote cell deviates
-    from independence by > threshold."""
-    O = C.astype(np.float64) / max(n, 1)
-    diag = np.diag(O)
-    D = block_deviation(O, np.outer(diag, diag), m, cardinality)
-    return {(int(j1), int(j2)) for j1, j2 in zip(*np.nonzero(D > threshold))}
-
-
-def select_dependencies_conditional(
-    C: np.ndarray,
-    n: int,
-    m: int,
-    cardinality: int = 2,
-    threshold: float = 0.05,
-    class_balance=None,
-) -> tuple[set[tuple[int, int]], np.ndarray]:
-    """G4 v2 — CONDITIONAL-independence screen (the ICML'17 structure-
-    learning target: λ_j ⊥ λ_k GIVEN Y, not marginal independence).
-
-    Leave-one-block-out residual test: for each LF pair, refit μ̂ with
-    that pair's off-diagonal block MASKED (so the fit cannot absorb the
-    dependency by inflating the pair's accuracies — a plain joint-fit
-    residual gets diluted across blocks by the least-squares
-    compromise), then measure how far the held-out observed block sits
-    from the model's implied second moment μ̂ P μ̂ᵀ.  Under
-    λ_j ⊥ λ_k | Y the held-out block is predicted to sampling noise;
-    a true dependency leaves an O(coverage²) gap, while pairs that are
-    merely both correlated with Y (which fool the marginal screen in
-    ``select_dependencies``) are explained by μ̂ and stay quiet.
-    Deterministic — no Gibbs sampling; m(m−1)/2 refits of a (m·k)²
-    problem, each O(1) in corpus size (⚠ the reference optimizes the
-    equivalent pseudolikelihood objective by sampled SGD:
-    snorkel/learning/structure/gen_learning.py, reconstructed).
-
-    Returns (deps, max-deviation matrix indexed [j1, j2]).
-    """
-    k = cardinality
-    O = C.astype(np.float64) / max(n, 1)
-    dev = np.zeros((m, m))
-    for j1 in range(m):
-        for j2 in range(j1 + 1, m):
-            lm = LabelModel(
-                m=m, cardinality=k, class_balance=class_balance, deps={(j1, j2)}
-            ).fit(C, n)
-            dev[j1, j2] = block_deviation(O, lm.expected_O(), m, k)[j1, j2]
-    deps = {(int(j1), int(j2)) for j1, j2 in zip(*np.nonzero(dev > threshold))}
-    return deps, dev
-
-
-def select_dependencies_greedy(
-    C: np.ndarray,
-    n: int,
-    m: int,
-    cardinality: int = 2,
-    threshold: float = 0.05,
-    grow_tol: float = 0.01,
-    class_balance=None,
-    max_deps: int | None = None,
-) -> tuple[set[tuple[int, int]], list[frozenset[int]]]:
-    """G4 v3 — grow-prune block-masking structure learner with clique
-    extraction (the 'higher-order structures' extension of
-    ``select_dependencies_conditional``).
-
-    GROW: repeatedly fit with the current dependency set masked and
-    mask the worst-deviating remaining block, until every unmasked
-    block fits within ``grow_tol`` (≈ the sampling-noise floor).
-    PRUNE: while the weakest held-out block deviates < ``threshold``
-    under the full mask, unmask it (false positives greedily picked up
-    while μ̂ was still distorted are removed once the real structure is
-    masked).  Internal refits run with ``constrain_coverage=True``:
-    without the observed vote-rate constraint, the least-squares fit
-    can explain a coupled clique by inflating those LFs' coverage/
-    accuracy and write off the honest blocks instead, sending any
-    deviation-guided search to the wrong pairs — so pass ``n`` counting
-    the FULL candidate set (see ``fit``'s collider caveat).
-    Deterministic; O(#deps · m²/2) fits of a (m·k)²
-    problem, each O(1) in corpus size (⚠ the reference optimizes a
-    pseudolikelihood objective with sampled SGD and also parameterizes
-    only pairwise factor types —
-    snorkel/learning/structure/gen_learning.py, reconstructed).
-
-    Returns ``(deps, cliques)`` where ``cliques`` lists the maximal
-    cliques of size ≥ 3 in the selected dependency graph — e.g. three
-    mutually-coupled LFs surface as one 3-clique, the higher-order
-    structure the pairwise list alone obscures (pairwise screens go
-    blind inside a clique: the sibling edges keep μ̂ inflated so each
-    held-out edge looks explained).  Couplings visible only in THIRD
-    moments with pairwise conditional independence (XOR-style) are
-    outside any second-moment fit — same factor family limit as the
-    reference's pairwise dependency types.
-    """
-    k = cardinality
-    O = C.astype(np.float64) / max(n, 1)
-    deps: set[tuple[int, int]] = set()
-    n_pairs = m * (m - 1) // 2
-    # cap: keep at least half the blocks in the objective so μ̂ stays
-    # identifiable
-    cap = max_deps if max_deps is not None else n_pairs // 2
-
-    def refit() -> "LabelModel":
-        return LabelModel(
-            m=m, cardinality=k, class_balance=class_balance, deps=set(deps)
-        ).fit(C, n, constrain_coverage=True)
-
-    while len(deps) < cap:
-        D = block_deviation(O, refit().expected_O(), m, k)
-        for (j1, j2) in deps:
-            D[j1, j2] = -1.0
-        worst = np.unravel_index(np.argmax(D), D.shape)
-        if D[worst] <= grow_tol:
-            break
-        deps.add((int(worst[0]), int(worst[1])))
-    while deps:
-        D = block_deviation(O, refit().expected_O(), m, k)
-        weakest = min(deps, key=lambda pr: D[pr])
-        if D[weakest] >= threshold:
-            break
-        deps.discard(weakest)
-    return deps, dependency_cliques(deps, min_size=3)
-
-
-def dependency_cliques(
-    deps: set[tuple[int, int]], min_size: int = 3
-) -> list[frozenset[int]]:
-    """Maximal cliques of the dependency graph (Bron–Kerbosch, tiny m),
-    filtered to ≥ ``min_size`` members — the multi-LF coupling view."""
-    adj: dict[int, set[int]] = {}
-    for a, b in deps:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    out: list[frozenset[int]] = []
-
-    def bk(r: set[int], p: set[int], x: set[int]):
-        if not p and not x:
-            if len(r) >= min_size:
-                out.append(frozenset(r))
-            return
-        for v in sorted(p):
-            bk(r | {v}, p & adj[v], x & adj[v])
-            p = p - {v}
-            x = x | {v}
-
-    bk(set(), set(adj), set())
-    return sorted(out, key=lambda c: (-len(c), sorted(c)))
 
 
 # ---- G7: grid search ------------------------------------------------------

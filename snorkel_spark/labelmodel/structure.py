@@ -29,6 +29,10 @@ else):  P(λ_j = v, Y = y | λ_{−j}) ∝ exp( θ^acc_j · v·y
     + Σ_{k≠j} θ^acc_k · λ_k·y        (drives the Y posterior)
     + θ^lab_j · 1[v ≠ 0]             (labeling propensity)
     + Σ_{k≠j} θ^corr_{jk} · v·λ_k )  (the ℓ1-selected dependencies)
+
+Binary only, as the reference's model is.  ``select_dependencies`` is
+the package's one G4 operator; the pairs it selects enter the label
+model as ``LabelModel.deps``, the mask of the matrix-completion fit.
 """
 
 from __future__ import annotations
@@ -215,30 +219,24 @@ def fit_pseudolikelihood(
     return {"acc": acc_out, "lab": lab_out, "corr": corr_out}
 
 
-def select_dependencies_pseudolikelihood(
-    L: DataFrame,
-    m: int,
-    n_total: int | None = None,
-    threshold: float = 0.05,
-    l1: float = 0.05,
-    lr: float = 0.1,
-    iters: int = 400,
+def select_dependencies(
+    patterns: np.ndarray, counts: np.ndarray, m: int, threshold: float = 0.05
 ) -> tuple[set[tuple[int, int]], np.ndarray]:
-    """End-to-end G4: distributed pattern compression → exact driver
-    fit → select (j, k), j < k, where the symmetrized correlation
-    weight max(|θ_{jk}|, |θ_{kj}|) > threshold (the reference unions
-    the two subproblems' verdicts the same way).
+    """G4, the one structure learner: the exact pseudolikelihood fit on
+    (patterns, counts) → select (j, k), j < k, where the symmetrized
+    correlation weight max(|θ_{jk}|, |θ_{kj}|) > threshold (the
+    reference unions the two subproblems' verdicts the same way).
+
+    Spark callers pass ``lf_pattern_counts(L, m, n_total)``; the DuckDB
+    oracle passes its own ``add_abstain_mass(np.unique(...))``.  With no
+    candidate at all (the counts sum to 0) there is nothing to fit and
+    no dependency.
 
     Returns (deps, weight matrix W) with W[j, k] the symmetrized weight.
     """
-    patterns, counts = lf_pattern_counts(L, m, n_total)
-    theta = fit_pseudolikelihood(patterns, counts, m, l1=l1, lr=lr, iters=iters)
-    corr = theta["corr"]
-    Wmat = np.maximum(np.abs(corr), np.abs(corr.T))
-    deps = {
-        (j, k)
-        for j in range(m)
-        for k in range(j + 1, m)
-        if Wmat[j, k] > threshold
-    }
-    return deps, Wmat
+    if not counts.sum():
+        return set(), np.zeros((m, m))
+    corr = fit_pseudolikelihood(patterns, counts, m)["corr"]
+    W = np.maximum(np.abs(corr), np.abs(corr.T))
+    deps = {(j, k) for j in range(m) for k in range(j + 1, m) if W[j, k] > threshold}
+    return deps, W

@@ -14,6 +14,11 @@ from snorkel_spark.labelmodel.model import (
     grid_search,
     majority_vote,
     score_marginals,
+)
+from snorkel_spark.labelmodel.structure import (
+    add_abstain_mass,
+    fit_pseudolikelihood,
+    lf_pattern_counts,
     select_dependencies,
 )
 from snorkel_spark.sources.synthetic import make_synthetic_L
@@ -42,11 +47,6 @@ def test_O_paths_agree(spark, synth):
 
 
 def test_lf_pattern_counts_bounded_collect(spark):
-    from snorkel_spark.labelmodel.structure import (
-        fit_pseudolikelihood,
-        lf_pattern_counts,
-    )
-
     m, n = 20, 500
     # high-diversity synthetic matrix: every candidate a distinct
     # pattern (deterministic bit spread), so P = n >> cap
@@ -84,8 +84,6 @@ def test_conflicting_votes_read_from_one_pattern_aggregate(spark):
     """O and the pattern counts read the same label patterns: a
     conflicting duplicate vote books both ψ cells in O and keeps the
     larger label in the vote vector (as ``max`` over the votes would)."""
-    from snorkel_spark.labelmodel.structure import lf_pattern_counts
-
     L = spark.createDataFrame(
         [("a", 0, 1), ("a", 0, -1), ("a", 1, -1), ("b", 0, -1), ("c", 0, 1)],
         "candidate_id string, lf_id int, label int",
@@ -105,8 +103,6 @@ def test_out_of_range_vote_fails_loudly(spark, row, cardinality):
     """An lf_id outside 0..m−1 or a label outside the cardinality's
     range fails the job in both consumers of the pattern aggregate,
     instead of landing in another LF's cell or being dropped."""
-    from snorkel_spark.labelmodel.structure import lf_pattern_counts
-
     L = spark.createDataFrame(
         [("b", 1, 1), row], "candidate_id string, lf_id int, label int"
     )
@@ -115,24 +111,6 @@ def test_out_of_range_vote_fails_loudly(spark, row, cardinality):
     if cardinality == 2:
         with pytest.raises(Exception, match="label matrix row out of range"):
             lf_pattern_counts(L, 2)
-
-
-def test_block_deviation_is_the_per_pair_block_max():
-    """``block_deviation`` equals the per-cell loop every screen used to
-    spell out: max |O − E| over each off-diagonal LF block, j1 < j2."""
-    from snorkel_spark.labelmodel.model import block_deviation
-
-    rng = np.random.default_rng(5)
-    m, k = 5, 3
-    O, E = rng.random((m * k, m * k)), rng.random((m * k, m * k))
-    want = np.zeros((m, m))
-    for j1 in range(m):
-        for j2 in range(j1 + 1, m):
-            for c1 in range(k):
-                for c2 in range(k):
-                    a, b = j1 * k + c1, j2 * k + c2
-                    want[j1, j2] = max(want[j1, j2], abs(O[a, b] - E[a, b]))
-    assert np.array_equal(block_deviation(O, E, m, k), want)
 
 
 def test_accuracy_recovery(spark, synth):
@@ -172,17 +150,6 @@ def test_marginals_spark_equals_oracle(spark, synth):
     for i in labeled_idx[:500]:
         cid = f"c{i:08d}"
         assert abs(spark_m[cid] - local[i, 1]) < 1e-8
-
-
-def test_dependency_selector(spark):
-    L_long, *_ = make_synthetic_L(
-        n=6000, m=4, accs=[0.8] * 4, abstain_rate=0.5, dep_pairs=[(0, 1)], seed=7
-    )
-    sdf = spark.createDataFrame(L_long)
-    C, n = compute_O_arrow(sdf, m=4)
-    deps = select_dependencies(C, n, m=4, threshold=0.12)
-    assert (0, 1) in deps
-    assert all(p == (0, 1) for p in deps)
 
 
 def test_majority_vote_and_scorer(spark):
@@ -262,8 +229,8 @@ def test_fit_with_dependency_mask_improves_correlated_recovery(spark):
     )
     sdf = spark.createDataFrame(L_long)
     C, n = compute_O_arrow(sdf, m=5)
-    deps = select_dependencies(C, n, m=5, threshold=0.12)
-    assert (0, 1) in deps
+    deps, _W = select_dependencies(*lf_pattern_counts(sdf, 5, len(Y)), 5)
+    assert deps == {(0, 1)}
     plain = LabelModel(m=5).fit(C, n)
     masked = LabelModel(m=5, deps=deps).fit(C, n)
     # empirical accuracies of the copied LF pair
@@ -280,97 +247,95 @@ def test_fit_with_dependency_mask_improves_correlated_recovery(spark):
     assert e_masked[[0, 1]].mean() <= e_plain[[0, 1]].mean() + 0.02
 
 
-def test_conditional_screen_vs_marginal():
-    """G4 v2: the conditional-independence screen flags a truly
-    dependent pair (duplicated LF) but NOT a pair that is merely
-    correlated through Y — which fools the marginal screen."""
-    import numpy as np
+def _noisy(rng, Y, acc, cov):
+    lab = np.where(rng.random(len(Y)) < acc, Y, -Y)
+    lab[rng.random(len(Y)) > cov] = 0
+    return lab
 
-    from snorkel_spark.labelmodel.encoding import compute_O_local
-    from snorkel_spark.labelmodel.model import (
-        select_dependencies,
-        select_dependencies_conditional,
+
+def _copied_pair():
+    *_, L = make_synthetic_L(
+        n=6000, m=4, accs=[0.8] * 4, abstain_rate=0.5, dep_pairs=[(0, 1)], seed=7
     )
+    return L, {(0, 1)}
 
+
+def _strongly_copied_pair():
+    *_, L = make_synthetic_L(
+        n=8000, m=5, accs=[0.85, 0.85, 0.8, 0.75, 0.7], abstain_rate=0.5,
+        dep_pairs=[(0, 1)], dep_strength=0.95, seed=3,
+    )
+    return L, {(0, 1)}
+
+
+def _duplicate_lf():
+    # LF 2 is an exact copy of LF 0; LFs 0 and 1 are merely correlated
+    # through Y, which a marginal-independence screen flags as well
     rng = np.random.default_rng(7)
-    n = 20000
-    Y = rng.choice([-1, 1], n)
-
-    def noisy(acc, cov):
-        lab = np.where(rng.random(n) < acc, Y, -Y)
-        lab[rng.random(n) > cov] = 0
-        return lab
-
-    a = noisy(0.9, 0.7)
-    b = noisy(0.9, 0.6)
-    c = a.copy()  # exact duplicate of a — a true dependency
-    d = noisy(0.85, 0.65)
-    e = noisy(0.8, 0.7)
-    # m=5: the three independent LFs anchor each μ̂ column, so the fit
-    # cannot absorb the duplicate block (with m=3 it can — the model is
-    # under-constrained and the screen would be blind)
-    L = np.stack([a, b, c, d, e], axis=1)
-    C, nn = compute_O_local(L)
-    marg = select_dependencies(C, nn, m=5, threshold=0.05)
-    cond, dev = select_dependencies_conditional(C, nn, m=5, threshold=0.05)
-    assert (0, 2) in cond, (cond, dev.max())
-    assert (0, 1) not in cond, (cond, dev)
-    assert (0, 1) in marg  # the marginal screen's false positive
+    Y = rng.choice([-1, 1], 20000)
+    a = _noisy(rng, Y, 0.9, 0.7)
+    b = _noisy(rng, Y, 0.9, 0.6)
+    d = _noisy(rng, Y, 0.85, 0.65)
+    e = _noisy(rng, Y, 0.8, 0.7)
+    return np.stack([a, b, a.copy(), d, e], axis=1), {(0, 2)}
 
 
-def test_greedy_structure_finds_3_clique():
-    """G4 v3: three mutually-coupled LFs (one LF planted twice more as
-    near-duplicates) surface as all three pairwise dependencies AND one
-    maximal 3-clique; independent LFs stay out of the graph."""
-    import numpy as np
-
-    from snorkel_spark.labelmodel.encoding import compute_O_local
-    from snorkel_spark.labelmodel.model import select_dependencies_greedy
-
+def _near_duplicate_triple():
+    # LFs 1 and 2 are LF 0 with 2 % of its votes flipped: a 3-clique
     rng = np.random.default_rng(11)
-    n = 20000
-    Y = rng.choice([-1, 1], n)
-
-    def noisy(acc, cov):
-        lab = np.where(rng.random(n) < acc, Y, -Y)
-        lab[rng.random(n) > cov] = 0
-        return lab
+    Y = rng.choice([-1, 1], 20000)
 
     def perturb(base, flip=0.02):
         out = base.copy()
-        mask = rng.random(n) < flip
+        mask = rng.random(len(Y)) < flip
         out[mask] = -out[mask]
         return out
 
-    a = noisy(0.9, 0.7)
-    b = perturb(a)   # near-duplicate of a
-    c = perturb(a)   # near-duplicate of a → {a,b,c} is a 3-clique
-    d = noisy(0.85, 0.65)
-    e = noisy(0.8, 0.7)
-    f = noisy(0.88, 0.6)
-    L = np.stack([a, b, c, d, e, f], axis=1)
-    C, nn = compute_O_local(L)
-    deps, cliques = select_dependencies_greedy(C, nn, m=6)
-    assert {(0, 1), (0, 2), (1, 2)} <= deps, deps
-    assert frozenset({0, 1, 2}) in cliques, (deps, cliques)
-    # no dependency touching the independent LFs
-    assert all(j1 <= 2 and j2 <= 2 for (j1, j2) in deps), deps
+    a = _noisy(rng, Y, 0.9, 0.7)
+    b, c = perturb(a), perturb(a)
+    d = _noisy(rng, Y, 0.85, 0.65)
+    e = _noisy(rng, Y, 0.8, 0.7)
+    f = _noisy(rng, Y, 0.88, 0.6)
+    return np.stack([a, b, c, d, e, f], axis=1), {(0, 1), (0, 2), (1, 2)}
+
+
+@pytest.mark.parametrize(
+    "make",
+    [_copied_pair, _strongly_copied_pair, _duplicate_lf, _near_duplicate_triple],
+    ids=["copied_pair", "strongly_copied_pair", "duplicate_lf", "near_duplicate_triple"],
+)
+def test_structure_learner_recovers_planted(make):
+    """G4 on NumPy pattern counts (the oracle's path): exactly the
+    planted pairs are selected, and the ℓ1 prox drives every other
+    pair's weight to exactly 0 (not just below the threshold) — also
+    for pairs merely correlated through Y and inside a 3-clique."""
+    L, planted = make()
+    m = L.shape[1]
+    pats, cnts = np.unique(L, axis=0, return_counts=True)
+    deps, W = select_dependencies(*add_abstain_mass(pats.astype(np.int8), cnts, m, None), m)
+    assert deps == planted, (deps, W.round(3))
+    off = [W[j, k] for j in range(m) for k in range(m)
+           if (min(j, k), max(j, k)) not in planted]
+    assert all(w == 0.0 for w in off), W.round(3)
+
+
+@pytest.mark.parametrize("n_total", [None, 10])
+def test_empty_label_matrix_has_no_dependencies(spark, n_total):
+    """No LF fired: the learner selects nothing (with ``n_total`` the
+    corpus is all-abstain mass) instead of dividing by a zero count."""
+    L = spark.createDataFrame([], "candidate_id long, lf_id int, label int")
+    pats, cnts = lf_pattern_counts(L, 3, n_total)
+    assert int(cnts.sum()) == (n_total or 0)
+    deps, W = select_dependencies(pats, cnts, 3)
+    assert deps == set() and W.shape == (3, 3) and not W.any()
 
 
 def test_pseudolikelihood_structure_planted(spark):
-    """G4 v4 (the reference's ICML'17 algorithm shape): ℓ1
+    """G4 (the reference's ICML'17 algorithm): ℓ1
     pseudolikelihood over distributed pattern counts recovers exactly
     the planted dependencies — an exact copy and a 90%-coupled
     near-copy — with every merely-Y-correlated pair's weight driven to
     0 by the prox (not just 'below threshold')."""
-    import numpy as np
-
-    from snorkel_spark.labelmodel.structure import (
-        fit_pseudolikelihood,
-        lf_pattern_counts,
-        select_dependencies_pseudolikelihood,
-    )
-
     rng = np.random.default_rng(0)
     n, m = 4000, 6
     Y = rng.choice([-1, 1], n)
@@ -386,13 +351,13 @@ def test_pseudolikelihood_structure_planted(spark):
         for i in range(n) for j in range(m) if L[i, j] != 0
     ]
     Ldf = spark.createDataFrame(long_rows, "candidate_id long, lf_id int, label int")
-    deps, W = select_dependencies_pseudolikelihood(Ldf, m=m, n_total=n)
+    pats, cnts = lf_pattern_counts(Ldf, m, n_total=n)
+    deps, W = select_dependencies(pats, cnts, m)
     assert deps == {(0, 4), (1, 5)}, (deps, W.round(3))
     off = [W[j, k] for j in range(m) for k in range(j + 1, m)
            if (j, k) not in {(0, 4), (1, 5)}]
     assert max(off) == 0.0, W.round(3)
     # the distributed pattern compression is lossless vs NumPy
-    pats, cnts = lf_pattern_counts(Ldf, m, n_total=n)
     ref_p, ref_c = np.unique(L, axis=0, return_counts=True)
     order = np.lexsort(ref_p.T[::-1])
     assert (pats == ref_p[order]).all() and (cnts == ref_c[order]).all()
