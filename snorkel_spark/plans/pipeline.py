@@ -12,6 +12,9 @@ Design:
   footers** (Catalog.file_metrics) — metadata-only reads, so each stage
   output is scanned exactly once (by its own write); rows land in the
   catalog's ``_metrics.jsonl``;
+- each lineage row also carries the stage's compile counters
+  (``jvm_counters``): Janino classes, JIT milliseconds and loaded
+  classes of the driver JVM — in local mode the JVM that runs the tasks;
 - the reference's ``UDFRunner.clear()`` rerun-replace semantics
   (⚠ snorkel/udf.py ~L1–200, SURVEY.md §2.9 U1) map to "new snapshot
   wins".
@@ -78,6 +81,20 @@ def _lf_body_key(fn) -> str:
     return f"{fn.__module__}.{fn.__qualname__}:{code}"
 
 
+def jvm_counters(spark: SparkSession) -> dict[str, int]:
+    """The driver JVM's cumulative compile and class-loading counts:
+    Janino classes compiled by Spark's codegen, milliseconds the JIT
+    compiler threads spent (summed over threads), classes loaded."""
+    jvm = spark.sparkContext._jvm
+    mx = jvm.java.lang.management.ManagementFactory
+    return {
+        "codegen_classes": jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        "jit_ms": mx.getCompilationMXBean().getTotalCompilationTime(),
+        "classes_loaded": mx.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    }
+
+
 @dataclass
 class PipelineContext:
     spark: SparkSession
@@ -113,12 +130,14 @@ class PipelineContext:
         snap = self.find_completed(stage, inputs)
         if snap is not None:
             return self.catalog.read(self.spark, stage, snap), snap, True
+        c0 = jvm_counters(self.spark)
         t0 = time.time()
         df = build()
         snap = self.catalog.write(df, stage, partition_by=partition_by,
                                   meta=self._lineage_key(stage, inputs))
         out = self.catalog.read(self.spark, stage, snap)
         wall_ms = int((time.time() - t0) * 1000)
+        c1 = jvm_counters(self.spark)
         # per-partition rows from parquet footers (metadata-only) — the
         # stage output is scanned exactly once: by its write.
         self.catalog.log_metrics(
@@ -132,6 +151,7 @@ class PipelineContext:
                 **self._lineage_key(stage, inputs),
                 "snapshot_id": snap,
                 "wall_ms": wall_ms,
+                **{k: c1[k] - c0[k] for k in c1},
                 "committed_at": time.time(),
             }
         )

@@ -5,6 +5,24 @@ Replaces the reference's multiprocess ``UDFRunner`` fan-out
 with Spark executor parallelism.  All knobs here are chosen for the
 100 TB target (AQE on, Arrow batching, partial aggregation) and merely
 scaled down by core count for local testing.
+
+Two settings size the driver JVM's compilers.  The codegen cache holds
+1 000 generated classes, so the warm-up's 24 and the KG chain's 77 all
+fit and a warm pass compiles none; with the default of 100, warm passes
+recompiled 22–28 classes in some sessions.  On a ``local…`` master the
+driver JVM starts with ``-XX:CICompilerCount=2``: one C1 and one C2
+compiler thread, where HotSpot gives a 4-CPU box two C2 threads.  In
+local mode that JVM plans and runs every task, and JIT compilation is
+most of a pass's CPU (16 s of a 27 s cold ``batch_small`` pass on 4
+cores).  With one C2 thread the tiered policy still compiles the
+hottest methods first, and methods that cool while queued are dropped
+instead of compiled; the cost is a cold single-task stage, whose hot
+methods wait longer for C2 while the other cores idle (the sf0.1
+sentences stage: 3.4 → 3.9 s).  The flag is gated to local masters:
+on a cluster the driver only plans and the executors are other JVMs,
+so their ergonomics stay untouched.  A JVM started by ``spark-submit`` is
+already running when this code runs, so the flag cannot reach it; pass
+``--driver-java-options -XX:CICompilerCount=2`` there.
 """
 
 from __future__ import annotations
@@ -33,12 +51,15 @@ def get_spark(
     real cluster you would omit it and let ``spark-submit`` decide; the
     partitioning logic below only keys off the session's parallelism,
     never off "local mode", so the same code ships unchanged via
-    ``spark-submit --py-files``.
+    ``spark-submit --py-files``.  The one local-only setting is the
+    driver's JIT flag (module docstring): it goes before any
+    ``spark.driver.extraJavaOptions`` in ``extra``, so a caller's own
+    ``-XX:CICompilerCount`` wins.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     master = cores if isinstance(cores, str) and cores.startswith(("local", "spark:", "yarn")) else f"local[{cores}]"
-    n_cores = os.cpu_count() or 8
+    n_cores = len(os.sched_getaffinity(0))
     if master.startswith("local[") and master[6:-1].isdigit():
         n_cores = int(master[6:-1])
     if shuffle_partitions is None:
@@ -83,11 +104,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         b = b.config("spark.local.dir", local_dir)
-    for k, v in (extra or {}).items():
+    extra = dict(extra or {})
+    if master.startswith("local"):
+        key = "spark.driver.extraJavaOptions"
+        extra[key] = f"-XX:CICompilerCount=2 {extra.get(key, '')}".strip()
+    for k, v in extra.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     _warm_engine(spark)
@@ -100,12 +126,12 @@ def _warm_engine(spark: SparkSession) -> None:
     higher-order-function paths (split/filter/transform), regex, md5,
     explode, hash aggregation, and a tiny parquet write+read — over a
     few thousand SYNTHETIC rows (spark.range; no input data touched).
-    The first pipeline stage of a fresh JVM otherwise absorbs 1.5–2.5 s
-    of this one-time JIT/class-loading into its wall (measured on the
-    parse stage: 7.0 s → 5.7 s with this warm-up).  Same principle as
-    the classic `range().sum()` session warm-up, with coverage matched
-    to the operators this engine actually runs; guarded by a conf flag
-    so repeated get_spark calls warm once."""
+    It compiles 24 Janino classes, none of which the KG chain reuses:
+    what it warms is class loading and the JIT of the shared execution
+    code.  On 4 cores it takes about 6.5 s of ``get_spark``'s 13 s
+    wall, and removing it raised ``mention_dense``'s cold-pass CPU by
+    21 % in an earlier ablation.  Guarded by a conf flag so repeated
+    get_spark calls warm once."""
     try:
         if spark.conf.get("spark.snorkel.engineWarm", None):
             return

@@ -52,6 +52,24 @@ def test_lineage_and_metrics_written(pipeline_run):
     assert {"stage", "partition_id", "output_rows", "wall_ms"} <= set(met[0])
 
 
+def test_warm_pass_compiles_no_class(spark, tmp_path_factory):
+    """The codegen cache holds the whole chain: a second pass in the
+    same session, into a fresh catalog, compiles no Janino class."""
+    passes = []
+    for i in range(2):
+        cat = Catalog(str(tmp_path_factory.mktemp(f"warehouse_pass{i}")))
+        run_kg_pipeline(spark, SF, cat)
+        passes.append(cat.lineage())
+    for rows in passes:
+        assert [r["stage"] for r in rows] == [
+            "sentences", "candidates", "label_matrix", "marginals", "triples"
+        ]
+        assert all(r["jit_ms"] >= 0 and r["classes_loaded"] >= 0 for r in rows), rows
+    assert {r["stage"]: r["codegen_classes"] for r in passes[1]} == dict.fromkeys(
+        ("sentences", "candidates", "label_matrix", "marginals", "triples"), 0
+    )
+
+
 def test_resume_skips_completed_stages(spark, pipeline_run):
     cat, info = pipeline_run
     info2 = run_kg_pipeline(spark, SF, cat)

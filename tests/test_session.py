@@ -1,6 +1,7 @@
 """Session factory: the best-effort warm-up fails loudly, never
 fatally; Python workers import the package without the driver's
-PYTHONPATH being touched."""
+PYTHONPATH being touched; a local driver JVM runs one C2 thread and
+keeps the caller's Java options."""
 
 import logging
 import os
@@ -41,8 +42,14 @@ import os
 from snorkel_spark.functions.labeling import LF, apply_lfs
 from snorkel_spark.session import get_spark
 
-spark = get_spark(cores=2)
+spark = get_spark(cores=2, extra={"spark.driver.extraJavaOptions": "-Dsnorkel.probe=1"})
 assert "PYTHONPATH" not in os.environ, os.environ["PYTHONPATH"]
+jvm = spark.sparkContext._jvm
+hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+assert hotspot.getVMOption("CICompilerCount").getValue() == "2"
+assert jvm.java.lang.System.getProperty("snorkel.probe") == "1"
 rows = spark.createDataFrame(
     [("c1", "married"), ("c2", "brother of")], "candidate_id string, text_between string"
 )

@@ -2,7 +2,12 @@
 prints a row count.  Exercises the --py-files deployment path:
 
     python tools/make_pyfiles_zip.py
-    spark-submit --master local[4] --py-files snorkel_spark.zip tools/submit_job.py
+    spark-submit --master local[4] --driver-java-options -XX:CICompilerCount=2 \
+        --py-files snorkel_spark.zip tools/submit_job.py
+
+``spark-submit`` starts the driver JVM before this script runs, so no
+JVM option set from Python reaches it: a local master's JIT flag (see
+``snorkel_spark/session.py``) is passed on the command line.
 """
 
 from __future__ import annotations
