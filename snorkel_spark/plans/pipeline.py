@@ -81,17 +81,29 @@ def _lf_body_key(fn) -> str:
     return f"{fn.__module__}.{fn.__qualname__}:{code}"
 
 
+@functools.cache
+def _jvm_meters(jvm) -> tuple:
+    """``jvm_counters``' three JVM handles, resolved once per driver JVM:
+    each package prefix of a py4j path such as
+    ``jvm.java.lang.management`` is a failed class lookup that scans the
+    whole classpath (1–2 ms a path)."""
+    mx = jvm.java.lang.management.ManagementFactory
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME(),
+        mx.getCompilationMXBean(),
+        mx.getClassLoadingMXBean(),
+    )
+
+
 def jvm_counters(spark: SparkSession) -> dict[str, int]:
     """The driver JVM's cumulative compile and class-loading counts:
     Janino classes compiled by Spark's codegen, milliseconds the JIT
     compiler threads spent (summed over threads), classes loaded."""
-    jvm = spark.sparkContext._jvm
-    mx = jvm.java.lang.management.ManagementFactory
+    codegen, jit, loading = _jvm_meters(spark.sparkContext._jvm)
     return {
-        "codegen_classes": jvm.org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME().getCount(),
-        "jit_ms": mx.getCompilationMXBean().getTotalCompilationTime(),
-        "classes_loaded": mx.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "codegen_classes": codegen.getCount(),
+        "jit_ms": jit.getTotalCompilationTime(),
+        "classes_loaded": loading.getTotalLoadedClassCount(),
     }
 
 

@@ -1,5 +1,7 @@
 """The driver-side fixture gazetteer: its rows equal the DuckDB
-oracle's, and the in-row linker equals the broadcast-join linker."""
+oracle's, and the in-row linker equals the broadcast-join linker; on
+non-ASCII text the engine's ``lower`` agrees with the Python twins that
+key the matcher and the linker."""
 
 import pyspark.sql.functions as F
 
@@ -52,3 +54,40 @@ def test_link_text_map_equals_link_mentions(spark, mentions):
     assert want["Anna3 Lee3"][2] == TIERS[1] * 0.9
     assert want["lee3s"][2] == TIERS[2] * 0.6
     assert "lees3" not in want and "annas" not in want
+
+
+# lowercase mappings that are not one code point to one: a final sigma,
+# a dotted capital I (→ i + U+0307), a capital sharp s, a titlecase
+# digraph; plus accented Latin and Cyrillic
+NON_ASCII_WORDS = ["Émile", "ÉMILE", "ΣΟΦΙΑΣ", "Σοφιας", "İstanbul", "İSTANBUL", "STRAẞE",
+                   "ǅemal", "МОСКВА", "Ŧests"]
+NON_ASCII_ALIASES = [("Émile Zola", "e1", "Émile Zola", 0.9), ("Σοφιας", "e2", "Σοφιας", 0.8),
+                     ("İstanbul", "e3", "İstanbul", 0.7)]
+
+
+def test_non_ascii_lower_matches_python_twins(spark):
+    from snorkel_spark.operators.linker import TIERS, _lemma_py, link_text_map
+    from snorkel_spark.operators.matchers import DictionaryMatch
+    from snorkel_spark.operators.parser import rule_lemma
+
+    words = spark.createDataFrame([(w,) for w in NON_ASCII_WORDS], "text string")
+    got = {r["text"]: r["l"] for r in words.select("text", rule_lemma(F.col("text")).alias("l"))
+           .collect()}
+    assert got == {w: _lemma_py(w) for w in NON_ASCII_WORDS}
+
+    # each alias queried in other casings; "σοφιασ" ends in a non-final
+    # sigma, which lowercasing "ΣΟΦΙΑΣ" never produces
+    queries = ["Émile Zola", "ÉMILE ZOLA", "émile zola", "ΣΟΦΙΑΣ", "İSTANBUL", "σοφιασ"]
+    texts = spark.createDataFrame([(q,) for q in queries], "text string")
+    matched = DictionaryMatch(d={a for a, *_ in NON_ASCII_ALIASES}).apply(texts)
+    assert {r["text"] for r in matched.collect()} == set(queries) - {"σοφιασ"}
+    links = {r["text"]: r["l"] and (r["l"]["entity_id"], r["l"]["link_score"]) for r in
+             texts.select("text", link_text_map("text", NON_ASCII_ALIASES).alias("l")).collect()}
+    assert links == {
+        "Émile Zola": ("e1", TIERS[0] * 0.9),
+        "ÉMILE ZOLA": ("e1", TIERS[1] * 0.9),
+        "émile zola": ("e1", TIERS[1] * 0.9),
+        "ΣΟΦΙΑΣ": ("e2", TIERS[1] * 0.8),
+        "İSTANBUL": ("e3", TIERS[1] * 0.7),
+        "σοφιασ": None,
+    }

@@ -1,7 +1,9 @@
 """Session factory: the best-effort warm-up fails loudly, never
 fatally; Python workers import the package without the driver's
 PYTHONPATH being touched; a local driver JVM runs one C2 thread and
-keeps the caller's Java options."""
+keeps the caller's Java options; ``lower`` never builds ICU's
+case-mapping table; a ``cores`` string is a master URL unless it is a
+core count."""
 
 import logging
 import os
@@ -50,6 +52,26 @@ hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
 )
 assert hotspot.getVMOption("CICompilerCount").getValue() == "2"
 assert jvm.java.lang.System.getProperty("snorkel.probe") == "1"
+
+# the rule lemma lowercases; with ICU case mapping on, the first lower
+# in a JVM initializes CollationAwareUTF8String, which title-cases every
+# code point
+from snorkel_spark.operators.parser import parse_sentences
+
+raw = spark.createDataFrame(
+    [("d1", [("text", "ÉMILE ZOLA was", None, 0)])],
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+)
+lemmas = [r["lemmas"] for r in parse_sentences(raw).select("lemmas").collect()]
+assert lemmas == [["émile", "zola", "was"]], lemmas
+assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+field = jvm.java.lang.Class.forName("sun.misc.Unsafe").getDeclaredField("theUnsafe")
+field.setAccessible(True)
+collation = jvm.java.lang.Class.forName(
+    "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String", False,
+    jvm.java.lang.Thread.currentThread().getContextClassLoader(),
+)
+assert field.get(None).shouldBeInitialized(collation), "ICU case-mapping table was built"
 rows = spark.createDataFrame(
     [("c1", "married"), ("c2", "brother of")], "candidate_id string, text_between string"
 )
@@ -70,3 +92,14 @@ def test_python_workers_import_package_without_driver_pythonpath(tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_cores_string_is_a_master_url_unless_a_core_count():
+    from snorkel_spark.session import master_url
+
+    assert master_url(4) == "local[4]"
+    assert master_url("4") == "local[4]"
+    assert master_url("*") == "local[*]"
+    for url in ("local[2]", "local", "spark://h:7077", "yarn", "k8s://https://h:6443",
+                "mesos://h:5050"):
+        assert master_url(url) == url
