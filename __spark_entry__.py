@@ -671,17 +671,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def dd_minhash_pairs(spark, sf):
         # production defaults: 128 hashes, 32 bands (r=4), bucket cap 64;
-        # unigram sets → threshold 0.9 (see dedup.py docstring on why
+        # unigram sets → threshold 0.9 (see ngram_jaccard_pairs on why
         # unigram Jaccard is only meaningful near 1.0 under a small vocab)
-        from snorkel_spark.operators.dedup import minhash_lsh_pairs
+        from snorkel_spark.operators.dedup import ngram_jaccard_pairs
 
-        return minhash_lsh_pairs(spark.read.parquet(f"{sf}/documents.parquet"))
+        return ngram_jaccard_pairs(
+            spark.read.parquet(f"{sf}/documents.parquet"), threshold=0.9, shingle_n=1
+        )
 
     def dd_bucket_stats(spark, sf):
-        # 32 hashes / 16 bands for the GATE query: the audit histogram's
-        # shape is what's checked; fewer hashes keeps the DuckDB twin
-        # (which must recompute every md5) inside the driver's budget.
-        # Production default stays 128/32 (dedup.py).
+        # 32 hashes / 16 bands on 3-shingles: the audit histogram's
+        # shape is what's checked, and it matches dd_ngram_jaccard's
+        # band params.  Production default stays 128/32 (dedup.py).
         from snorkel_spark.operators.dedup import lsh_bucket_stats
 
         return lsh_bucket_stats(
@@ -701,9 +702,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         # 32 hashes / 16 bands (r=2, s* = 0.25): exact-verify makes the
         # result identical on both sides for ANY band params; r=2 recall
-        # at the 0.5 threshold is ≥ 1-(1-0.25)^16 ≈ 0.99, and the 4×
-        # cheaper signature keeps the DuckDB twin inside the driver's
-        # budget.  Production default stays 128/32.
+        # at the 0.5 threshold is ≥ 1-(1-0.25)^16 ≈ 0.99.  Production
+        # default stays 128/32.
         return ngram_jaccard_pairs(
             spark.read.parquet(f"{sf}/documents.parquet"),
             threshold=0.5, n_hashes=32, n_bands=16,
@@ -725,11 +725,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # canonical-doc selection over the SAME clustering as
         # dd_duplicate_clusters: every doc flagged keep/prune, keep =
         # longest member (ties → lowest doc_id string order)
-        from snorkel_spark.operators.dedup import cluster_representatives
+        from snorkel_spark.operators.dedup import cluster_representatives, duplicate_clusters
 
+        docs = spark.read.parquet(f"{sf}/documents.parquet")
         return cluster_representatives(
-            spark.read.parquet(f"{sf}/documents.parquet"),
-            threshold=0.5, n_hashes=32, n_bands=16,
+            docs, duplicate_clusters(docs, threshold=0.5, n_hashes=32, n_bands=16)
         )
 
     def dd_line_dedup(spark, sf):
@@ -794,7 +794,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from snorkel_spark.sources.interleaved import synthesize_raw_documents
 
         m = media_spans(synthesize_raw_documents(spark, sf))
-        return extract_features(fetch_payloads(m), fake=True)
+        return extract_features(fetch_payloads(m))
 
     def mm_frame_sample(spark, sf):
         from snorkel_spark.operators.multimodal import fetch_payloads, frame_sample, media_spans
@@ -1211,15 +1211,30 @@ def _sset_sql(shingle_n: int) -> str:
 
 def _minhash_cte_sql(n_hashes: int, n_bands: int, shingle_n: int, max_bucket: int) -> str:
     """Shared CTE chain: sets → signatures → band keys → capped buckets
-    → candidate pairs — the exact mirror of dedup._lsh_jaccard_pairs."""
+    → candidate pairs — the exact mirror of dedup.ngram_jaccard_pairs.
+    ``sigs`` is the bit-exact twin of dedup.minhash_signatures: each
+    non-null text's shingles hashed once to their md5 prefix x, then
+    sig[i] = MIN((a_i·x + b_i) % p) over a cross join with the same
+    coefficients (every intermediate < 2⁶³, so BIGINT holds it)."""
+    from snorkel_spark.operators.dedup import (
+        MINHASH_PRIME,
+        SHINGLE_HASH_DIGITS,
+        minhash_coefficients,
+    )
+
+    a, b = minhash_coefficients(n_hashes)
+    coef = ", ".join(f"({i}, {ai}, {bi})" for i, (ai, bi) in enumerate(zip(a.tolist(), b.tolist())))
     r = n_hashes // n_bands
     return f"""
-      t AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, {_sset_sql(shingle_n)} AS sset
+      t AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, text, {_sset_sql(shingle_n)} AS sset
             FROM documents),
-      sigs AS (SELECT doc_id, sset,
-                 list_transform(range(0, {n_hashes}),
-                   hi -> list_min(list_transform(sset, ht -> md5(hi || ':' || ht)))) AS sig
-               FROM t),
+      hx AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, {SHINGLE_HASH_DIGITS}))::BIGINT AS x
+             FROM (SELECT doc_id, unnest(sset) AS sh FROM t WHERE text IS NOT NULL)),
+      coef(hi, a, b) AS (VALUES {coef}),
+      sigs AS (SELECT doc_id, list(h ORDER BY hi) AS sig
+               FROM (SELECT doc_id, hi, MIN((a * x + b) % {MINHASH_PRIME}) AS h
+                     FROM hx CROSS JOIN coef GROUP BY doc_id, hi)
+               GROUP BY doc_id),
       bands AS (SELECT doc_id,
                   unnest(list_transform(range(0, {n_bands}),
                     bb -> bb || '|' || array_to_string(sig[bb * {r} + 1 : bb * {r} + {r}], '|'))) AS band_key

@@ -19,26 +19,30 @@ Scale notes (the whole point of these shapes):
   distribution so dropped buckets are auditable, never silent.
 - SimHash: projection → same-signature groupBy.
 
-Hash choice is a backend knob: ``hash_backend='md5'`` (default, hex
-string — present and bit-identical in Spark and DuckDB, so every
-operator has an exact SQL oracle) or ``'xxhash64'`` (JVM integer hash,
-~an order of magnitude cheaper per shingle — the production choice at
-real scale; no DuckDB twin, so gate queries keep md5).  Both run the
-identical banding/verification plan; because candidates are
-exact-verified, the final pair set is insensitive to the backend up to
-banding recall (tested).
+One signature family: each distinct shingle is hashed ONCE to a 32-bit
+integer x (its md5 prefix, ``sketches._token_hash``), and
+h_i = min over shingles of (a_i·x + b_i) mod p, p = 2³¹ − 1, runs as
+one NumPy pass per Arrow batch.  Every intermediate fits a signed 64-bit
+integer, so ``__spark_entry__._minhash_cte_sql`` (DuckDB, the same
+coefficients) is its bit-exact twin and every MinHash operator has an
+exact SQL oracle.  A null text has no shingle set: it gets no signature
+and never pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import log
+from .sketches import _token_hash
 
 N_MINHASH = 128
 N_BANDS = 32  # rows per band r = 128/32 = 4
 MAX_BUCKET = 64
+MINHASH_PRIME = (1 << 31) - 1
+SHINGLE_HASH_DIGITS = 8  # x = the first 8 hex digits of md5: 32 bits
 
 
 def exact_dup_groups(docs: DataFrame) -> DataFrame:
@@ -69,90 +73,55 @@ def _with_sets(docs: DataFrame, shingle_n: int) -> DataFrame:
     )
 
 
-def _hash_fn_sql(hash_backend: str) -> str:
-    if hash_backend not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_backend must be 'md5' or 'xxhash64', got {hash_backend!r}")
-    return hash_backend
+def minhash_coefficients(n_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """(a, b): the int64 coefficients of h_i(x) = (a_i·x + b_i) mod p,
+    i < n_hashes, both in [1, p).  Drawn from NumPy's frozen legacy
+    ``RandomState(1)`` stream, so they are the same on every NumPy
+    version; the DuckDB twin inlines these values."""
+    ab = np.random.RandomState(1).randint(1, MINHASH_PRIME, size=(n_hashes, 2), dtype=np.int64)
+    return ab[:, 0], ab[:, 1]
 
 
 def minhash_signatures(
     docs: DataFrame,
     n_hashes: int = N_MINHASH,
     shingle_n: int = 1,
-    hash_backend: str = "md5",
 ) -> DataFrame:
-    """Per-doc MinHash signature over the distinct shingle set.  Pure
-    projection — no shuffle.  Two backends:
+    """(doc_id, sig): per-doc MinHash signature over the distinct
+    shingle set, sig[i] = min over shingles of (a_i·x + b_i) mod p with
+    x the shingle's 32-bit md5 prefix.  No shuffle.
 
-    - ``'md5'``: h_i = min over shingles of md5(i || ':' || shingle) —
-      hex strings, bit-identical in DuckDB, the oracle-parity default.
-      Measured cost note: the n_hashes × |sset| inner loop runs as an
-      INTERPRETED higher-order expression (Spark does not codegen
-      lambda bodies), so per-shingle cost is dominated by closure eval
-      + string building, not the digest itself — a drop-in integer
-      hash only bought 1.12×.
-    - ``'xxhash64'``: the standard parametric family — each shingle is
-      hashed ONCE with the JVM's xxhash64, then
-      h_i = min over shingles of (a_i · x mod 2⁶⁴) with odd multipliers
-      a_i (multiply-shift universal hashing), computed as one
-      Arrow-vectorized NumPy kernel (`minimum.reduceat` over the
-      flattened batch).  Replaces n_hashes interpreted hash calls per
-      shingle with one JVM hash + n_hashes vectorized multiplies —
-      the at-scale path (measured ~19× on the signature stage).
-    """
-    _hash_fn_sql(hash_backend)
-    base = _with_sets(docs, shingle_n)
-    if hash_backend == "md5":
-        sig = F.expr(
-            f"transform(sequence(0, {n_hashes - 1}),"
-            f" hi -> array_min(transform(sset, ht -> md5(concat(hi, ':', ht)))))"
-        )
-        return base.select("doc_id", "sset", sig.alias("sig"))
-    return _minhash_sigs_parametric(base, n_hashes)
-
-
-def _minhash_sigs_parametric(with_sets: DataFrame, n_hashes: int) -> DataFrame:
-    """xxhash64 backend kernel: JVM-side per-shingle hash, then the
-    a_i·x family mins via one NumPy pass per batch (no per-row
-    Python)."""
-    import numpy as np
-    import pandas as pd
-
-    # deterministic odd multipliers (splitmix-style spread, forced odd)
-    A = ((np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15))
-         | np.uint64(1))
-
-    hx = with_sets.withColumn("hx", F.expr("transform(sset, ht -> xxhash64(ht))"))
+    The JVM hashes each shingle once; the n_hashes affine maps and
+    their mins run in NumPy, one vectorized step per hash over the
+    whole flattened Arrow batch (``minimum.reduceat``) — no per-row
+    Python and no interpreted per-hash lambda.  Bounds:
+    a, b < p < 2³¹ and x < 2³², so a·x + b < 2⁶³ — exact in int64 here
+    and in DuckDB's BIGINT.  Null texts are dropped (no shingle set);
+    every other text has at least one shingle."""
+    a, b = minhash_coefficients(n_hashes)
+    hx = _with_sets(docs.filter(F.col("text").isNotNull()), shingle_n).select(
+        "doc_id",
+        F.transform("sset", lambda s: _token_hash(s, SHINGLE_HASH_DIGITS)).alias("hx"),
+    )
 
     def kernel(batches):
+        import pandas as pd
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lens = np.fromiter((len(v) for v in pdf["hx"]), dtype=np.int64, count=len(pdf))
-            nz = lens > 0
-            sigs = np.full((len(pdf), n_hashes), np.iinfo(np.int64).max, dtype=np.int64)
-            if nz.any():
-                xs = np.concatenate([np.asarray(v, dtype=np.int64) for v, l in
-                                     zip(pdf["hx"], lens) if l > 0]).astype(np.uint64)
-                starts = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
-                out = np.empty((int(nz.sum()), n_hashes), dtype=np.int64)
-                for i in range(n_hashes):
-                    y = (xs * A[i]).astype(np.int64)  # mod 2^64 wrap, signed view
-                    out[:, i] = np.minimum.reduceat(y, starts)
-                sigs[nz] = out
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "sset": pdf["sset"], "sig": list(sigs)}
-            )
+            xs = np.concatenate(pdf["hx"].tolist())
+            starts = np.concatenate(([0], np.cumsum(pdf["hx"].map(len).to_numpy())[:-1]))
+            sig = np.empty((len(pdf), n_hashes), dtype=np.int64)
+            for i in range(n_hashes):
+                sig[:, i] = np.minimum.reduceat((a[i] * xs + b[i]) % MINHASH_PRIME, starts)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": list(sig)})
 
-    return hx.mapInPandas(
-        kernel, "doc_id string, sset array<string>, sig array<bigint>"
-    )
+    return hx.mapInPandas(kernel, "doc_id string, sig array<bigint>")
 
 
 def _band_keys(sigs: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     rows_per_band = n_hashes // n_bands
-    # cast-to-string inside the join keeps one expression for both hash
-    # backends (md5 → string already; xxhash64 → bigint)
     return sigs.select(
         "doc_id",
         F.explode(
@@ -171,14 +140,11 @@ def lsh_bucket_stats(
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
     shingle_n: int = 1,
-    hash_backend: str = "md5",
 ) -> DataFrame:
     """Band-bucket width distribution: (width, n_buckets).  The audit
     companion to ``max_bucket`` — shows exactly how much candidate mass
     a cap drops instead of dropping it silently."""
-    bands = _band_keys(
-        minhash_signatures(docs, n_hashes, shingle_n, hash_backend), n_hashes, n_bands
-    )
+    bands = _band_keys(minhash_signatures(docs, n_hashes, shingle_n), n_hashes, n_bands)
     return (
         bands.groupBy("band_key")
         .agg(F.count("*").alias("width"))
@@ -187,54 +153,49 @@ def lsh_bucket_stats(
     )
 
 
-def _lsh_jaccard_pairs(
+def ngram_jaccard_pairs(
     docs: DataFrame,
-    threshold: float,
-    shingle_n: int,
-    n_hashes: int,
-    n_bands: int,
-    max_bucket: int | None,
-    hash_backend: str = "md5",
+    threshold: float = 0.5,
+    shingle_n: int = 3,
+    n_hashes: int = N_MINHASH,
+    n_bands: int = N_BANDS,
+    max_bucket: int | None = MAX_BUCKET,
 ) -> DataFrame:
-    """Shared engine: MinHash band keys → (capped) bucket self-join →
-    candidate pairs → exact set-Jaccard verification on bucket-mates
-    only.  Returns (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b."""
-    sigs = minhash_signatures(docs, n_hashes, shingle_n, hash_backend)
-    bands = _band_keys(sigs, n_hashes, n_bands)
+    """Exact shingle-set Jaccard near-dup pairs with MinHash-band
+    candidate generation: MinHash band keys → (capped) bucket self-join
+    → candidate pairs → exact set-Jaccard verification on bucket-mates
+    only.  Returns (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b.
+    Two documents are compared iff they share a band bucket, so
+    near-dups of *different lengths* are found (unlike any equality
+    blocking) while the pair join stays bounded.
+
+    ``shingle_n=1`` compares distinct token sets.  On small-vocabulary
+    corpora the token-set Jaccard between unrelated documents is
+    inherently high, so token sets want a threshold near 1.0
+    (near-identical sets; the driver query uses 0.9); for content-level
+    near-dup detection keep shingles, which are discriminative even
+    under a small vocabulary."""
+    bands = _band_keys(minhash_signatures(docs, n_hashes, shingle_n), n_hashes, n_bands)
     if max_bucket is not None:
-        # Capped buckets, evaluated in one exchange chain on band_key:
-        # a COUNT-based width screen runs first (map-side partial agg —
-        # a mega-bucket costs a counter, never a buffer), the surviving
-        # band keys filter the bands via a co-partitioned join (the
-        # bands exchange is identical on both subtrees, so Spark's
-        # ReuseExchange evaluates the expensive signature projection
-        # ONCE), and only then does each ≤max_bucket bucket build its
-        # sorted member list and explode its ≤w² pairs bucket-locally.
-        # The former shape (cap groupBy + band self-join) re-evaluated
-        # the minhash transform on additional subtrees (guide §1.2);
-        # collecting before the width filter would instead materialize
-        # mega-buckets in a single aggregation buffer — both rejected.
+        # Capped buckets in one exchange on band_key with one consumer:
+        # a window COUNT per bucket (its buffer spills, so a mega-bucket
+        # costs disk, never an aggregation buffer), the width screen,
+        # and only then does each ≤max_bucket bucket build its sorted
+        # member list and explode its ≤w² pairs bucket-locally — the
+        # aggregation keeps the window's partitioning, so no second
+        # exchange.  Collecting before the width filter would
+        # materialize mega-buckets in a single aggregation buffer; a
+        # count aggregate joined back to the bands reads them twice,
+        # and Spark does not always share that exchange (not over a
+        # cached input), so the signature kernel would run twice.
         # Pair set matches the join shape: strict doc_a < doc_b (equal
         # ids — duplicate doc_id rows — pair in neither), cross-band
         # repeats collapse in the same distinct.
-        # ONE explicit exchange on band_key shared by both consumers:
-        # a plain groupBy(count) would partial-aggregate BELOW its
-        # exchange (shipping (band_key, count) rows) while the join
-        # ships (doc_id, band_key) rows — different payloads, so Spark
-        # could never reuse the shuffle and the signature projection
-        # ran twice.  Repartitioning first makes the two subtrees share
-        # the identical exchange (ReusedExchange), and both the width
-        # screen and the join consume it in place.
-        bands_p = bands.repartition("band_key")
-        ok = (
-            bands_p.groupBy("band_key")
-            .agg(F.count("*").alias("_w"))
-            .filter((F.col("_w") <= max_bucket) & (F.col("_w") >= 2))
-            .select("band_key")
+        ok = bands.withColumn("_w", F.count("*").over(Window.partitionBy("band_key"))).filter(
+            (F.col("_w") <= max_bucket) & (F.col("_w") >= 2)
         )
         cand = (
-            bands_p.join(ok, "band_key")
-            .groupBy("band_key")
+            ok.groupBy("band_key")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("_members"))
             .select(
                 F.explode(
@@ -260,9 +221,11 @@ def _lsh_jaccard_pairs(
             .select(F.col("doc_id").alias("doc_a"), "doc_b")
             .distinct()
         )
-    sets_df = sigs.select("doc_id", "sset")
-    a = sets_df.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("ta"))
-    b = sets_df.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("tb"))
+    # the verification sets are the shingle projection itself, not read
+    # back through the (opaque) signature kernel
+    sets = _with_sets(docs, shingle_n)
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("ta"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("tb"))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
@@ -274,47 +237,6 @@ def _lsh_jaccard_pairs(
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-    threshold: float = 0.9,
-    shingle_n: int = 1,
-    max_bucket: int | None = MAX_BUCKET,
-    hash_backend: str = "md5",
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs over distinct token sets
-    (shingle_n=1): band-key blocking + exact token-Jaccard verify.
-
-    Note on unigram sets: on small-vocabulary corpora the token-set
-    Jaccard between unrelated documents is inherently high, so the
-    default threshold is 0.9 (near-identical sets) and ``max_bucket``
-    bounds the bucket join; for content-level near-dup detection use
-    ``ngram_jaccard_pairs`` (shingles are discriminative even under a
-    small vocabulary)."""
-    return _lsh_jaccard_pairs(
-        docs, threshold, shingle_n, n_hashes, n_bands, max_bucket, hash_backend
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-    max_bucket: int | None = MAX_BUCKET,
-    hash_backend: str = "md5",
-) -> DataFrame:
-    """Exact shingle-set Jaccard near-dup pairs with MinHash-band
-    candidate generation — two documents are compared iff they share a
-    band bucket, so near-dups of *different lengths* are found (unlike
-    any equality blocking) while the pair join stays bounded."""
-    return _lsh_jaccard_pairs(
-        docs, threshold, shingle_n, n_hashes, n_bands, max_bucket, hash_backend
     )
 
 
@@ -429,7 +351,6 @@ def duplicate_clusters(
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
     max_bucket: int | None = MAX_BUCKET,
-    hash_backend: str = "md5",
 ) -> DataFrame:
     """End-to-end duplicate clustering: exact-dup star edges ∪ shingle
     near-dup pairs → connected components → (doc_id, cluster_id) with
@@ -437,7 +358,7 @@ def duplicate_clusters(
     is then ``doc_id == cluster_id`` (plus every unpaired doc)."""
     pairs = exact_dup_pairs(docs).unionByName(
         ngram_jaccard_pairs(
-            docs, threshold, shingle_n, n_hashes, n_bands, max_bucket, hash_backend
+            docs, threshold, shingle_n, n_hashes, n_bands, max_bucket
         ).select("doc_a", "doc_b")
     )
     return connected_components(pairs).select(
@@ -549,19 +470,12 @@ def dedup_lines(docs: DataFrame, sep: str = "\n") -> DataFrame:
     )
 
 
-def cluster_representatives(
-    docs: DataFrame,
-    clusters: DataFrame | None = None,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    n_hashes: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-    max_bucket: int | None = MAX_BUCKET,
-    hash_backend: str = "md5",
-) -> DataFrame:
+def cluster_representatives(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Canonical-document selection — the step that turns a duplicate
-    CLUSTERING into a dedup'd corpus: every doc comes back flagged
-    (doc_id, cluster_id, doc_len, is_rep); downstream keeps ``is_rep``.
+    CLUSTERING (``clusters``: (doc_id, cluster_id) rows, e.g.
+    ``duplicate_clusters``) into a dedup'd corpus: every doc comes back
+    flagged (doc_id, cluster_id, doc_len, is_rep); downstream keeps
+    ``is_rep``.
     Keep rule: the cluster's LONGEST text wins (near-dup clusters keep
     the most complete member), ties → lowest doc_id (string order).
     Unclustered docs are their own singleton cluster and always kept.
@@ -571,10 +485,6 @@ def cluster_representatives(
     agg collapses each cluster map-side — one row per cluster crosses
     the exchange), and a join back on the same key — no windows over
     the corpus, no driver collect."""
-    if clusters is None:
-        clusters = duplicate_clusters(
-            docs, threshold, shingle_n, n_hashes, n_bands, max_bucket, hash_backend
-        )
     base = (
         docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),

@@ -83,21 +83,11 @@ def fetch_payloads(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fetch, MEDIA_SCHEMA)
 
 
-def _decode_bytes(payload: bytes, kind: str, fake: bool):
-    if not fake:
-        raise NotImplementedError(
-            "media decode requires image/audio codecs not present in this "
-            "container; run with fake=True for the deterministic stub"
-        )
-    # deterministic fake 'feature': byte-sum mod 997
-    return sum(payload) % 997
-
-
 # ---- real image decode: uncompressed 24-bit BMP + binary PPM (P6) ----
 #
 # Both formats are header + raw RGB rows, decodable with frombuffer +
-# reshape — no codec library needed.  This is the one real codepath
-# behind the decode stub; compressed formats still raise.
+# reshape — no codec library needed.  This is the one real decode
+# path; compressed formats raise in ``decode_media``.
 
 
 def encode_bmp(arr: np.ndarray) -> bytes:
@@ -396,15 +386,13 @@ def resize_stub(media_with_payload: DataFrame, max_bytes: int = 16) -> DataFrame
     return media_with_payload.mapInPandas(run, MEDIA_SCHEMA)
 
 
-def extract_features(media_with_payload: DataFrame, fake: bool = True) -> DataFrame:
-    """Arrow-batched decode + feature extraction (stubbed decode)."""
+def extract_features(media_with_payload: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over the raw payload bytes: the
+    feature is a deterministic byte-sum mod 997 stand-in (real decoding
+    is ``decode_images`` / ``decode_media``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                # the honest stub: raising goes through the same check
-                # a real decoder would replace
-                _decode_bytes(b"", "any", fake)
             feats = _byte_sums(pdf["payload"]) % 997
             yield pd.DataFrame(
                 {

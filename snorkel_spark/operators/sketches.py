@@ -22,18 +22,17 @@ mergeable across shards/days in a lakehouse rollup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HEX_DIGITS = 12
 _DENOM = 16 ** HEX_DIGITS
 
 
-def _token_hash():
-    # 48-bit integer from the md5 prefix — conv() returns a string
-    return F.expr(
-        f"cast(conv(substring(md5(token), 1, {HEX_DIGITS}), 16, 10) as bigint)"
-    )
+def _token_hash(col: Column, digits: int) -> Column:
+    """The integer of ``col``'s first ``digits`` md5 hex digits (4·digits
+    bits) — conv() returns a string."""
+    return F.conv(F.substring(F.md5(col), 1, digits), 16, 10).cast("bigint")
 
 
 def kmv_distinct_tokens(
@@ -53,7 +52,7 @@ def kmv_distinct_tokens(
         .select("token")
         .distinct()
     )
-    hashes = toks.select(_token_hash().alias("h"))
+    hashes = toks.select(_token_hash(F.col("token"), HEX_DIGITS).alias("h"))
     kth = (
         hashes.orderBy("h")
         .limit(k)
@@ -113,7 +112,7 @@ def kmv_shard_merge(
         .distinct()
     )
     # (shard, token) is already distinct; h = f(token) keeps it so
-    hashes = toks.select("shard", _token_hash().alias("h"))
+    hashes = toks.select("shard", _token_hash(F.col("token"), HEX_DIGITS).alias("h"))
     w = Window.partitionBy("shard").orderBy("h")
     shard_sketches = (
         hashes.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
@@ -168,7 +167,7 @@ def kmv_jaccard(
             .filter(F.col("token") != "")
             .distinct()
             .select(
-                _token_hash().alias("h"),
+                _token_hash(F.col("token"), HEX_DIGITS).alias("h"),
                 F.lit(1 if flag == "a" else 0).alias("in_a"),
                 F.lit(1 if flag == "b" else 0).alias("in_b"),
             )

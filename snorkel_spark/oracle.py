@@ -23,6 +23,16 @@ from the mention row, with no join back to the sentences.
 
 Keep in lock-step with the Spark implementations; the pipeline tests
 assert equality at every stage.
+
+The lowercasing oracles hold for ASCII corpora only: DuckDB's ``lower``
+uses simple case mapping, Spark and Python full mapping —
+``lower('ΣΟΦΙΑΣ')`` is ``σοφιασ`` in DuckDB and ``σοφιας`` in Spark
+(final sigma), and ``lower('İstanbul')`` is ``istanbul`` against
+``i̇stanbul``.  The lemma, matcher and linker twins in
+``__spark_entry__.oracle_sql()`` lowercase, so on non-ASCII text they
+would disagree with the Spark side; the test corpora are ASCII.
+Non-ASCII lowercasing is checked against the Python twins instead
+(``tests/test_linker.py``).
 """
 
 from __future__ import annotations

@@ -31,10 +31,10 @@ def test_minhash_lsh_superset_check(spark, docs):
     """LSH candidates verified ≥ τ must be a subset of brute-force pairs
     ≥ τ (soundness); for an injected exact dup, LSH must find it
     (banding guarantees equal signatures collide)."""
-    from snorkel_spark.operators.dedup import minhash_lsh_pairs
+    from snorkel_spark.operators.dedup import ngram_jaccard_pairs
 
     dup = docs.limit(1).withColumn("doc_id", F.lit(99999))
-    pairs = minhash_lsh_pairs(docs.unionByName(dup), threshold=0.99)
+    pairs = ngram_jaccard_pairs(docs.unionByName(dup), threshold=0.99, shingle_n=1)
     assert pairs.filter("jaccard >= 0.999999").count() >= 1
 
 
@@ -124,10 +124,9 @@ def test_ngram_jaccard_finds_length_differing_near_dups(spark, docs):
 
 
 def test_ngram_jaccard_backend_equivalence(spark, docs):
-    """hash_backend='xxhash64' (integer, the at-scale choice) yields the
-    SAME verified pair set as the md5 oracle-parity default, and the
-    gate-query params (32 hashes / 16 bands) also reproduce it — exact
-    verification makes the result insensitive to both knobs here."""
+    """The gate-query band params (32 hashes / 16 bands) reproduce the
+    128 / 32 verified pair set — exact verification makes the result
+    insensitive to the band params here."""
     from snorkel_spark.operators.dedup import ngram_jaccard_pairs
 
     plant = docs.filter("doc_id % 50 = 0").select(
@@ -143,10 +142,71 @@ def test_ngram_jaccard_backend_equivalence(spark, docs):
             for r in ngram_jaccard_pairs(corpus, threshold=0.5, **kw).collect()
         }
 
-    base = pairset()
-    assert pairset(hash_backend="xxhash64") == base
-    assert pairset(n_hashes=32, n_bands=16) == base
-    assert pairset(n_hashes=32, n_bands=16, hash_backend="xxhash64") == base
+    assert pairset(n_hashes=32, n_bands=16) == pairset()
+
+
+def _duckdb_documents(rows):
+    """A DuckDB connection whose ``documents`` table holds ``rows``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return con
+
+
+SIG_DOCS = [(1, "a b c d e"), (2, "the cat sat on the mat"), (3, "x"), (4, ""),
+            (5, "a b c d e f g h i j k l"), (6, "été café naïve")]
+
+
+@pytest.mark.parametrize("shingle_n", [1, 3])
+def test_minhash_signature_twins(spark, shingle_n):
+    """``minhash_signatures`` equals the family computed with hashlib and
+    NumPy — x = the shingle's first 8 md5 hex digits, sig[i] =
+    min (a_i·x + b_i) mod p — and the DuckDB ``sigs`` CTE equals both."""
+    import hashlib
+
+    import numpy as np
+
+    from __spark_entry__ import _minhash_cte_sql
+    from snorkel_spark.operators.dedup import (
+        MINHASH_PRIME, minhash_coefficients, minhash_signatures,
+    )
+
+    n = 16
+    a, b = minhash_coefficients(n)
+
+    def ref(text):
+        toks = text.split(" ")
+        shingles = {" ".join(toks[i:i + shingle_n])
+                    for i in range(max(len(toks) - shingle_n, 0) + 1)}
+        x = np.array([int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles])
+        return ((a[:, None] * x + b[:, None]) % MINHASH_PRIME).min(axis=1).tolist()
+
+    want = {str(d): ref(t) for d, t in SIG_DOCS}
+    docs = spark.createDataFrame(SIG_DOCS, "doc_id bigint, text string")
+    got = {r["doc_id"]: list(r["sig"])
+           for r in minhash_signatures(docs, n, shingle_n).collect()}
+    assert got == want
+    sql = "WITH " + _minhash_cte_sql(n, 8, shingle_n, 64) + " SELECT doc_id, sig FROM sigs"
+    assert dict(_duckdb_documents(SIG_DOCS).execute(sql).fetchall()) == want
+
+
+@pytest.mark.parametrize("shingle_n", [1, 3])
+def test_null_text_never_pairs(spark, shingle_n):
+    """A null text has no shingle set, no signature and no band key: two
+    null texts do not pair (and the kernel never sees a null set), as
+    in the DuckDB twin."""
+    from __spark_entry__ import _minhash_pairs_sql
+    from snorkel_spark.operators.dedup import ngram_jaccard_pairs
+
+    rows = [(1, "a b c d e"), (2, "a b c d e"), (3, None), (4, None), (5, "")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {tuple(r) for r in ngram_jaccard_pairs(
+        docs, shingle_n=shingle_n, n_hashes=16, n_bands=8).collect()}
+    want = set(_duckdb_documents(rows).execute(
+        _minhash_pairs_sql(16, 8, 0.5, shingle_n, 64)).fetchall())
+    assert got == want == {("1", "2", 1.0)}
 
 
 def test_lsh_bucket_cap_bounds_candidates(spark, docs):
@@ -188,18 +248,16 @@ def test_textstats(spark, docs):
 
 def test_multimodal_plumbing(spark, raw):
     from snorkel_spark.operators.multimodal import (
-        extract_features, fetch_payloads, media_spans, _decode_bytes,
+        extract_features, fetch_payloads, media_spans,
     )
 
     m = media_spans(raw)
     n_media = m.count()
     assert n_media > 0
-    feats = extract_features(fetch_payloads(m), fake=True)
+    feats = extract_features(fetch_payloads(m))
     rows = feats.collect()
     assert len(rows) == n_media
     assert all(0 <= r["feature"] < 997 and r["n_bytes"] > 0 for r in rows)
-    with pytest.raises(NotImplementedError):
-        _decode_bytes(b"xx", "image", fake=False)
 
 
 def test_frame_sample_and_resize(spark, raw):
@@ -972,10 +1030,10 @@ def test_cluster_representatives_keep_longest(spark):
 def test_cluster_representatives_end_to_end(spark, docs):
     """Composed with the real clustering: every cluster has exactly one
     representative and every doc is flagged."""
-    from snorkel_spark.operators.dedup import cluster_representatives
+    from snorkel_spark.operators.dedup import cluster_representatives, duplicate_clusters
 
     out = cluster_representatives(
-        docs, threshold=0.5, n_hashes=32, n_bands=16
+        docs, duplicate_clusters(docs, threshold=0.5, n_hashes=32, n_bands=16)
     ).toPandas()
     assert len(out) == docs.count()
     per = out.groupby("cluster_id")["is_rep"].sum()

@@ -170,3 +170,15 @@ def test_line_dedup_filters_lines_once(spark):
     exprs = [e for _, node in plan_nodes(_build(spark, "line_dedup"))
              for x in _seq(node.expressions()) for e, _ in tree_nodes(x)]
     assert exprs.count("ArrayFilter") == 1, exprs
+
+
+def test_ngram_jaccard_runs_signature_kernel_once(spark):
+    """The MinHash kernel runs once per document: the bucket-width
+    window and the member lists read one band exchange, and the
+    verification sets come from the shingle projection, not back
+    through the kernel."""
+    df = D.ngram_jaccard_pairs(spark.read.parquet(f"{SF}/documents.parquet"),
+                               n_hashes=32, n_bands=16)
+    df.collect()
+    names = _names(df)
+    assert names.count("MapInPandasExec") == 1, names
