@@ -302,7 +302,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from snorkel_spark.operators.parser import with_ner_tags
         from snorkel_spark.sources import fixtures as FX
 
-        tagged = with_ner_tags(_sentences(spark, sf), FX.person_full_names(spark))
+        tagged = with_ner_tags(_sentences(spark, sf), FX.PERSON_FULL_NAMES)
         m = ngram_mentions(tagged, n_max=2, carry_attribs=("ner_tags",))
         return person_matcher_ner().apply(m).select(
             "sentence_id", "word_start", "word_end", "text"
@@ -465,23 +465,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def n1_entity_link(spark, sf):
-        from snorkel_spark.operators.linker import link_mentions
+        from snorkel_spark.operators.linker import link_text_map
         from snorkel_spark.sources import fixtures as FX
 
-        linked = link_mentions(_mentions(spark, sf), FX.alias_dict(spark))
-        return linked.select(
-            "sentence_id", "word_start", "word_end", "entity_id",
-            F.round("link_score", 4).alias("link_score"),
+        linked = _mentions(spark, sf).withColumn("l", link_text_map("text", FX.ALIASES))
+        return linked.filter(F.col("l").isNotNull()).select(
+            "sentence_id", "word_start", "word_end", "l.entity_id",
+            F.round("l.link_score", 4).alias("link_score"),
         )
 
     def n2_triples_mv(spark, sf):
         return _mv_triples(spark, sf)
 
     def n3_salted_entity_counts(spark, sf):
-        from snorkel_spark.operators.linker import link_mentions
+        from snorkel_spark.operators.linker import link_text_map
         from snorkel_spark.sources import fixtures as FX
 
-        linked = link_mentions(_persons(spark, sf), FX.alias_dict(spark))
+        linked = (
+            _persons(spark, sf)
+            .withColumn("entity_id", link_text_map("text", FX.ALIASES)["entity_id"])
+            .filter(F.col("entity_id").isNotNull())
+        )
         # explicit salted two-phase aggregation (N3)
         partial = (
             linked.withColumn("_salt", F.pmod(F.xxhash64("mention_id"), F.lit(16)))
@@ -773,11 +777,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def sim_embedding_near_dups(spark, sf):
         # LSH-routed, no label/metadata blocking; planted near-dups make
         # the result non-vacuous (the raw corpus has max cos ≈ 0.51)
-        from snorkel_spark.operators.similarity import embedding_near_dups
+        from snorkel_spark.operators.similarity import lsh_neighbor_pairs
         from snorkel_spark.sources.fixtures import embeddings_with_planted_dups
 
         aug = embeddings_with_planted_dups(spark.read.parquet(f"{sf}/embeddings.parquet"))
-        return embedding_near_dups(aug, threshold=0.95)
+        return lsh_neighbor_pairs(aug, threshold=0.95)
 
     def sim_semdedup(spark, sf):
         # SemDeDup (Abbas et al. 2023): cluster-bounded semantic dedup —
@@ -858,24 +862,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return kmv_shard_merge(
             spark.read.parquet(f"{sf}/documents.parquet"),
             k=64, shingle_n=3, n_shards=8,
-        )
-
-    def m5b_ner_matcher_join(spark, sf):
-        # the large-gazetteer NER path (token-level broadcast join +
-        # collect_list reassembly, no driver collect of the dict) —
-        # must emit EXACTLY what m5's inline-map path emits, so it
-        # shares m5's oracle SQL
-        from snorkel_spark.operators.matchers import person_matcher_ner
-        from snorkel_spark.operators.ngrams import ngram_mentions
-        from snorkel_spark.operators.parser import with_ner_tags
-        from snorkel_spark.sources import fixtures as FX
-
-        tagged = with_ner_tags(
-            _sentences(spark, sf), FX.person_full_names(spark), method="join"
-        )
-        m = ngram_mentions(tagged, n_max=2, carry_attribs=("ner_tags",))
-        return person_matcher_ner().apply(m).select(
-            "sentence_id", "word_start", "word_end", "text"
         )
 
     def ev_asof_join_bucketed(spark, sf):
@@ -1020,13 +1006,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rotated out this round — every entry below is driver-green
         # in CORRECTNESS_r04.json and stays green under
         # check_contract.py + the pytest smoke gate
-        # (g1_triples_labelmodel and m5b_ner_matcher_join were displaced
-        # by the round-5-new sim_semdedup / dd_line_dedup /
-        # dd_cluster_reps: both are r04-green and their operator
-        # families stay in-window via g1_label_model_marginals +
-        # n2_triples_mv and m5_ner_matcher)
+        # (g1_triples_labelmodel was displaced by the round-5-new
+        # sim_semdedup / dd_line_dedup / dd_cluster_reps: it is
+        # r04-green and its operator family stays in-window via
+        # g1_label_model_marginals + n2_triples_mv)
         "g1_triples_labelmodel": g1_triples_labelmodel,
-        "m5b_ner_matcher_join": m5b_ner_matcher_join,
         "n3_salted_entity_counts": n3_salted_entity_counts,
         "dd_kmv_merge": dd_kmv_merge,
         "ts_c4_clean": ts_c4_clean,
@@ -1488,6 +1472,8 @@ def _porter_duck(col: str) -> str:
 
 def oracle_sql() -> dict[str, str]:
     from snorkel_spark.oracle import (
+        ALIAS_DICT,
+        LINK_TEXTS,
         PREFIX_CANDIDATES,
         PREFIX_FULL,
         PREFIX_LABELS,
@@ -1497,19 +1483,6 @@ def oracle_sql() -> dict[str, str]:
         PREFIX_SPANS,
         with_base,
     )
-
-    N = 137
-    alias_dict_sql = f"""
-    rng AS (SELECT unnest(range(0, {N})) AS i),
-    alias_dict AS (
-      SELECT 'anna' || i || ' lee' || i AS alias, 'E' || i AS entity_id, CAST(0.9 AS DOUBLE) AS prior FROM rng
-      UNION ALL SELECT 'lee' || i, 'E' || i, CAST(0.6 AS DOUBLE) FROM rng
-      UNION ALL SELECT 'anna' || i, 'E' || i, CAST(0.7 AS DOUBLE) FROM rng
-      UNION ALL SELECT 'anna' || i, 'E' || ((i + 1) % {N}), CAST(0.3 AS DOUBLE) FROM rng
-      UNION ALL SELECT 'bob' || i || ' kim' || i, 'F' || i, CAST(0.9 AS DOUBLE) FROM rng
-      UNION ALL SELECT 'kim' || i, 'F' || i, CAST(0.6 AS DOUBLE) FROM rng
-    )
-    """
 
     d = {
         "s7_interleaved_scan": PREFIX_SPANS
@@ -1589,7 +1562,7 @@ def oracle_sql() -> dict[str, str]:
         "c1_ngram_counts": PREFIX_MENTIONS
         + " SELECT sentence_id, COUNT(*) AS n_mentions FROM mentions GROUP BY sentence_id",
         "m1_longest_dictionary": PREFIX_MENTIONS
-        + f""", {alias_dict_sql},
+        + f""", {ALIAS_DICT},
           am AS (SELECT DISTINCT m.sentence_id, m.word_start, m.word_end, m.text
                  FROM mentions m JOIN alias_dict a ON lower(m.text) = lower(a.alias))
           SELECT m.* FROM am m WHERE NOT EXISTS (
@@ -1709,29 +1682,10 @@ def oracle_sql() -> dict[str, str]:
             CAST(SUM(CASE WHEN mv.prob_true <= 0.5 AND g.label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn
           FROM mv JOIN gold g USING (candidate_id)""",
         "n1_entity_link": PREFIX_MENTIONS
-        + f""", {alias_dict_sql},
-          scored AS (
-            SELECT m.sentence_id, m.word_start, m.word_end, a.entity_id,
-              (CASE WHEN m.text = a.alias THEN 1.0
-                    WHEN lower(m.text) = lower(a.alias) THEN 0.8
-                    ELSE 0.6 END)::DOUBLE * a.prior AS score
-            FROM mentions m JOIN alias_dict a
-              ON lower(m.text) = lower(a.alias)
-              OR array_to_string(list_transform(string_split(m.text, ' '),
-                   w -> CASE WHEN len(w) > 3 AND w LIKE '%s' THEN substr(w, 1, len(w) - 1)
-                             ELSE lower(w) END), ' ')
-               = array_to_string(list_transform(string_split(a.alias, ' '),
-                   w -> CASE WHEN len(w) > 3 AND w LIKE '%s' THEN substr(w, 1, len(w) - 1)
-                             ELSE lower(w) END), ' ')
-          ),
-          best AS (
-            SELECT sentence_id, word_start, word_end, entity_id, score,
-                   ROW_NUMBER() OVER (PARTITION BY sentence_id, word_start, word_end
-                                      ORDER BY score DESC, entity_id DESC) AS rn
-            FROM scored)
-          SELECT sentence_id, word_start, word_end, entity_id,
-                 ROUND(score, 4) AS link_score
-          FROM best WHERE rn = 1""",
+        + f""", texts AS (SELECT DISTINCT text FROM mentions), {LINK_TEXTS}
+          SELECT m.sentence_id, m.word_start, m.word_end, l.entity_id,
+                 ROUND(l.link_score, 4) AS link_score
+          FROM mentions m JOIN links l USING (text)""",
         "n2_triples_mv": PREFIX_MV
         + """ , linked AS (
             SELECT c.candidate_id, sa.entity_id AS subj, ob.entity_id AS obj
@@ -2018,10 +1972,9 @@ def oracle_sql() -> dict[str, str]:
         # fixture path is unavailable).
         **_g1_oracle_entries(),
     }
-    # round-4 variants that must emit EXACTLY their base operator's
-    # output share the base oracle — the alternate physical plan is the
+    # a round-4 variant that must emit EXACTLY its base operator's
+    # output shares the base oracle — the alternate physical plan is the
     # thing under test, the semantics are pinned to the original
-    d["m5b_ner_matcher_join"] = d["m5_ner_matcher"]
     d["ev_asof_join_bucketed"] = d["ev_asof_join"]
     _kmv_hash = (
         "list_sum(list_transform(range(0, 12), hd ->"

@@ -35,7 +35,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import log
 from .sketches import _token_hash
 
 N_MINHASH = 128
@@ -159,12 +158,12 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
-    max_bucket: int | None = MAX_BUCKET,
+    max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
     """Exact shingle-set Jaccard near-dup pairs with MinHash-band
-    candidate generation: MinHash band keys → (capped) bucket self-join
-    → candidate pairs → exact set-Jaccard verification on bucket-mates
-    only.  Returns (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b.
+    candidate generation: MinHash band keys → capped bucket-local pair
+    explosion → candidate pairs → exact set-Jaccard verification on
+    bucket-mates only.  Returns (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b.
     Two documents are compared iff they share a band bucket, so
     near-dups of *different lengths* are found (unlike any equality
     blocking) while the pair join stays bounded.
@@ -176,51 +175,38 @@ def ngram_jaccard_pairs(
     near-dup detection keep shingles, which are discriminative even
     under a small vocabulary."""
     bands = _band_keys(minhash_signatures(docs, n_hashes, shingle_n), n_hashes, n_bands)
-    if max_bucket is not None:
-        # Capped buckets in one exchange on band_key with one consumer:
-        # a window COUNT per bucket (its buffer spills, so a mega-bucket
-        # costs disk, never an aggregation buffer), the width screen,
-        # and only then does each ≤max_bucket bucket build its sorted
-        # member list and explode its ≤w² pairs bucket-locally — the
-        # aggregation keeps the window's partitioning, so no second
-        # exchange.  Collecting before the width filter would
-        # materialize mega-buckets in a single aggregation buffer; a
-        # count aggregate joined back to the bands reads them twice,
-        # and Spark does not always share that exchange (not over a
-        # cached input), so the signature kernel would run twice.
-        # Pair set matches the join shape: strict doc_a < doc_b (equal
-        # ids — duplicate doc_id rows — pair in neither), cross-band
-        # repeats collapse in the same distinct.
-        ok = bands.withColumn("_w", F.count("*").over(Window.partitionBy("band_key"))).filter(
-            (F.col("_w") <= max_bucket) & (F.col("_w") >= 2)
+    # Capped buckets in one exchange on band_key with one consumer:
+    # a window COUNT per bucket (its buffer spills, so a mega-bucket
+    # costs disk, never an aggregation buffer), the width screen,
+    # and only then does each ≤max_bucket bucket build its sorted
+    # member list and explode its ≤w² pairs bucket-locally — the
+    # aggregation keeps the window's partitioning, so no second
+    # exchange.  Collecting before the width filter would
+    # materialize mega-buckets in a single aggregation buffer; a
+    # count aggregate joined back to the bands reads them twice,
+    # and Spark does not always share that exchange (not over a
+    # cached input), so the signature kernel would run twice.
+    # Pairs are strict doc_a < doc_b (equal ids — duplicate doc_id
+    # rows — never pair); cross-band repeats collapse in the distinct.
+    ok = bands.withColumn("_w", F.count("*").over(Window.partitionBy("band_key"))).filter(
+        (F.col("_w") <= max_bucket) & (F.col("_w") >= 2)
+    )
+    cand = (
+        ok.groupBy("band_key")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("_members"))
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(sequence(1, size(_members) - 1),"
+                    " pi -> transform(slice(_members, pi + 1, size(_members) - pi),"
+                    " pb -> named_struct('doc_a', element_at(_members, pi), 'doc_b', pb))))"
+                )
+            ).alias("_pr")
         )
-        cand = (
-            ok.groupBy("band_key")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_members"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(sequence(1, size(_members) - 1),"
-                        " pi -> transform(slice(_members, pi + 1, size(_members) - pi),"
-                        " pb -> named_struct('doc_a', element_at(_members, pi), 'doc_b', pb))))"
-                    )
-                ).alias("_pr")
-            )
-            .select(F.col("_pr.doc_a").alias("doc_a"), F.col("_pr.doc_b").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .distinct()
-        )
-    else:
-        # uncapped: keep the join shape — a collect_list over an
-        # unbounded bucket would be a single-task memory hazard
-        log.warning("LSH pairs with max_bucket=None: the uncapped band self-join "
-                    "emits w² pairs per bucket of width w")
-        other = bands.select(F.col("doc_id").alias("doc_b"), F.col("band_key").alias("bk2"))
-        cand = (
-            bands.join(other, on=[bands["band_key"] == other["bk2"], bands["doc_id"] < other["doc_b"]])
-            .select(F.col("doc_id").alias("doc_a"), "doc_b")
-            .distinct()
-        )
+        .select(F.col("_pr.doc_a").alias("doc_a"), F.col("_pr.doc_b").alias("doc_b"))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .distinct()
+    )
     # the verification sets are the shingle projection itself, not read
     # back through the (opaque) signature kernel
     sets = _with_sets(docs, shingle_n)
@@ -350,7 +336,7 @@ def duplicate_clusters(
     shingle_n: int = 3,
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
-    max_bucket: int | None = MAX_BUCKET,
+    max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
     """End-to-end duplicate clustering: exact-dup star edges ∪ shingle
     near-dup pairs → connected components → (doc_id, cluster_id) with

@@ -178,43 +178,25 @@ def with_pos_tags(sentences: DataFrame) -> DataFrame:
 
 def with_ner_tags(
     sentences: DataFrame,
-    names: DataFrame,
+    names,
     tag: str = "PERSON",
-    alias_col: str = "alias",
     other: str = "O",
-    method: str = "auto",
-    max_inline: int = 50000,
 ) -> DataFrame:
     """Attach ``ner_tags`` (parallel to ``tokens``): gazetteer NER — a
     token is tagged iff it is part of a gazetteer name occurrence
     (1-token names: exact match; 2-token names: the token plus its
     left OR right neighbor forms the name).
 
-    Two physically different plans behind one contract, auto-selected
-    by gazetteer size (``method``: 'auto' | 'inline' | 'join'):
+    ``names``: an iterable of 1- or 2-token names, held on the driver
+    (e.g. ``fixtures.PERSON_FULL_NAMES``), as the reference holds its
+    gazetteers as Python dictionaries.  They become literal hash maps,
+    so a token costs O(1) probes inside one ``transform`` projection:
+    no join, no shuffle, and building the plan runs no Spark job.
 
-    * **inline** (gazetteer ≤ ``max_inline``): aliases are collected
-      driver-side (same discipline as the broadcast alias dict) and
-      embedded as literal hash maps → O(1) probes inside one
-      ``transform`` projection, no shuffle.
-    * **join** (larger): ``with_ner_tags_join`` — token-level
-      broadcast-join + per-sentence reassembly; the gazetteer never
-      touches the driver as Python literals.
-
-    Both paths produce identical ner_tags (equality-tested) and mirror
-    the reference's spaCy ``ner_tags`` array the NER matchers bind to
-    (⚠ snorkel/matchers.py PersonMatcher =
+    Mirrors the reference's spaCy ``ner_tags`` array the NER matchers
+    bind to (⚠ snorkel/matchers.py PersonMatcher =
     RegexMatchEach(attrib='ner_tags', rgx='PERSON') ~L290–330)."""
-    if method == "auto":
-        # bounded COLLECT, not a bounded scan: the distinct still
-        # aggregates the whole names input (names tables are the small
-        # side by construction), but at most max_inline+1 post-distinct
-        # rows ever leave the executors
-        n = names.select(alias_col).distinct().limit(max_inline + 1).count()
-        method = "inline" if n <= max_inline else "join"
-    if method == "join":
-        return with_ner_tags_join(sentences, names, tag, alias_col, other)
-    aliases = sorted({r[0] for r in names.select(alias_col).distinct().collect()})
+    aliases = sorted(set(names))
     unis = [a for a in aliases if " " not in a]
     bis = [a for a in aliases if len(a.split(" ")) == 2]
     longer = [a for a in aliases if len(a.split(" ")) > 2]
@@ -242,94 +224,6 @@ def with_ner_tags(
         return F.when(cond, F.lit(tag)).otherwise(F.lit(other))
 
     return sentences.withColumn("ner_tags", F.transform("tokens", tag_token))
-
-
-# sentinel for "no neighbor token" in the join-path bigram keys — a
-# control char no tokenizer emits, so it can never equal an alias part
-_NO_NEIGHBOR = "\x01"
-
-
-def with_ner_tags_join(
-    sentences: DataFrame,
-    names: DataFrame,
-    tag: str = "PERSON",
-    alias_col: str = "alias",
-    other: str = "O",
-) -> DataFrame:
-    """The large-gazetteer NER path: identical semantics and output to
-    the inline ``with_ner_tags`` plan, but the gazetteer stays a
-    DataFrame end-to-end — no driver collect, no literal maps.
-
-    Plan shape: tokens pos-explode once with their left/right-neighbor
-    bigram keys built by ARRAY SHIFTS (no per-element indexing, so no
-    ANSI index edge cases); three BROADCAST left joins probe the
-    unigram and bigram alias dims in one stage; per-sentence
-    ``collect_list(struct(pos, hit))`` + ``array_sort`` reassembles the
-    parallel ner_tags array.  Shuffles: the reassembly groupBy + the
-    attach join, both keyed on sentence_id (the corpus's natural key).
-    At a gazetteer ≫ broadcast threshold, drop the ``F.broadcast``
-    hints and the same plan degrades gracefully to shuffle hash joins
-    keyed on the token — still no driver involvement."""
-    dim = names.select(F.col(alias_col).alias("_alias")).distinct()
-    # bounded probe (limit 1), mirroring the inline path's contract
-    if dim.filter(F.size(F.split("_alias", " ")) > 2).limit(1).count():
-        raise ValueError("with_ner_tags supports 1- and 2-token names")
-    unis = dim.filter(~F.col("_alias").contains(" "))
-    bis = dim.filter(F.size(F.split("_alias", " ")) == 2)
-
-    ex = (
-        sentences.select(
-            "sentence_id",
-            F.posexplode(
-                F.arrays_zip(
-                    F.col("tokens").alias("tok"),
-                    F.concat(
-                        F.array(F.lit(_NO_NEIGHBOR)),
-                        F.expr("slice(tokens, 1, greatest(size(tokens) - 1, 0))"),
-                    ).alias("prv_t"),
-                    F.concat(
-                        F.expr("slice(tokens, 2, size(tokens))"),
-                        F.array(F.lit(_NO_NEIGHBOR)),
-                    ).alias("nxt_t"),
-                )
-            ).alias("pos", "s"),
-        )
-        .filter(F.col("s.tok").isNotNull())
-        .select(
-            "sentence_id",
-            "pos",
-            F.col("s.tok").alias("tok"),
-            F.concat(F.col("s.tok"), F.lit(" "), F.col("s.nxt_t")).alias("nxt"),
-            F.concat(F.col("s.prv_t"), F.lit(" "), F.col("s.tok")).alias("prv"),
-        )
-    )
-    uni_b = F.broadcast(unis.select(F.col("_alias").alias("tok"), F.lit(True).alias("_u")))
-    nxt_b = F.broadcast(bis.select(F.col("_alias").alias("nxt"), F.lit(True).alias("_n")))
-    prv_b = F.broadcast(bis.select(F.col("_alias").alias("prv"), F.lit(True).alias("_p")))
-    hits = (
-        ex.join(uni_b, "tok", "left")
-        .join(nxt_b, "nxt", "left")
-        .join(prv_b, "prv", "left")
-        .select(
-            "sentence_id",
-            "pos",
-            F.coalesce("_u", "_n", "_p", F.lit(False)).alias("hit"),
-        )
-    )
-    tags = (
-        hits.groupBy("sentence_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "hit"))).alias("_ph"))
-        .select(
-            "sentence_id",
-            F.transform(
-                "_ph", lambda x: F.when(x["hit"], F.lit(tag)).otherwise(F.lit(other))
-            ).alias("ner_tags"),
-        )
-    )
-    return sentences.join(tags, "sentence_id", "left").withColumn(
-        "ner_tags",
-        F.coalesce("ner_tags", F.transform("tokens", lambda _: F.lit(other))),
-    )
 
 
 # Function words for the shallow dependency heuristic.

@@ -121,7 +121,10 @@ def lsh_neighbor_pairs(
 ) -> DataFrame:
     """Candidate pairs collide in (table_id, bucket) for ANY table
     (OR over AND-ed sign bits), then exact cosine ≥ threshold verifies.
-    One shuffle on the composite bucket key; no cross product."""
+    One shuffle on the composite bucket key; no cross product.  The
+    signature is the only blocking, so unlabeled corpora work; at
+    threshold ≥ 0.95 two vectors' sign patterns agree on almost every
+    plane, so recall through the bucket join is high by construction."""
     b = lsh_buckets(embeddings, n_planes, n_tables)
     e = embeddings.select("vec_id", "embedding")
     a = b.select(F.col("vec_id").alias("id_a"), "table_id", "bucket")
@@ -285,20 +288,6 @@ def ivf_kmeans_centroids(
         "centroid_id int, cemb array<float>",
     )
     return sdf
-
-
-def embedding_near_dups(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via the amplified LSH path
-    — works on unlabeled corpora (no label/metadata blocking; blocking
-    is the signature itself).  At threshold ≥ 0.95 the two vectors'
-    sign patterns agree on almost every plane, so recall through the
-    bucket join is high by construction."""
-    return lsh_neighbor_pairs(embeddings, n_planes, n_tables, threshold)
 
 
 def auto_n_centroids(

@@ -28,11 +28,11 @@ The lowercasing oracles hold for ASCII corpora only: DuckDB's ``lower``
 uses simple case mapping, Spark and Python full mapping —
 ``lower('ΣΟΦΙΑΣ')`` is ``σοφιασ`` in DuckDB and ``σοφιας`` in Spark
 (final sigma), and ``lower('İstanbul')`` is ``istanbul`` against
-``i̇stanbul``.  The lemma, matcher and linker twins in
-``__spark_entry__.oracle_sql()`` lowercase, so on non-ASCII text they
-would disagree with the Spark side; the test corpora are ASCII.
-Non-ASCII lowercasing is checked against the Python twins instead
-(``tests/test_linker.py``).
+``i̇stanbul``.  The linker twin ``LINK_TEXTS`` below and the lemma and
+matcher twins in ``__spark_entry__.oracle_sql()`` lowercase, so on
+non-ASCII text they would disagree with the Spark side; the test
+corpora are ASCII.  Non-ASCII lowercasing is checked against the
+Python twins instead (``tests/test_linker.py``).
 """
 
 from __future__ import annotations
@@ -205,6 +205,52 @@ gold AS (
                       THEN (did % 137 + 1) % 137
                       ELSE (7*(did % 137)+3) % 137 END) AS obj_entity
   FROM (SELECT doc_id AS did FROM documents WHERE doc_id % 5 < 3)
+)
+"""
+
+
+# fixtures.ALIASES as (alias, entity_id, prior): per subj entity E{i}
+# the full name (.9), the surname (.6) and the first name (.7), which
+# E{i+1} shares (.3); per obj entity F{i} the full name and the surname
+ALIAS_DICT = f"""
+alias_rng AS (SELECT unnest(range(0, {N_ENT})) AS i),
+alias_dict AS (
+  SELECT 'anna' || i || ' lee' || i AS alias, 'E' || i AS entity_id, CAST(0.9 AS DOUBLE) AS prior
+  FROM alias_rng
+  UNION ALL SELECT 'lee' || i, 'E' || i, CAST(0.6 AS DOUBLE) FROM alias_rng
+  UNION ALL SELECT 'anna' || i, 'E' || i, CAST(0.7 AS DOUBLE) FROM alias_rng
+  UNION ALL SELECT 'anna' || i, 'E' || ((i + 1) % {N_ENT}), CAST(0.3 AS DOUBLE) FROM alias_rng
+  UNION ALL SELECT 'bob' || i || ' kim' || i, 'F' || i, CAST(0.9 AS DOUBLE) FROM alias_rng
+  UNION ALL SELECT 'kim' || i, 'F' || i, CAST(0.6 AS DOUBLE) FROM alias_rng
+)
+"""
+
+# the parser's rule lemma of each space-separated word of {s}
+_LEMMA = (
+    "array_to_string(list_transform(string_split({s}, ' '), w -> CASE WHEN len(w) > 3"
+    " AND w LIKE '%s' THEN substr(w, 1, len(w) - 1) ELSE lower(w) END), ' ')"
+)
+
+# linker.link_text_map over a ``texts(text)`` relation the caller
+# defines: links(text, entity_id, link_score), the best-scored alias
+# hit per linked text (score DESC, entity_id DESC); unlinked texts
+# have no row.  Brings its own alias_dict.
+LINK_TEXTS = ALIAS_DICT.rstrip() + f""",
+link_scored AS (
+  SELECT t.text, a.entity_id,
+    (CASE WHEN t.text = a.alias THEN 1.0
+          WHEN lower(t.text) = lower(a.alias) THEN 0.8
+          ELSE 0.6 END)::DOUBLE * a.prior AS score
+  FROM texts t JOIN alias_dict a
+    ON lower(t.text) = lower(a.alias)
+    OR {_LEMMA.format(s="t.text")}
+     = {_LEMMA.format(s="a.alias")}
+),
+links AS (
+  SELECT text, entity_id, score AS link_score FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY text ORDER BY score DESC, entity_id DESC) AS rn
+    FROM link_scored)
+  WHERE rn = 1
 )
 """
 

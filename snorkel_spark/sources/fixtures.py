@@ -54,15 +54,16 @@ PERSON_FULL_NAMES: tuple[str, ...] = tuple(a for a, *_ in ALIASES if " " in a)
 
 
 def alias_dict(spark: SparkSession) -> DataFrame:
-    """``ALIASES`` as a DataFrame, for the operators that take the
-    dictionary as a table (``DictionaryJoinMatch``, ``link_mentions``)."""
+    """``ALIASES`` as a DataFrame, for ``DictionaryJoinMatch``, the one
+    operator that takes the dictionary as a table (ROADMAP item 4)."""
     return spark.createDataFrame(
         ALIASES, "alias string, entity_id string, canonical_name string, prior double"
     )
 
 
 def person_full_names(spark: SparkSession) -> DataFrame:
-    """``PERSON_FULL_NAMES`` as a one-column ``alias`` DataFrame."""
+    """``PERSON_FULL_NAMES`` as a one-column ``alias`` DataFrame, for
+    ``DictionaryJoinMatch`` (ROADMAP item 4)."""
     return spark.createDataFrame([(a,) for a in PERSON_FULL_NAMES], "alias string")
 
 

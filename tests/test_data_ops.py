@@ -6,14 +6,22 @@ import pytest
 from tests.conftest import SF, plan_nodes
 
 
+# Each cached frame is unpersisted on teardown: a cached relation stays
+# in the session's cache manager, so every later read of the same
+# parquet (tests/test_plans.py's too) would plan over an
+# InMemoryTableScan instead of a FileScan.
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dup_groups(spark, docs):
@@ -91,12 +99,12 @@ def test_lsh_dim_agnostic(spark, emb):
 def test_lsh_neighbor_pairs_finds_planted(spark, emb):
     """Planted perturbed copies (different vectors, cos ≈ 0.99) are
     recovered through the amplified bucket join — no label blocking."""
-    from snorkel_spark.operators.similarity import embedding_near_dups
+    from snorkel_spark.operators.similarity import lsh_neighbor_pairs
     from snorkel_spark.sources.fixtures import embeddings_with_planted_dups
 
     aug = embeddings_with_planted_dups(emb, every=10)
     n_planted = emb.filter("vec_id % 10 = 0").count()
-    found = embedding_near_dups(aug, threshold=0.95)
+    found = lsh_neighbor_pairs(aug, threshold=0.95)
     hits = found.filter("id_b = id_a + 1000000").count()
     # sign-LSH recall at cos≈0.99 with 8 planes × 2 tables ≥ ~90%
     assert hits >= int(0.7 * n_planted)
@@ -544,35 +552,25 @@ def test_kmv_jaccard_identity_and_band(spark, docs):
 
 def test_lsh_capped_groupby_pairs_equal_join_pairs(spark, docs):
     """r06 optimization contract: the capped bucket-local pair
-    explosion (groupBy + sorted-member explode) must produce exactly
-    the pair set of the uncapped self-join path when the cap is larger
+    explosion (groupBy + sorted-member explode) produces exactly the
+    pair set of the DuckDB twin's band self-join when the cap is larger
     than every bucket."""
+    import duckdb
+
+    from __spark_entry__ import _minhash_pairs_sql
     from snorkel_spark.operators.dedup import ngram_jaccard_pairs
 
     capped = ngram_jaccard_pairs(
         docs, threshold=0.0, n_hashes=16, n_bands=8, max_bucket=10**9
     )
-    joined = ngram_jaccard_pairs(
-        docs, threshold=0.0, n_hashes=16, n_bands=8, max_bucket=None
-    )
-    a = {(r["doc_a"], r["doc_b"]) for r in capped.select("doc_a", "doc_b").collect()}
-    b = {(r["doc_a"], r["doc_b"]) for r in joined.select("doc_a", "doc_b").collect()}
-    assert a == b and len(a) > 0
-
-
-def test_lsh_uncapped_self_join_warns(spark, docs, caplog):
-    """max_bucket=None turns on the uncapped w² band self-join: it is
-    allowed, but said out loud on the package logger."""
-    import logging
-
-    from snorkel_spark.operators.dedup import ngram_jaccard_pairs
-
-    with caplog.at_level(logging.WARNING, logger="snorkel_spark"):
-        ngram_jaccard_pairs(docs, n_hashes=16, n_bands=8, max_bucket=64)
-        assert not caplog.records
-        ngram_jaccard_pairs(docs, n_hashes=16, n_bands=8, max_bucket=None)
-    assert [r.name for r in caplog.records] == ["snorkel_spark"]
-    assert "max_bucket=None" in caplog.records[0].getMessage()
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    want = {(a, b): j for a, b, j in
+            con.execute(_minhash_pairs_sql(16, 8, 0.0, 3, 10**9)).fetchall()}
+    con.close()
+    assert got.keys() == want.keys() and len(got) > 0
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in got)
 
 
 def test_repetition_stats_equals_bruteforce(spark):

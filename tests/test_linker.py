@@ -1,7 +1,9 @@
 """The driver-side fixture gazetteer: its rows equal the DuckDB
-oracle's, and the in-row linker equals the broadcast-join linker; on
-non-ASCII text the engine's ``lower`` agrees with the Python twins that
-key the matcher and the linker."""
+oracle's, and the in-row linker equals its DuckDB twin; on non-ASCII
+text the engine's ``lower`` agrees with the Python twins that key the
+matcher and the linker."""
+
+from collections import Counter
 
 import pyspark.sql.functions as F
 
@@ -11,48 +13,59 @@ from snorkel_spark.sources import fixtures as FX
 VARIANTS = ["Anna3 Lee3", "ANNA3", "Kim5", "lees3", "annas", "lee3s", "anna3s lee3s", "BOB7"]
 
 
-def _oracle_rows(sql: str) -> set:
+def _oracle_rows(sql: str, texts=()) -> list:
+    """The rows of ``sql`` in DuckDB, with ``texts`` as a ``texts(text)``
+    table."""
     import duckdb
 
     con = duckdb.connect()
     try:
-        return set(con.execute(sql).fetchall())
+        con.execute("CREATE TABLE texts AS SELECT unnest(?::VARCHAR[]) AS text", [list(texts)])
+        return con.execute(sql).fetchall()
     finally:
         con.close()
 
 
 def test_fixture_rows_equal_oracle_ctes():
-    from snorkel_spark.oracle import KNOWN_PAIRS, MENTIONS
+    from snorkel_spark.oracle import ALIAS_DICT, KNOWN_PAIRS, MENTIONS
 
-    names = _oracle_rows(f"WITH {MENTIONS.strip()} SELECT alias, entity_id FROM alias_names")
+    names = set(_oracle_rows(f"WITH {MENTIONS.strip()} SELECT alias, entity_id FROM alias_names"))
     assert {(a, e) for a, e, _c, _p in FX.ALIASES if " " in a} == names
     assert set(FX.PERSON_FULL_NAMES) == {a for a, _ in names}
-    pairs = _oracle_rows(f"WITH {KNOWN_PAIRS.strip()} SELECT s_name, o_name FROM known_pairs")
+    aliases = _oracle_rows(f"WITH {ALIAS_DICT.strip()} SELECT alias, entity_id, prior FROM alias_dict")
+    assert Counter((a, e, p) for a, e, _c, p in FX.ALIASES) == Counter(aliases)
+    assert len(aliases) == 822
+    pairs = set(_oracle_rows(f"WITH {KNOWN_PAIRS.strip()} SELECT s_name, o_name FROM known_pairs"))
     assert FX.known_spouse_names() == pairs and len(pairs) == 69
 
 
-def test_link_text_map_equals_link_mentions(spark, mentions):
-    from snorkel_spark.operators.linker import TIERS, link_mentions, link_text_map
+def test_link_text_map_equals_oracle(spark, mentions):
+    from snorkel_spark.operators.linker import TIERS, link_text_map
+    from snorkel_spark.oracle import LINK_TEXTS
 
     texts = (
         mentions.select("text")
         .unionByName(spark.createDataFrame([(v,) for v in VARIANTS], "text string"))
         .distinct()
-        .cache()
     )
-    ref = link_mentions(texts.withColumn("mention_id", F.col("text")), FX.alias_dict(spark))
-    want = {r["text"]: (r["entity_id"], r["canonical_name"], r["link_score"])
-            for r in ref.collect()}
     got_df = texts.select("text", link_text_map("text", FX.ALIASES).alias("l"))
-    got = {r["text"]: (r["l"]["entity_id"], r["l"]["canonical_name"], r["l"]["link_score"])
-           for r in got_df.collect() if r["l"] is not None}
-    assert got == want
-    n_texts = texts.count()
-    assert 0 < len(want) < n_texts  # some texts link, some stay unlinked
+    rows = got_df.collect()
+    got = {r["text"]: (r["l"]["entity_id"], r["l"]["link_score"])
+           for r in rows if r["l"] is not None}
+    want = {t: (e, s) for t, e, s in _oracle_rows(
+        f"WITH {LINK_TEXTS.strip()} SELECT text, entity_id, link_score FROM links",
+        [r["text"] for r in rows])}
+    assert got.keys() == want.keys()
+    assert all(got[t][0] == want[t][0] and abs(got[t][1] - want[t][1]) < 1e-12 for t in got)
+    # the canonical name is the linked entity's own
+    canonical = {e: c for _a, e, c, _p in FX.ALIASES}
+    assert all(r["l"]["canonical_name"] == canonical[r["l"]["entity_id"]]
+               for r in rows if r["l"] is not None)
+    assert 0 < len(want) < len(rows)  # some texts link, some stay unlinked
     # every tier is exercised: exact, casefolded and lemma-only hits
-    assert want["anna3 lee3"][2] == TIERS[0] * 0.9
-    assert want["Anna3 Lee3"][2] == TIERS[1] * 0.9
-    assert want["lee3s"][2] == TIERS[2] * 0.6
+    assert want["anna3 lee3"][1] == TIERS[0] * 0.9
+    assert want["Anna3 Lee3"][1] == TIERS[1] * 0.9
+    assert want["lee3s"][1] == TIERS[2] * 0.6
     assert "lees3" not in want and "annas" not in want
 
 

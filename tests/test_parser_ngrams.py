@@ -154,10 +154,7 @@ def test_ner_tags_gazetteer_and_matcher(spark):
                   "media_ref": "", "offset": 0}])],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    names = spark.createDataFrame(
-        [("anna1 lee1",), ("bob2 kim2",), ("paris",)], "alias string"
-    )
-    tagged = with_ner_tags(parse_sentences(raw), names)
+    tagged = with_ner_tags(parse_sentences(raw), ["anna1 lee1", "bob2 kim2", "paris"])
     r = tagged.collect()[0]
     assert r["ner_tags"] == ["PERSON", "PERSON", "O", "PERSON", "PERSON", "O", "PERSON"]
     m = ngram_mentions(tagged, n_max=2, carry_attribs=("ner_tags",))
@@ -223,42 +220,25 @@ def test_parse_sentences_null_text_span_dropped(spark):
 
 
 # ---------------------------------------------------------------- NER
-def _sorted_tags(df):
-    return sorted(
-        (r["sentence_id"], tuple(r["ner_tags"])) for r in df.collect()
-    )
-
-
-def test_ner_join_path_equals_inline(spark, sentences):
-    from snorkel_spark.operators.parser import with_ner_tags, with_ner_tags_join
-    from snorkel_spark.sources import fixtures as FX
-
-    names = FX.person_full_names(spark)
-    inline = with_ner_tags(sentences, names, method="inline")
-    joined = with_ner_tags_join(sentences, names)
-    a = _sorted_tags(inline.select("sentence_id", "ner_tags"))
-    b = _sorted_tags(joined.select("sentence_id", "ner_tags"))
-    assert a == b and len(a) > 0
-    # at least one sentence actually carries a PERSON tag
-    assert any("PERSON" in tags for _, tags in a)
-
-
-def test_ner_auto_selects_join_above_threshold(spark, sentences):
+def test_ner_tags_builds_without_a_job(spark, sentences):
+    """The gazetteer is driver-side literal maps: building the tagged
+    plan runs no Spark job (no probe of the names, no collect)."""
     from snorkel_spark.operators.parser import with_ner_tags
     from snorkel_spark.sources import fixtures as FX
 
-    names = FX.person_full_names(spark)
-    # max_inline=1 forces the auto probe over the threshold → join path
-    auto = with_ner_tags(sentences, names, method="auto", max_inline=1)
-    inline = with_ner_tags(sentences, names, method="inline")
-    assert _sorted_tags(auto.select("sentence_id", "ner_tags")) == _sorted_tags(
-        inline.select("sentence_id", "ner_tags")
-    )
+    sentences.count()  # the cached input is materialized beforehand
+    sc = spark.sparkContext
+    sc.setJobGroup("ner-build", "with_ner_tags plan construction")
+    try:
+        tagged = with_ner_tags(sentences, FX.PERSON_FULL_NAMES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("ner-build")) == []
+    assert any("PERSON" in r["ner_tags"] for r in tagged.select("ner_tags").collect())
 
 
-def test_ner_join_rejects_3_token_names(spark, sentences):
-    from snorkel_spark.operators.parser import with_ner_tags_join
+def test_ner_join_rejects_3_token_names(sentences):
+    from snorkel_spark.operators.parser import with_ner_tags
 
-    names = spark.createDataFrame([("a b c",)], "alias string")
     with pytest.raises(ValueError):
-        with_ner_tags_join(sentences, names)
+        with_ner_tags(sentences, ["a b c"])
